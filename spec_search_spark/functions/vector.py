@@ -67,10 +67,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_distance(a: Column, b: Column) -> Column:
-    return F.lit(1.0) - cosine_similarity(a, b)
-
-
 # ---------------------------------------------------------------------------
 # DuckDB-side oracle builders: the same left-to-right fold, so both engines
 # produce bit-identical doubles (modulo final rounding in the queries).

@@ -12,9 +12,10 @@ in that file:
 2. the PLANNER — the LLM that picks which tool to call next from the
    conversation so far.
 
-Here layer 1 is implemented for real over the ``sheets`` DataSource
-(ranged scans with listing-level pruning, sink write-backs, corpus
-search as a distributed Spark job) plus warehouse reads, and layer 2
+Here layer 1 is implemented for real over the sheet store (reads are
+``read_sheets`` — Spark's native JSON scan, ranged and pruned to one
+file; writes go through the ``sheets`` DataSource sink; corpus search
+is a distributed Spark job) plus warehouse reads, and layer 2
 is a deterministic rule-based router over a constrained English
 command grammar — the same observation→next-action ReAct loop shape,
 with the LLM as a documented swap seam (the F6 embedder pattern:
@@ -31,8 +32,10 @@ oracle.
 Scale shape:
 - per-sheet tools (read/write cell/range) operate on ONE sheet file —
   bounded work by construction, exactly the reference's per-call API
-  granularity; the ranged scan pushes the file_name EqualTo filter
-  into the DataSource listing (no other file is opened);
+  granularity; the ranged scan filters on ``_metadata.file_name``,
+  which prunes the file listing (no other file is opened). Every call
+  builds a fresh scan, so it lists the store as it is now and sees a
+  sheet created by the previous call;
 - ``search_cells`` is the corpus-scale tool: a distributed scan →
   posexplode → filter → one aggregate; work ∝ corpus, no collect of
   anything unbounded (the observation is one aggregated row);
@@ -70,25 +73,16 @@ from spec_search_spark.operators.sheets_connector import (
     read_sheets,
 )
 from spec_search_spark.operators.sheets_pipeline import CELLS_PER_FILE, COLS_PER_ROW
-from spec_search_spark.session import local_df, prune_memo, tune
+from spec_search_spark.session import local_df, tune
 from spec_search_spark.sources.sheets_source import (
     GRID_SCHEMA,
     SHEET_SUFFIX,
     _parse_range,
+    register,
 )
 
 AGENT_TAB = "data"
 AGENT_FILE_ID = 9000  # created sheets get ids far above the corpus fixture's
-
-# Lazy-plan memo for sheets loads: resolving the Python DataSource
-# (schema round-trip through the plan worker) costs ~0.25 s per
-# ``spark.read.format("sheets")...load()``. The LOADED DataFrame is
-# only a plan — partitions() re-lists the store and read() re-opens
-# the files on every action — so reusing it across tool calls (and
-# across bench repetitions) never staleness-es a read after a write;
-# it just stops re-resolving the identical plan. Keyed on
-# (applicationId, dir, range): dies with the session.
-_LOAD_MEMO: dict = {}
 
 
 # ---------------------------------------------------------------- tools
@@ -96,7 +90,7 @@ _LOAD_MEMO: dict = {}
 
 class SheetAgentToolkit:
     """The reference's GoogleSheetsToolkit re-expressed over the
-    ``sheets`` DataSource: same five tools
+    sheet store: same five tools
     (`sheet_creator_tool.py:42-128`) plus the warehouse read and the
     corpus search the demo scenarios need (`app.py:48-78` search tab).
 
@@ -111,24 +105,12 @@ class SheetAgentToolkit:
         self.corpus_dir = corpus_dir
         self.sf_dir = sf_dir
         os.makedirs(store_dir, exist_ok=True)
-        from spec_search_spark.sources.sheets_source import register
-
-        register(spark)
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        register(spark)  # the write-back sink
 
     # -- helpers
 
     def _grid(self, sheet_name: str, range_str: str | None = None) -> DataFrame:
-        key = (self.spark.sparkContext.applicationId, self.store_dir, range_str)
-        df = _LOAD_MEMO.get(key)
-        if df is None:
-            reader = self.spark.read.format("sheets")
-            if range_str:
-                reader = reader.option("range", range_str)
-            prune_memo(_LOAD_MEMO, key[0], cap=32)
-            df = _LOAD_MEMO[key] = reader.load(self.store_dir)
-        # EqualTo on file_name prunes the directory listing (S1 path)
-        return df.filter(F.col("file_name") == sheet_name)
+        return read_sheets(self.spark, self.store_dir, sheet_name, range_str)
 
     def _write_grid(self, sheet_name: str, values: list[list[str | None]]) -> None:
         """Replace the named sheet file wholesale (the batch sink's

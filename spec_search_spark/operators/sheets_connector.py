@@ -1,8 +1,8 @@
 """The sheets CONNECTOR pipeline: the reference ingestion (Drive
 folder → per-sheet cell grids → unpivot, `/root/reference/
-indexer.py:20-57`) running through the custom ``sheets`` DataSource
-(sources/sheets_source.py) instead of a pre-built grid DataFrame —
-S1/S2/S3/S4/S6 as engine surface.
+indexer.py:20-57`) reading the sheet store (sources/sheets_source.py)
+instead of a pre-built grid DataFrame — S1/S2/S3/S4/S6 as engine
+surface.
 
 The fixture directory is derived DETERMINISTICALLY from the
 ``documents`` table (same placement arithmetic as
@@ -11,9 +11,11 @@ DuckDB oracle recomputes the expected unpivot straight from
 ``documents`` — the connector read path gets a full value oracle.
 
 Scale: the fixture builder is a test harness (driver-side, bounded by
-the local corpus); the READ path is the engine part — one partition
-per sheet file, listing-level pruning via pushFilters, posexplode
-unpivot identical to cell_grid_unpivot.
+the local corpus); the READ path is the engine part — ``read_sheets``,
+Spark's native JSON scan (the store coalesced to ~cores partitions,
+file-level pruning on ``_metadata.file_name``), then a posexplode
+unpivot identical to cell_grid_unpivot. The stream slot still reads
+through the ``sheets`` Python DataSource's stream reader.
 """
 
 from __future__ import annotations
@@ -34,7 +36,12 @@ from spec_search_spark.functions.sheets import (
 )
 from spec_search_spark.operators.sheets_pipeline import CELLS_PER_FILE, COLS_PER_ROW
 from spec_search_spark.session import tune
-from spec_search_spark.sources.sheets_source import SHEET_SUFFIX, register
+from spec_search_spark.sources.sheets_source import (
+    SHEET_SUFFIX,
+    read_records,
+    read_sheets,
+    register,
+)
 
 TAB_NAME = "data"
 
@@ -78,18 +85,6 @@ def build_sheets_fixture(sf_dir: str, out_dir: str) -> str:
 def fixture_dir_for(sf_dir: str) -> str:
     base = os.path.basename(os.path.normpath(sf_dir))
     return os.path.join(tempfile.gettempdir(), f"spark_graft_sheets_{base}")
-
-
-def read_sheets(spark: SparkSession, fixture_dir: str) -> DataFrame:
-    register(spark)
-    # required for SheetsReader.pushFilters (off by default in 4.1)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    # pack tiny sheet files into ~cores partitions (each task through
-    # the Python source pays a scheduler+worker round-trip; 84 one-file
-    # partitions cost 3× more wall clock than 28 bundles at sf0.1);
-    # the reader's byte cap keeps a 100 TB corpus splitting by size.
-    bundle = spark.sparkContext.defaultParallelism
-    return spark.read.format("sheets").option("bundle", str(bundle)).load(fixture_dir)
 
 
 def sheets_source_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,15 +163,7 @@ def sheets_records_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     base = fixture_dir_for(sf_dir) + "_records"
     build_records_fixture(sf_dir, base)
-    register(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    bundle = spark.sparkContext.defaultParallelism
-    return (
-        spark.read.format("sheets")
-        .option("mode", "records")
-        .option("bundle", str(bundle))
-        .load(base)
-    )
+    return read_records(spark, base)
 
 
 def _records_sql() -> str:
@@ -248,12 +235,10 @@ def feed_files_in_waves(fixture: str, feed: str, q, per_wave: int) -> int:
 
 
 def sheets_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom DataSource's streaming READ path (completing the
-    surface: batch read + pushdown + batch write + streaming sink +
-    now a streaming source): readStream over a feed directory that
-    files ARRIVE in (STREAM_WAVES_TARGET waves, stream drained
-    between waves — see the pacing note at STREAM_WAVES_TARGET), then
-    folded to per-file grid statistics.
+    """The custom DataSource's streaming READ path: readStream over a
+    feed directory that files ARRIVE in (STREAM_WAVES_TARGET waves,
+    stream drained between waves — see the pacing note at
+    STREAM_WAVES_TARGET), then folded to per-file grid statistics.
 
     Oracle: the fixture layout is deterministic arithmetic over
     `documents` (same placement as sheets_source_unpivot), so DuckDB
@@ -270,7 +255,8 @@ def sheets_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"sheets_stream_{_uuid.uuid4().hex[:8]}"
     feed = _tf.mkdtemp(prefix="sheets_feed_")
     # bundle: pack each micro-batch's new files into ≤cores partitions
-    # (same per-task round-trip economics as the batch reader)
+    # (each task through the Python source pays a scheduler + worker
+    # round trip)
     stream = (
         spark.readStream.format("sheets")
         .option("bundle", str(spark.sparkContext.defaultParallelism))

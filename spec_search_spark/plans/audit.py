@@ -221,9 +221,9 @@ CHECKS: list[tuple[str, list[str], list[str]]] = [
     ("embedding_near_dup",
      ["band_idx"],
      ["CartesianProduct", "BroadcastNestedLoopJoin"]),
-    # custom-source unpivot is a pure map pipeline: custom BatchScan →
-    # posexplode → filter/project, zero shuffles
-    ("sheets_source_unpivot", ["BatchScan sheets", "Generate"], ["Exchange"]),
+    # sheet-store unpivot is a pure map pipeline: native JSON file scan →
+    # explode/posexplode → filter/project, zero shuffles, no Python scan
+    ("sheets_source_unpivot", ["Scan json", "Generate"], ["Exchange", "BatchScan"]),
     # --- training-pipeline pack (pipeline_ops.py) ---
     # decontamination: the benchmark hash set broadcasts; the corpus
     # side never cross-joins

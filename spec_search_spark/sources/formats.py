@@ -9,9 +9,9 @@ is never used on the read path (full-file pre-scan at 100 TB); callers
 pass the schema or read parquet.
 
 The sheet-shaped source/sink proper lives in sources/sheets_source.py
-(custom PySpark DataSource: listing-pruned reader, ranged scan,
-header-records mode, write-back sink over local fixtures); only the
-network/auth half of a real Sheets connector stays out of scope.
+(native JSON scan: file-pruned, ranged and header-records reads;
+write-back sink over local fixtures); only the network/auth half of a
+real Sheets connector stays out of scope.
 """
 
 from __future__ import annotations

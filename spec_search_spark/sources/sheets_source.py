@@ -1,5 +1,5 @@
-"""Custom PySpark DataSource ``sheets`` — the engine-surface form of
-the reference's Drive/Sheets ingestion (S1 folder listing
+"""The sheet store — the engine-surface form of the reference's
+Drive/Sheets ingestion (S1 folder listing
 `/root/reference/indexer.py:80-90`, S2/S3 full-sheet scans
 `indexer.py:20-32` / `project_search.py:45`, S4 ranged scan
 `sheet_creator_tool.py:55-68`, S6 write-back sink
@@ -12,49 +12,39 @@ Fixture layout (the local stand-in for a Drive folder): a directory of
     {"file_id": 0, "file_name": "sheet_000", "tabs": [
         {"sheet_id": 100, "tab_name": "data", "values": [[...], ...]}]}
 
-Read (grid mode, default) — one output row per grid row::
+Batch read — ``read_sheets`` is Spark's native JSON scan with the fixed
+file schema (FILE_SCHEMA, multiLine, FAILFAST: a truncated file fails
+the read instead of vanishing), then ``explode(tabs)`` and
+``posexplode(values)`` — one output row per grid row::
 
     file_id bigint, file_name string, sheet_id bigint, tab_name string,
     row_idx int, cells array<string>
 
-- one InputPartition per FILE by default: sheets scan
-  cluster-parallel, the same unit the reference iterates sequentially.
-  partitions() only LISTS the directory — no file is opened until
-  read() runs on an executor. ``option("bundle", N)`` packs files into
-  ~N partitions (greedy, listing order, capped at
-  ``_BUNDLE_BYTES_CAP`` bytes per partition so a huge corpus still
-  splits by data size, guide §6 maxPartitionBytes-style): at test
-  scale thousands of tiny files stop paying one scheduler/worker
-  round-trip each, at 100 TB the byte cap keeps partitions bounded.
-- read() yields Arrow RecordBatches (guide §4.2): whole decoded files
-  cross the Python→JVM boundary as columnar batches instead of
-  per-row pickled tuples.
-- ``option("range", "B2:D5")``: A1 ranged scan (S4) — only the
-  requested row window is emitted and cells are sliced to the column
-  window, like the reference's ``get_range`` (raw values, no
-  addresses).
-- pushFilters: EqualTo on ``file_name`` prunes whole partitions from
-  the directory listing BEFORE any file is opened (partition pruning
-  at the listing level); everything else stays with Spark.
+The data is decoded in its native format inside the engine: no Python
+worker, no plan round trip, and an empty store is an empty frame.
+``sheet=`` is an equality on ``_metadata.file_name``, which prunes the
+scan to that one file; ``range_="B2:D5"`` (S4) keeps the row window and
+slices cells to the column window. ``read_records`` (S3,
+``get_all_records`` semantics) names the columns after the first row
+of the first file and pads short rows with ''.
 
-Read (``option("mode", "records")``) — S3 header-schema scan: the
-first row of the first tab defines the column names
-(``get_all_records`` semantics); each later row becomes one record of
-string columns (padded with ''). schema() opens one file at planning
-time to learn the header — the price of dynamic schemas.
-
-Write — ``df.write.format("sheets").mode("overwrite").save(dir)``
-accepts the grid-mode row shape and writes the fixture layout back:
-executors write temp JSON parts (parallel, cell-count work), commit()
-merges parts into per-file documents on the driver (serial work ∝
-file count, not cell count) and is atomic-ish: parts land in a temp
-dir and final files replace targets only in commit.
+Write — the ``sheets`` Python DataSource:
+``df.write.format("sheets").mode("overwrite").save(dir)`` accepts the
+grid row shape and writes the fixture layout back: executors write
+temp JSON parts (parallel, cell-count work), commit() merges parts
+into per-file documents on the driver (serial work ∝ file count, not
+cell count) and is atomic-ish: parts land in a temp dir and final
+files replace targets only in commit.
 
 Streaming write — ``df.writeStream.format("sheets")`` upserts each
 micro-batch into the sheet files at row granularity (overlay), with
 per-epoch commit markers so a replayed batchId after restart is a
 no-op (the vestigial `/index-file` webhook of `app.py:252-259` as a
 real incremental sink).
+
+Streaming read — ``spark.readStream.format("sheets")``, the
+SheetsStreamReader: offsets are positions in the sorted file listing,
+each micro-batch decodes its new files into Arrow batches.
 """
 
 from __future__ import annotations
@@ -65,13 +55,13 @@ import re
 import uuid
 from dataclasses import dataclass
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceReader,
     DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
-    EqualTo,
     InputPartition,
     WriterCommitMessage,
 )
@@ -97,17 +87,25 @@ GRID_SCHEMA = StructType(
     ]
 )
 
+#: what a ``.sheet.json`` file holds — the native scan's fixed schema
+FILE_SCHEMA = (
+    "file_id bigint, file_name string, tabs array<struct<"
+    "sheet_id bigint, tab_name string, values array<array<string>>>>"
+)
+
 _RANGE_RE = re.compile(r"^([A-Z]+)(\d+):([A-Z]+)(\d+)$")
 
-#: byte cap per bundled scan partition: with option("bundle", N) files
-#: are packed into ~N partitions ONLY while a partition stays under
-#: this many bytes — a corpus far bigger than N × cap therefore splits
-#: by size (≈ total_bytes / cap partitions), the maxPartitionBytes
-#: behavior of a native scan, not N giant serial reads.
+#: byte cap per packed scan partition: read_sheets coalesces a store to
+#: ~cores partitions, and the stream reader's option("bundle", N) packs
+#: new files into ~N partitions, ONLY while a partition stays under
+#: this many bytes — a store far bigger than N × cap therefore splits
+#: by size (≈ total_bytes / cap partitions), not into N giant serial
+#: reads.
 _BUNDLE_BYTES_CAP = 128 * 1024 * 1024
 
 #: rows per emitted Arrow batch (bounds executor memory for bundles of
-#: many files; one tiny file still emits one small batch).
+#: many files and for one huge file; a tiny file still emits one small
+#: batch).
 _ARROW_BATCH_ROWS = 10_000
 
 
@@ -135,16 +133,65 @@ def _list_sheet_files(path: str) -> list[str]:
     )
 
 
+def read_sheets(
+    spark: SparkSession,
+    path: str,
+    sheet: str | None = None,
+    range_: str | None = None,
+) -> DataFrame:
+    """Grid rows of every sheet file under ``path`` (or only of the
+    file ``{sheet}.sheet.json``), optionally cut to an A1 ``range_``."""
+    files = (
+        spark.read.schema(FILE_SCHEMA)
+        .option("multiLine", True)
+        .option("mode", "FAILFAST")
+        .option("pathGlobFilter", f"*{SHEET_SUFFIX}")
+        .json(path)
+    )
+    if sheet is not None:
+        files = files.filter(F.col("_metadata.file_name") == f"{sheet}{SHEET_SUFFIX}")
+    else:
+        # one wave of tasks, more only when the bytes need them: Spark's
+        # 4 MB per-file open-cost estimate would split a store of small
+        # sheets into many small tasks, and every task of a Python stage
+        # fused downstream (the embedder) costs ~0.2 s of worker CPU
+        # (pandas UDF, 4-vCPU host). The size comes from the listing the
+        # scan already holds.
+        size = files._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        par = spark.sparkContext.defaultParallelism
+        files = files.coalesce(max(par, -(-size // _BUNDLE_BYTES_CAP)))
+    tabs = files.select("file_id", "file_name", F.explode("tabs").alias("tab"))
+    grid = tabs.select(
+        "file_id",
+        "file_name",
+        F.col("tab.sheet_id").alias("sheet_id"),
+        F.col("tab.tab_name").alias("tab_name"),
+        F.posexplode("tab.values").alias("row_idx", "cells"),
+    )
+    if range_ is None:
+        return grid
+    r_lo, r_hi, c_lo, c_hi = _parse_range(range_)
+    return grid.filter(F.col("row_idx").between(r_lo, r_hi)).withColumn(
+        "cells", F.slice("cells", c_lo + 1, c_hi - c_lo + 1)
+    )
 
 
-_ARROW_GRID_FIELDS = (
-    ("file_id", "int64"),
-    ("file_name", "string"),
-    ("sheet_id", "int64"),
-    ("tab_name", "string"),
-    ("row_idx", "int32"),
-    ("cells", "list<string>"),
-)
+def read_records(spark: SparkSession, path: str) -> DataFrame:
+    """S3 header-schema scan: the first row of the first tab of the
+    first file names the columns; every later row of every tab is one
+    record of strings, short rows padded with ''."""
+    files = _list_sheet_files(path)
+    if not files:
+        raise ValueError("read_records needs at least one sheet file")
+    with open(files[0]) as fh:
+        header = [str(h) for h in json.load(fh)["tabs"][0]["values"][0]]
+    rows = read_sheets(spark, path).filter(F.col("row_idx") > 0)
+    return rows.select(
+        *(
+            F.coalesce(F.get("cells", j), F.lit("")).alias(name)
+            for j, name in enumerate(header)
+        )
+    )
 
 
 def _arrow_grid_schema():
@@ -162,11 +209,11 @@ def _arrow_grid_schema():
     )
 
 
-def _grid_arrow_batches(paths, range_=None):
-    """Grid-mode rows for a list of sheet files as Arrow RecordBatches
+def _grid_arrow_batches(paths):
+    """Grid rows for a list of sheet files as Arrow RecordBatches
     (guide §4.2: columnar batches across the Python→JVM boundary, not
-    per-row pickled tuples), flushed every _ARROW_BATCH_ROWS rows.
-    Shared by the batch and streaming readers."""
+    per-row pickled tuples), flushed every _ARROW_BATCH_ROWS rows —
+    also in the middle of a file, so one huge sheet stays bounded."""
     import pyarrow as pa
 
     schema = _arrow_grid_schema()
@@ -187,26 +234,17 @@ def _grid_arrow_batches(paths, range_=None):
         fid, fname = int(doc["file_id"]), doc["file_name"]
         for tab in doc["tabs"]:
             sid, tname = int(tab["sheet_id"]), tab["tab_name"]
-            values = tab["values"]
-            rows = enumerate(values)
-            if range_ is not None:
-                r_lo, r_hi, c_lo, c_hi = range_
-                rows = (
-                    (i, row[c_lo : c_hi + 1])
-                    for i, row in enumerate(values)
-                    if r_lo <= i <= r_hi
-                )
-            for row_idx, cells in rows:
+            for row_idx, cells in enumerate(tab["values"]):
                 cols[0].append(fid)
                 cols[1].append(fname)
                 cols[2].append(sid)
                 cols[3].append(tname)
-                cols[4].append(int(row_idx))
+                cols[4].append(row_idx)
                 cols[5].append(
                     [None if c is None else str(c) for c in cells]
                 )
-        if len(cols[0]) >= _ARROW_BATCH_ROWS:
-            yield flush()
+                if len(cols[0]) >= _ARROW_BATCH_ROWS:
+                    yield flush()
     if cols[0]:
         yield flush()
 
@@ -242,7 +280,7 @@ class SheetsStreamReader(DataSourceStreamReader):
 
     def _feed(self) -> list[str]:
         # a feed dir that does not exist YET is an empty feed, not an
-        # error — the batch reader keeps its loud missing-path failure
+        # error — read_sheets keeps its loud missing-path failure
         return _list_sheet_files(self.path) if os.path.isdir(self.path) else []
 
     def initialOffset(self) -> dict:
@@ -287,86 +325,6 @@ def _bundle(files: list[str], target: int) -> list[list[str]]:
     if cur:
         out.append(cur)
     return out
-
-
-class SheetsReader(DataSourceReader):
-    def __init__(self, options, schema: StructType) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("sheets source requires a path")
-        self.mode = (options.get("mode") or "grid").lower()
-        self.range = _parse_range(options["range"]) if options.get("range") else None
-        self.header: list[str] | None = None
-        if self.mode == "records":
-            self.header = [f.name for f in schema.fields]
-        self.bundle = int(options.get("bundle", "0") or "0")
-        self.file_name_filters: list[str] = []
-
-    def pushFilters(self, filters):
-        # AND-list: EqualTo(file_name) prunes the listing; everything
-        # else is returned for Spark to evaluate post-scan.
-        for f in filters:
-            if isinstance(f, EqualTo) and tuple(f.attribute) == ("file_name",):
-                self.file_name_filters.append(f.value)
-            else:
-                yield f
-
-    def partitions(self):
-        files = _list_sheet_files(self.path)
-        if self.file_name_filters:
-            keep = {f"{name}{SHEET_SUFFIX}" for name in self.file_name_filters}
-            files = [p for p in files if os.path.basename(p) in keep]
-        return [InputPartition(chunk) for chunk in _bundle(files, self.bundle)]
-
-    def read(self, partition: InputPartition):
-        """Decode the partition's files and yield Arrow RecordBatches
-        (guide §4.2: the decoded grid crosses the Python→JVM boundary
-        as columnar batches, not per-row pickled tuples), flushing
-        every _ARROW_BATCH_ROWS rows to bound batch memory."""
-        paths = (
-            partition.value
-            if isinstance(partition.value, (list, tuple))
-            else [partition.value]
-        )
-        if self.mode == "records":
-            yield from self._records_arrow_batches(paths)
-        else:
-            yield from _grid_arrow_batches(paths, self.range)
-
-    def _records_arrow_batches(self, paths):
-        import pyarrow as pa
-
-        header = self.header or []
-        schema = pa.schema([pa.field(name, pa.string()) for name in header])
-        width = len(header)
-        cols: list[list] = [[] for _ in header]
-
-        def flush():
-            batch = pa.RecordBatch.from_arrays(
-                [pa.array(c, type=pa.string()) for c in cols], schema=schema
-            )
-            for c in cols:
-                c.clear()
-            return batch
-
-        for path in paths:
-            with open(path) as fh:
-                doc = json.load(fh)
-            for tab in doc["tabs"]:
-                values = tab["values"]
-                if not values:
-                    continue
-                for row in values[1:]:  # first row is the header
-                    padded = [
-                        str(c) if c is not None else "" for c in row[:width]
-                    ]
-                    padded += [""] * (width - len(padded))
-                    for j in range(width):
-                        cols[j].append(padded[j])
-            if cols and len(cols[0]) >= _ARROW_BATCH_ROWS:
-                yield flush()
-        if cols and cols[0]:
-            yield flush()
 
 
 @dataclass
@@ -511,18 +469,7 @@ class SheetsDataSource(DataSource):
         return "sheets"
 
     def schema(self):
-        if (self.options.get("mode") or "grid").lower() == "records":
-            files = _list_sheet_files(self.options["path"])
-            if not files:
-                raise ValueError("records mode needs at least one sheet file")
-            with open(files[0]) as fh:
-                doc = json.load(fh)
-            header = doc["tabs"][0]["values"][0]
-            return StructType([StructField(str(h), StringType()) for h in header])
         return GRID_SCHEMA
-
-    def reader(self, schema):
-        return SheetsReader(self.options, schema)
 
     def writer(self, schema, overwrite: bool):
         return SheetsWriter(self.options, overwrite)

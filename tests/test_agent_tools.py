@@ -126,6 +126,25 @@ def test_write_preserves_other_sheets(toolkit):
     assert toolkit.read_cell("beta", "A2") == "other"
 
 
+def test_empty_store_read_is_an_error_observation(toolkit):
+    """A fresh store holds no sheet file: a read reports the grid
+    limit (0 rows) and the loop records it as an `error:` observation."""
+
+    class _ReadOnce:
+        def next_action(self, message, steps):
+            if not steps:
+                return ToolCall(
+                    "read_values", {"sheet_name": "none", "range_str": "A1:B2"}, ""
+                )
+            return Final("done")
+
+    with pytest.raises(ValueError, match=r"exceeds grid limits \(0 rows\)"):
+        toolkit.read_values("none", "A1:B2")
+    steps = run_react(toolkit, _ReadOnce(), "anything")
+    assert steps[0].observation == "error: range A1:B2 exceeds grid limits (0 rows)"
+    assert steps[-1].observation == "done"
+
+
 def test_react_rejects_unknown_tool(toolkit):
     """ADVICE r8: a planner-emitted tool name outside the whitelist
     (e.g. a private method or 'spark') must surface as a 'no such

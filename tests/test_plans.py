@@ -99,6 +99,7 @@ def test_no_vacuous_forbid_fragments(spark, sf_dir):
     audit outright."""
     import pandas as pd
     from pyspark.sql import functions as F
+    from pyspark.sql.datasource import DataSource, DataSourceReader
     from pyspark.sql.functions import pandas_udf, udf, udtf
     from pyspark.sql.window import Window as W
 
@@ -127,6 +128,23 @@ def test_no_vacuous_forbid_fragments(spark, sf_dir):
             yield (v,)
             yield (v + 1,)
 
+    class _OneRow(DataSource):
+        @classmethod
+        def name(cls):
+            return "audit_one_row"
+
+        def schema(self):
+            return "x bigint"
+
+        def reader(self, schema):
+            return _OneRowReader()
+
+    class _OneRowReader(DataSourceReader):
+        def read(self, partition):
+            yield (1,)
+
+    spark.dataSource.register(_OneRow)
+
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey")
     od = load_table(spark, sf_dir, "orders").select("o_orderkey")
@@ -147,6 +165,7 @@ def test_no_vacuous_forbid_fragments(spark, sf_dir):
             F.expr("percentile(id, 0.5)")
         ),                                             # ObjectHashAggregate + partial_percentile(
         _Dup(F.lit(1)),                                # (BatchEval)PythonUDTF
+        spark.read.format("audit_one_row").load(),     # BatchScan (Python source)
         a.join(b.hint("merge"), "k"),                  # SortMergeJoin
         a.withColumn(
             "r", F.row_number().over(W.partitionBy("bucket").orderBy("id"))

@@ -1,10 +1,12 @@
-"""Custom `sheets` DataSource: S1 listing-pruned scan, S3 header
-records mode, S4 ranged scan, S6 write-back round trip."""
+"""The sheet store: S1 file-pruned native scan, S3 header records,
+S4 ranged scan, S6 write-back round trip, the streaming reader and
+sink, and row identity with a pure-Python decode of the format."""
 
 from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +15,12 @@ from spec_search_spark.operators.sheets_connector import (
     build_sheets_fixture,
     read_sheets,
 )
-from spec_search_spark.sources.sheets_source import SHEET_SUFFIX, register
+from spec_search_spark.sources import sheets_source
+from spec_search_spark.sources.sheets_source import (
+    SHEET_SUFFIX,
+    read_records,
+    register,
+)
 
 
 @pytest.fixture(scope="module")
@@ -38,7 +45,7 @@ def test_grid_scan_matches_documents(spark, sf_dir, fixture_dir):
 
 
 def test_listing_pruning_via_pushdown(spark, fixture_dir):
-    df = read_sheets(spark, fixture_dir).filter(F.col("file_name") == "sheet_001")
+    df = read_sheets(spark, fixture_dir, sheet="sheet_001")
     rows = df.collect()
     assert rows and all(r["file_name"] == "sheet_001" for r in rows)
     # the filter must reach the reader: with pushdown the scan opens
@@ -51,12 +58,7 @@ def test_ranged_scan(spark, fixture_dir):
         (r["file_name"], r["row_idx"]): r["cells"]
         for r in read_sheets(spark, fixture_dir).collect()
     }
-    ranged = (
-        spark.read.format("sheets")
-        .option("range", "B1:C2")
-        .load(fixture_dir)
-        .collect()
-    )
+    ranged = read_sheets(spark, fixture_dir, range_="B1:C2").collect()
     assert ranged
     for r in ranged:
         assert 0 <= r["row_idx"] <= 1  # rows 1..2 → idx 0..1
@@ -82,8 +84,7 @@ def test_records_mode_header_schema(spark, tmp_path):
     }
     with open(os.path.join(tmp_path, f"people{SHEET_SUFFIX}"), "w") as fh:
         json.dump(doc, fh)
-    register(spark)
-    df = spark.read.format("sheets").option("mode", "records").load(str(tmp_path))
+    df = read_records(spark, str(tmp_path))
     assert df.columns == ["name", "age", "city"]
     rows = {r["name"]: r for r in df.collect()}
     assert rows["ada"]["city"] == "london"
@@ -205,7 +206,9 @@ def test_stream_reader_multi_epoch_exactly_once(spark, fixture_dir, tmp_path):
     assert n_batches >= waves
     got = spark.table(name)
     batch = read_sheets(spark, fixture_dir)
-    assert got.count() == batch.count()
+    # the stream reader and read_sheets are two decoders of one format
+    assert got.exceptAll(batch).count() == 0
+    assert batch.exceptAll(got).count() == 0
     assert (
         got.select("file_id", "sheet_id", "row_idx").distinct().count()
         == got.count()
@@ -270,3 +273,120 @@ def test_stream_reader_restart_resumes_from_checkpoint(spark, fixture_dir, tmp_p
         got.select("file_id", "sheet_id", "row_idx").distinct().count()
         == got.count()
     )
+
+
+# ------------------------------------------------- adversarial store
+
+ADVERSARIAL = [
+    {
+        "file_id": 1,
+        "file_name": "a_ragged",
+        "tabs": [
+            {
+                "sheet_id": 11,
+                "tab_name": "t",
+                "values": [["a", "b", "c"], ["d"], [], ["e", None, "f", "g"]],
+            },
+            {"sheet_id": 12, "tab_name": "empty", "values": []},
+            # same tab name as sheet 11
+            {"sheet_id": 13, "tab_name": "t", "values": [["h"], ["i", "j"]]},
+        ],
+    },
+    {"file_id": 2, "file_name": "b_no_tabs", "tabs": []},
+    {
+        "file_id": 3,
+        "file_name": "c_odd",
+        "tabs": [
+            {
+                "sheet_id": 31,
+                "tab_name": "ünï \U0001f600",
+                "values": [
+                    ["\U0001f600 non-BMP \U0001d11e", "=SUM(A1:A2)"],
+                    [None, None],
+                    ['=A1&"x"', "", "tail"],
+                ],
+            }
+        ],
+    },
+]
+
+
+@pytest.fixture()
+def adversarial_dir(tmp_path):
+    for i, doc in enumerate(ADVERSARIAL):
+        path = tmp_path / f"{doc['file_name']}{SHEET_SUFFIX}"
+        # both JSON spellings of non-ASCII text: \u escapes and raw UTF-8
+        path.write_text(json.dumps(doc, ensure_ascii=i % 2 == 0), encoding="utf-8")
+    return str(tmp_path)
+
+
+def _decode(path):
+    """Reference decode of a sheet store, one tuple per grid row."""
+    rows = []
+    for f in sorted(os.listdir(path)):
+        if f.endswith(SHEET_SUFFIX):
+            with open(os.path.join(path, f), encoding="utf-8") as fh:
+                doc = json.load(fh)
+            for tab in doc["tabs"]:
+                for i, cells in enumerate(tab["values"]):
+                    rows.append(
+                        (doc["file_id"], doc["file_name"], tab["sheet_id"],
+                         tab["tab_name"], i, tuple(cells))
+                    )
+    return rows
+
+
+def _grid_rows(df):
+    return [
+        (r["file_id"], r["file_name"], r["sheet_id"], r["tab_name"], r["row_idx"],
+         tuple(r["cells"]))
+        for r in df.collect()
+    ]
+
+
+def test_adversarial_store_matches_python_decode(spark, adversarial_dir):
+    expected = _decode(adversarial_dir)
+    assert len(expected) == 9
+    assert Counter(_grid_rows(read_sheets(spark, adversarial_dir))) == Counter(expected)
+
+
+def test_adversarial_records_pad_rule(spark, adversarial_dir):
+    header = ADVERSARIAL[0]["tabs"][0]["values"][0]
+    width = len(header)
+    expected = Counter()
+    for doc in ADVERSARIAL:
+        for tab in doc["tabs"]:
+            for row in tab["values"][1:]:
+                cut = ["" if c is None else c for c in row[:width]]
+                expected[tuple(cut + [""] * (width - len(cut)))] += 1
+    df = read_records(spark, adversarial_dir)
+    assert df.columns == header
+    assert Counter(tuple(r) for r in df.collect()) == expected
+
+
+def test_truncated_file_fails_the_scan(spark, adversarial_dir):
+    text = json.dumps(ADVERSARIAL[0])
+    with open(os.path.join(adversarial_dir, f"z_cut{SHEET_SUFFIX}"), "w") as fh:
+        fh.write(text[: len(text) // 2])
+    with pytest.raises(Exception, match="(?i)malformed"):
+        read_sheets(spark, adversarial_dir).collect()
+
+
+def test_empty_store_reads_zero_rows(spark, tmp_path):
+    assert read_sheets(spark, str(tmp_path)).count() == 0
+
+
+def test_arrow_batches_flush_inside_one_file(monkeypatch, adversarial_dir):
+    """One sheet far larger than _ARROW_BATCH_ROWS must not become one
+    unbounded batch: the flush check runs per row, not per file."""
+    monkeypatch.setattr(sheets_source, "_ARROW_BATCH_ROWS", 2)
+    path = os.path.join(adversarial_dir, f"c_odd{SHEET_SUFFIX}")
+    batches = list(sheets_source._grid_arrow_batches([path]))
+    assert [b.num_rows for b in batches] == [2, 1]
+    got = [
+        (r["file_id"], r["file_name"], r["sheet_id"], r["tab_name"], r["row_idx"],
+         tuple(r["cells"]))
+        for b in batches
+        for r in b.to_pylist()
+    ]
+    assert got == [row for row in _decode(adversarial_dir) if row[1] == "c_odd"]

@@ -68,8 +68,14 @@ def main() -> int:
 
     # optional argv: refresh only the NAMED slots, merging into the
     # existing SCALE_CURVES.json (r11 verdict item 9: rewritten slots
-    # need refreshed curves without re-running the whole battery)
+    # need refreshed curves without re-running the whole battery).
+    # Only curved slots: any other name is a typo or would merge a
+    # curve no full run refreshes — reject it before Spark starts.
     only = sys.argv[1:]
+    unknown = [n for n in only if n not in QUERIES]
+    if unknown:
+        print(f"not a curved slot (see QUERIES): {' '.join(unknown)}", file=sys.stderr)
+        return 2
     queries = only or QUERIES
 
     qs, _ = all_queries()
