@@ -14,27 +14,30 @@ MiniLM embedding — `/root/reference/app.py:50-52`, `:35-36`). Here:
   (sentence-transformers via the same pandas_udf signature — see
   :func:`make_model_embed_udf`). Runs as an Arrow-batched pandas_udf —
   the scalable path for any real model too.
-- the token hash inside the embedder is the SAME polynomial fold as
-  ``functions.text.fingerprint`` (FP_BASE/FP_MOD), which makes the whole
-  embedding pipeline SQL-expressible: integer bucket votes, an exact
-  integer sum-of-squares norm, and ONE float32 rounding per component —
-  DuckDB reproduces every component bit-for-bit via
+- one kernel, :func:`_embed_matrix`, serves every embedder entry point
+  (both UDFs and :func:`embed_text_local`): each DISTINCT token of a
+  batch is hashed once with the SAME polynomial fold as
+  ``functions.text.fingerprint`` (FP_BASE/FP_MOD), which makes the
+  whole embedding pipeline SQL-expressible: integer bucket votes, an
+  exact integer sum-of-squares norm, and ONE float32 rounding per
+  component — DuckDB reproduces every component bit-for-bit via
   :func:`embedding_sql_ctes`, so the V1/V2 queries get full value
   oracles instead of rows-only checks.
 """
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from spec_search_spark.functions.text import FP_BASE, FP_MOD
+from spec_search_spark.functions.text import FP_BASE, FP_MOD, poly_hash_batch
 
 DEFAULT_DIM = 64  # matches the test `embeddings` table; reference uses 384
 EMBED_SIGN_BIT = 20  # vote sign = this bit of the token hash (h < 2^31)
@@ -100,93 +103,72 @@ def cosine_similarity_sql(a: str, b: str) -> str:
 # Deterministic hash-projection embedder (the MiniLM stand-in).
 # ---------------------------------------------------------------------------
 
-def _embed_text(text: str, dim: int) -> np.ndarray:
-    """Feature-hash unigrams into `dim` buckets with ±1 signs, L2-normalize.
-
-    Token hash = the shared polynomial fold over code points
-    (acc*FP_BASE + cp mod FP_MOD) — no PYTHONHASHSEED dependence; same
-    text → same vector on every worker, every run, AND the identical
-    value is computable in ANSI SQL (see embedding_sql_ctes), giving the
-    V1/V2 pipeline full DuckDB value oracles.
-
-    Exactness contract with the SQL mirror: votes are int64 (exact),
-    the squared norm is an exact integer sum, and the only rounding is
-    the final float64-division → float32 cast per component — a single
-    IEEE rounding both engines perform identically.
-    """
-    votes = _embed_votes(text, dim)
-    n2 = int((votes * votes).sum())
-    if n2 == 0:
-        return np.zeros(dim, dtype=np.float32)
-    n = np.sqrt(np.float64(n2))
-    return (votes.astype(np.float64) / n).astype(np.float32)
-
-
-def _embed_votes(text: str, dim: int) -> np.ndarray:
-    """Integer vote vector (the exact intermediate both the float
-    embedding and the emb_sig projection derive from).
-
-    Tokenization is ASCII-whitespace splitting (explicit class, not
-    Python str.split()'s Unicode whitespace) to match the RE2 '\\s+'
-    the DuckDB mirror uses; case folding is str.lower(), which equals
-    SQL lower() on ASCII — the corpus contract for the bit-for-bit
-    claim is ASCII text (non-ASCII would additionally diverge on ord()
-    vs utf-8 handling in regexp_extract_all)."""
-    votes = np.zeros(dim, dtype=np.int64)
-    if text:
-        for tok in _ASCII_WS.split(text.lower()):
-            if not tok:
-                continue
-            h = 0
-            for ch in tok:
-                h = (h * FP_BASE + ord(ch)) % FP_MOD
-            votes[h % dim] += 1 if (h >> EMBED_SIGN_BIT) & 1 else -1
-    return votes
-
-
-_ASCII_WS = re.compile(r"[ \t\n\r\f\x0b]+")
-
-
 def _votes_batch(texts: list, dim: int) -> np.ndarray:
-    """(N × dim) int64 vote matrix for a batch of texts. Measured: the
-    per-row fold beats routing tokens through poly_hash_batch here —
-    embedding tokens are ~5 chars, so the batch kernel's per-token
-    Python setup (encode + frombuffer) costs more than the ~5-step ord
-    fold it vectorizes (2.3× slower on a 550-text batch). The batch
-    kernel stays the right call for the dedup shingle path (longer
-    strings, one hash per DISTINCT shingle)."""
-    if not texts:
-        return np.zeros((0, dim), dtype=np.int64)
-    return np.stack([_embed_votes(t if isinstance(t, str) else "", dim) for t in texts])
+    """(N × dim) int64 vote matrix: each token votes ±1 into bucket
+    ``h % dim``, sign = bit EMBED_SIGN_BIT of its hash ``h``.
+
+    Tokens are the runs between the six ASCII whitespace characters
+    (not str.split()'s Unicode set), folded by str.lower() and hashed
+    over code points by :func:`poly_hash_batch`. The batch is split
+    ONCE in Arrow and dictionary-encoded, so each DISTINCT token is
+    lowered and hashed once (10k perfbench chunks: 188k tokens, 195
+    distinct), and one bincount scatters all votes into their (row,
+    bucket) cells — exact, since |votes| ≤ tokens per text ≪ 2^53.
+    Splitting before lowering is exact: str.lower() never creates or
+    removes ASCII whitespace, which is not case-ignorable, so the
+    final-sigma context stops at a token edge. Nulls and non-strings
+    embed as the empty text (the zero vector)."""
+    n = len(texts)
+    toks = pc.ascii_split_whitespace(
+        pa.array([t if isinstance(t, str) else None for t in texts], pa.string())
+    )
+    enc = pc.dictionary_encode(pc.list_flatten(toks))
+    h = poly_hash_batch([t.lower() for t in enc.dictionary.to_pylist()])
+    sign = np.where((h >> EMBED_SIGN_BIT) & 1, 1.0, -1.0)
+    sign[pc.utf8_length(enc.dictionary).to_numpy() == 0] = 0.0  # no token
+    codes = enc.indices.to_numpy()
+    cell = pc.list_parent_indices(toks).to_numpy() * dim + (h % dim)[codes]
+    votes = np.bincount(cell, weights=sign[codes], minlength=n * dim)
+    return votes.astype(np.int64).reshape(n, dim)
+
+
+def _embed_matrix(texts: list, dim: int) -> np.ndarray:
+    """(N × dim) float32 unit-norm embeddings — the one normalize every
+    entry point shares.
+
+    Exactness contract with the SQL mirror: votes are int64, the
+    squared norm is an exact integer sum, and the only rounding is the
+    final float64-division → float32 cast per component — a single
+    IEEE rounding both engines perform identically. Zero-vote rows
+    stay all-zero."""
+    votes = _votes_batch(texts, dim)
+    nrm = np.sqrt((votes * votes).sum(axis=1).astype(np.float64))
+    nrm[nrm == 0] = 1.0
+    return (votes.astype(np.float64) / nrm[:, None]).astype(np.float32)
 
 
 def make_embed_udf(dim: int = DEFAULT_DIM):
     """Arrow-batched pandas_udf: text column → array<float> embedding
-    (whole batch through the vectorized votes kernel)."""
+    (whole batch through the distinct-token vote kernel)."""
 
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def embed(texts: pd.Series) -> pd.Series:
-        votes = _votes_batch(texts.tolist(), dim)
-        n2 = (votes * votes).sum(axis=1)
-        nrm = np.sqrt(n2.astype(np.float64))
-        nrm[nrm == 0] = 1.0  # zero-vote rows stay all-zero
-        out = (votes.astype(np.float64) / nrm[:, None]).astype(np.float32)
-        return pd.Series(list(out), index=texts.index)
+        return pd.Series(list(_embed_matrix(texts.tolist(), dim)), index=texts.index)
 
     return embed
 
 
 def embed_text_local(text: str, dim: int = DEFAULT_DIM) -> list[float]:
     """Driver-side helper for probe vectors (same function as the UDF)."""
-    return [float(x) for x in _embed_text(text, dim)]
+    return [float(x) for x in _embed_matrix([text], dim)[0]]
 
 
 def make_embed_sig_udf(dim: int = DEFAULT_DIM):
-    """text → emb_sig string DIRECTLY from the integer votes — the
-    index-build fast path. Bit-identical to emb_sig(make_embed_udf()(t))
-    but skips materializing the float32 array column and the 64-element
-    transform+concat JVM expression per row: the only float work is the
-    one normalize+scale inside the kernel.
+    """text → emb_sig string DIRECTLY from the kernel's float32 matrix —
+    the index-build fast path. Bit-identical to
+    emb_sig(make_embed_udf()(t)) but skips materializing the float32
+    array column and the 64-element transform+concat JVM expression per
+    row.
 
     Rounding contract: the scaled components round half-away-from-zero
     (copysign(floor(|v|+0.5))), matching Spark round() (BigDecimal
@@ -195,12 +177,7 @@ def make_embed_sig_udf(dim: int = DEFAULT_DIM):
 
     @F.pandas_udf(T.StringType())
     def embed_sig(texts: pd.Series) -> pd.Series:
-        votes = _votes_batch(texts.tolist(), dim)
-        n2 = (votes * votes).sum(axis=1)
-        nrm = np.sqrt(n2.astype(np.float64))
-        nrm[nrm == 0] = 1.0  # zero-vote rows stay all-zero
-        c32 = (votes.astype(np.float64) / nrm[:, None]).astype(np.float32)
-        vals = c32.astype(np.float64) * 1e6
+        vals = _embed_matrix(texts.tolist(), dim).astype(np.float64) * 1e6
         ints = np.copysign(np.floor(np.abs(vals) + 0.5), vals).astype(np.int64)
         sigs = [",".join(map(str, row)) for row in ints.tolist()]
         return pd.Series(sigs, index=texts.index)
@@ -271,13 +248,18 @@ def emb_sig_sql_agg(comp_cte: str = "__comp") -> str:
 def embedding_sql_ctes(
     chunks_cte: str, id_col: str, text_col: str, dim: int = DEFAULT_DIM
 ) -> str:
-    """DuckDB CTE chain recomputing :func:`_embed_text` for every
+    """DuckDB CTE chain recomputing :func:`_embed_matrix` for every
     ({id_col}, {text_col}) row of `chunks_cte` — bit-for-bit.
 
     Emits CTEs __toks/__hashed/__votes/__norms/__grid/__comp; consumers
     read __comp(id, d, c) where c is the REAL (float32) component for
     dimension d (0..dim-1, zero-vote buckets included). All arithmetic
     before the final REAL cast is exact integer in both engines.
+
+    The bit-for-bit claim holds for ASCII text without vertical tab:
+    RE2's '\\s' omits \\x0b, and on non-ASCII DuckDB's lower() and
+    ord() over regexp_extract_all can diverge from str.lower() over
+    code points (e.g. lower('ΑΣ') keeps the medial sigma).
     """
     poly = (
         "list_reduce(list_prepend(0::BIGINT, "

@@ -308,7 +308,8 @@ class SheetsStreamReader(DataSourceStreamReader):
 def _bundle(files: list[str], target: int) -> list[list[str]]:
     """Pack files into ~``target`` partitions in listing order, capping
     each partition at _BUNDLE_BYTES_CAP bytes: deterministic greedy
-    packing, so the same listing always yields the same partitions."""
+    packing, so the same listing always yields the same partitions. A
+    file deleted between the listing and its size lookup is dropped."""
     if target <= 0 or len(files) <= target:
         return [[f] for f in files]
     per = -(-len(files) // target)
@@ -316,7 +317,10 @@ def _bundle(files: list[str], target: int) -> list[list[str]]:
     cur: list[str] = []
     cur_bytes = 0
     for f in files:
-        sz = os.path.getsize(f)
+        try:
+            sz = os.path.getsize(f)
+        except FileNotFoundError:
+            continue
         if cur and (len(cur) >= per or cur_bytes + sz > _BUNDLE_BYTES_CAP):
             out.append(cur)
             cur, cur_bytes = [], 0

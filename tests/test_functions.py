@@ -4,14 +4,21 @@ non-SQL-expressible pieces."""
 
 from __future__ import annotations
 
+import re
 import string
 
+import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from spec_search_spark.functions.text import split_text_recursive
-from spec_search_spark.functions.vector import embed_text_local
+from spec_search_spark.functions.text import FP_BASE, FP_MOD, split_text_recursive
+from spec_search_spark.functions.vector import (
+    EMBED_SIGN_BIT,
+    _embed_matrix,
+    _votes_batch,
+    embed_text_local,
+)
 
 
 # --- recursive chunker properties (reference params indexer.py:62-66) ------
@@ -81,6 +88,117 @@ def test_embed_distinguishes_texts():
 
 def test_embed_empty_is_zero():
     assert all(x == 0.0 for x in embed_text_local("", 64))
+
+
+# The per-row fold the distinct-token kernel replaced, kept as its
+# reference: lower the whole text, split on the six ASCII whitespace
+# characters, fold each token's code points one by one.
+_REF_WS = re.compile(r"[ \t\n\r\f\x0b]+")
+
+
+def _ref_votes(text, dim: int) -> np.ndarray:
+    votes = np.zeros(dim, dtype=np.int64)
+    if isinstance(text, str) and text:
+        for tok in _REF_WS.split(text.lower()):
+            if not tok:
+                continue
+            h = 0
+            for ch in tok:
+                h = (h * FP_BASE + ord(ch)) % FP_MOD
+            votes[h % dim] += 1 if (h >> EMBED_SIGN_BIT) & 1 else -1
+    return votes
+
+
+# oversampled: the split set, look-alike separators that must NOT split
+# (U+0085, U+00A0, \x1c-\x1f), final-sigma contexts, case mappings that
+# change length, non-BMP code points and a formula
+_WS = [" ", "\t", "\n", "\r", "\f", "\x0b"]
+_PIECES = _WS + [
+    "\x85", "\xa0", "\x1c", "\x1d", "\x1e", "\x1f",
+    "Σ", "σ", "ς", "ΑΣ", "Σ.", ".",
+    "İ", "ß", "ﬁ", "\U0001F600", "\U00010348",
+    "=SUM(A1:A2)", "word", "Word",
+]
+_EMBED_TEXT = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(),
+    st.lists(st.one_of(st.sampled_from(_PIECES), st.text(max_size=4)), max_size=12).map(
+        "".join
+    ),
+    st.tuples(
+        st.sampled_from(_WS), st.lists(st.sampled_from(_PIECES), max_size=6), st.sampled_from(_WS)
+    ).map(lambda t: t[0] + "".join(t[1]) + t[2]),
+)
+
+
+@given(st.lists(_EMBED_TEXT, max_size=12), st.sampled_from([1, 7, 64]))
+@settings(max_examples=300, deadline=None)
+def test_votes_batch_matches_per_row_fold(texts, dim):
+    got = _votes_batch(texts, dim)
+    assert got.shape == (len(texts), dim) and got.dtype == np.int64
+    for row, t in zip(got, texts):
+        assert (row == _ref_votes(t, dim)).all(), t
+
+
+@given(_EMBED_TEXT.filter(lambda t: t is not None))
+@settings(max_examples=200, deadline=None)
+def test_embed_text_local_is_matrix_row(text):
+    assert embed_text_local(text, 64) == list(_embed_matrix([text], 64)[0])
+
+
+def test_embed_udfs_across_arrow_batches(spark):
+    """Three-row Arrow batches mixing ASCII, non-ASCII and null rows:
+    the index build's embedding equals the driver-side embedder row by
+    row, and the votes→sig fast path equals emb_sig of the array UDF."""
+    from pyspark.sql import functions as F
+
+    from spec_search_spark.functions.vector import (
+        emb_sig,
+        make_embed_sig_udf,
+        make_embed_udf,
+    )
+    from spec_search_spark.operators.similarity import build_index_df
+
+    texts = [
+        "quarterly revenue by region",
+        "ΑΣ Σ. σς İstanbul Straße ﬁle \U0001F600 =SUM(A1:A2)",
+        None,
+        "",
+        "  leading and trailing\twhitespace\x0b",
+        "no\x85split\xa0on\x1cthese",
+        " ".join(["Σigma word ß"] * 20),  # several chunks
+        "plain ascii text " * 12,
+        None,
+        "İ",
+    ]
+    docs = spark.createDataFrame(
+        [(i, t, "en", "docs", len(t or "")) for i, t in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "3")
+    try:
+        rows = build_index_df(docs).select("chunk", "embedding").collect()
+        chunks = [r["chunk"] for r in rows] + [None, None]
+        frame = spark.createDataFrame([(c,) for c in chunks], "chunk string").repartition(2)
+        sigs = frame.select(
+            make_embed_sig_udf(64)(F.col("chunk")).alias("direct"),
+            emb_sig(make_embed_udf(64)(F.col("chunk"))).alias("via_array"),
+        ).collect()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+    assert len(rows) > sum(1 for t in texts if t)  # null/empty dropped, long docs split
+    for r in rows:
+        assert list(r["embedding"]) == embed_text_local(r["chunk"], 64), r["chunk"]
+    assert len(sigs) == len(chunks)
+    for r in sigs:
+        assert r["direct"] == r["via_array"]
 
 
 # --- A1 letters & type sniffing (need Spark) --------------------------------

@@ -390,3 +390,21 @@ def test_arrow_batches_flush_inside_one_file(monkeypatch, adversarial_dir):
         for r in b.to_pylist()
     ]
     assert got == [row for row in _decode(adversarial_dir) if row[1] == "c_odd"]
+
+
+def test_bundle_drops_file_deleted_after_listing(monkeypatch):
+    """A file that vanishes between the listing and its size lookup is
+    left out of the bundle; planning does not raise and the remaining
+    files keep their listing order."""
+    files = [f"/store/{c}{SHEET_SUFFIX}" for c in "abcde"]
+    gone = files[1]
+
+    def getsize(path):
+        if path == gone:
+            raise FileNotFoundError(path)
+        return 10
+
+    monkeypatch.setattr(sheets_source.os.path, "getsize", getsize)
+    bundles = sheets_source._bundle(files, 2)
+    assert [f for b in bundles for f in b] == [f for f in files if f != gone]
+    assert bundles == [files[0:1] + files[2:4], files[4:5]]
