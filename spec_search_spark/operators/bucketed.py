@@ -32,40 +32,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import prune_memo, tune
+from spec_search_spark.session import session_memo, tune
 
 N_BUCKETS = 8
 
-_BUCKETED: dict[tuple[str, str], tuple[str, str]] = {}
-
-
+@session_memo
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED:
-        tag = uuid.uuid4().hex[:8]
-        base = tempfile.mkdtemp(prefix="spec_search_bucketed_")
-        li_name, ord_name = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_extendedprice", "l_discount", "l_quantity")
-            .write.bucketBy(N_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", os.path.join(base, "lineitem"))
-            .mode("overwrite")
-            .saveAsTable(li_name)
-        )
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.bucketBy(N_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", os.path.join(base, "orders"))
-            .mode("overwrite")
-            .saveAsTable(ord_name)
-        )
-        prune_memo(_BUCKETED, key[0])
-        _BUCKETED[key] = (li_name, ord_name)
-    return _BUCKETED[key]
+    tag = uuid.uuid4().hex[:8]
+    base = tempfile.mkdtemp(prefix="spec_search_bucketed_")
+    li_name, ord_name = f"lineitem_bkt_{tag}", f"orders_bkt_{tag}"
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount", "l_quantity")
+        .write.bucketBy(N_BUCKETS, "l_orderkey")
+        .sortBy("l_orderkey")
+        .option("path", os.path.join(base, "lineitem"))
+        .mode("overwrite")
+        .saveAsTable(li_name)
+    )
+    (
+        load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+        .write.bucketBy(N_BUCKETS, "o_orderkey")
+        .sortBy("o_orderkey")
+        .option("path", os.path.join(base, "orders"))
+        .mode("overwrite")
+        .saveAsTable(ord_name)
+    )
+    return li_name, ord_name
 
 
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,7 +40,7 @@ from spec_search_spark.functions.text import (
     RE_TOKEN_SPLIT,
     make_poly_hash_udf,
 )
-from spec_search_spark.session import spread, tune
+from spec_search_spark.session import session_memo, spread, tune
 
 P = FP_MOD  # 2^31-1, prime
 N_HASHES = 16
@@ -212,6 +212,7 @@ def shingle_postings(
 BROADCAST_VOCAB_MAX = 2_000_000  # distinct shingles; ~50 MB of strings+hashes
 
 
+@session_memo
 def hashed_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle, h): the poly-hash runs once per DISTINCT
     shingle (vocabulary-sized Python work) and joins back — not once
@@ -228,25 +229,17 @@ def hashed_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     size check), and so is the hashed-postings result — Jaccard's pair
     self-join and MinHash's signature agg all read it, and lazily the
     vocab hash + join would recompute once per reader. Memoized per
-    (session, corpus) like ivf._TRAINED: an index-shaped intermediate
+    (session, corpus) like ivf.trained_index: an index-shaped intermediate
     is built once, not re-validated (two count jobs) per query call."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _HASHED_POSTINGS:
-        p = shingle_postings(spark, sf_dir)
-        vocab = _materialize(
-            p.select("shingle").distinct().withColumn("h", _poly_hash(F.col("shingle"))),
-            durable=True,
-        )
-        join_vocab = (
-            F.broadcast(vocab) if vocab.count() <= BROADCAST_VOCAB_MAX else vocab
-        )
-        _HASHED_POSTINGS[key] = _materialize(
-            p.join(join_vocab, "shingle"), durable=True
-        )
-    return _HASHED_POSTINGS[key]
-
-
-_HASHED_POSTINGS: dict[tuple[str, str], DataFrame] = {}
+    p = shingle_postings(spark, sf_dir)
+    vocab = _materialize(
+        p.select("shingle").distinct().withColumn("h", _poly_hash(F.col("shingle"))),
+        durable=True,
+    )
+    join_vocab = (
+        F.broadcast(vocab) if vocab.count() <= BROADCAST_VOCAB_MAX else vocab
+    )
+    return _materialize(p.join(join_vocab, "shingle"), durable=True)
 
 
 # --- exact dedup ------------------------------------------------------------
@@ -869,6 +862,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {HAMMING_THRESHOLD}
 MAX_CC_ITERS = 15
 
 
+@session_memo
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUP assignment: connected components over the
     MinHash-LSH candidate graph, min doc_id as the cluster id — the
@@ -887,15 +881,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: exact same semantics via a recursive transitive-closure
     CTE (DuckDB) — min reachable doc_id per node.
 
-    Memoized per (session, corpus) like _HASHED_POSTINGS: the label
+    Memoized per (session, corpus) like hashed_shingle_postings: the label
     table is an index-shaped intermediate read by both the cluster
     query and dedup_survivors — the iterative join rounds should run
     once, not once per consumer.
     """
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CC_LABELS:
-        return _CC_LABELS[key]
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_lsh_candidates(spark, sf_dir)
     edges = _materialize(
@@ -937,16 +928,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # alone cost ~26s/call on the B-cubed report at sf0.1 (the same
     # lesson as graph._edges_deg). Checkpointing truncates the lineage
     # to the materialized blocks.
-    _CC_LABELS[key] = labels.select(
+    out = labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),
         (F.col("label") == F.col("doc_id")).alias("is_canonical"),
     ).localCheckpoint(eager=True)
     labels.unpersist()
-    return _CC_LABELS[key]
-
-
-_CC_LABELS: dict[tuple[str, str], DataFrame] = {}
+    return out
 
 
 def _dedup_clusters_sql() -> str:

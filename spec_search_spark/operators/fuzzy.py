@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import tune
+from spec_search_spark.session import session_memo, tune
 
 EDIT_D = 2  # max edit distance
 QGRAM = 3
@@ -133,6 +133,7 @@ FROM vocab a JOIN vocab b
 MAX_ER_ITERS = 12
 
 
+@session_memo
 def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end entity resolution over the part-name vocabulary:
     blocking + verified fuzzy matching (fuzzy_name_pairs) → connected
@@ -152,9 +153,6 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ER_LABELS:
-        return _ER_LABELS[key]
     part = load_table(spark, sf_dir, "part")
     vocab = part.groupBy(F.col("p_name").alias("name")).agg(
         F.count(F.lit(1)).alias("members")
@@ -202,17 +200,13 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("entity_id")
     wr = Window.partitionBy("entity_id").orderBy(F.desc("members"), "name")
-    _ER_LABELS[key] = clustered.select(
+    return clustered.select(
         "entity_id",
         "name",
         "members",
         F.count(F.lit(1)).over(w).alias("cluster_size"),
         (F.row_number().over(wr) == 1).alias("is_canonical"),
     )
-    return _ER_LABELS[key]
-
-
-_ER_LABELS: dict[tuple[str, str], DataFrame] = {}
 
 
 ER_SQL = f"""

@@ -32,7 +32,7 @@ from spec_search_spark.operators.dedup import (
     minhash_lsh_candidates,
 )
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import tune
+from spec_search_spark.session import session_memo, tune
 
 SCALE = 1_000_000_000_000  # bigint micro-units: 1.0 == 1e12
 DAMP_NUM = 85  # damping 0.85 as an integer percentage
@@ -110,34 +110,29 @@ ORDER BY d.doc_id
 """
 
 
-_EDGES: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
+@session_memo
 def _edges_deg(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Materialized undirected edge set (both directions) + degree table
     of the LSH candidate graph, memoized per (session, corpus) — shared
     by PageRank and triangle counting, like dedup's postings memo."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGES:
-        pairs = minhash_lsh_candidates(spark, sf_dir)
-        # localCheckpoint, not cache: a cached edge table still CARRIES
-        # the whole postings→signature→banding lineage, and every
-        # downstream graph query pays Catalyst re-analysis of that tree
-        # (measured ~6s per triangle call on a 576-edge graph).
-        # Checkpointing truncates the lineage to the materialized
-        # blocks. local (block-manager) form is right for one-app
-        # sessions; a cluster deployment would use reliable
-        # checkpointing for executor-loss tolerance.
-        edges = (
-            pairs.select(F.col("doc1").alias("a"), F.col("doc2").alias("b"))
-            .unionByName(pairs.select(F.col("doc2").alias("a"), F.col("doc1").alias("b")))
-            .localCheckpoint(eager=True)
-        )
-        deg = edges.groupBy(F.col("a").alias("doc_id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        ).localCheckpoint(eager=True)
-        _EDGES[key] = (edges, deg)
-    return _EDGES[key]
+    pairs = minhash_lsh_candidates(spark, sf_dir)
+    # localCheckpoint, not cache: a cached edge table still CARRIES
+    # the whole postings→signature→banding lineage, and every
+    # downstream graph query pays Catalyst re-analysis of that tree
+    # (measured ~6s per triangle call on a 576-edge graph).
+    # Checkpointing truncates the lineage to the materialized
+    # blocks. local (block-manager) form is right for one-app
+    # sessions; a cluster deployment would use reliable
+    # checkpointing for executor-loss tolerance.
+    edges = (
+        pairs.select(F.col("doc1").alias("a"), F.col("doc2").alias("b"))
+        .unionByName(pairs.select(F.col("doc2").alias("a"), F.col("doc1").alias("b")))
+        .localCheckpoint(eager=True)
+    )
+    deg = edges.groupBy(F.col("a").alias("doc_id")).agg(
+        F.count(F.lit(1)).alias("deg")
+    ).localCheckpoint(eager=True)
+    return edges, deg
 
 
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,8 +537,21 @@ ORDER BY e.a
 
 HITS_ITERS = 3  # authority updates (hub updates interleave: a h a h a)
 
-#: (applicationId, sf_dir) -> checkpointed customer→part purchase edges
-_BIP_EDGES: dict = {}
+
+@session_memo
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct customer→part purchase edges (c, p), localCheckpointed
+    like _edges_deg: truncate the join+distinct lineage so every HITS
+    round plans against the materialized edge blocks, not the replayed
+    scan."""
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    return (
+        o.join(li, o.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -569,27 +577,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: top 10 (p_partkey, auth_fixed) by authority."""
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BIP_EDGES:
-        from spec_search_spark.session import prune_memo
-
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        prune_memo(_BIP_EDGES, key[0])
-        # localCheckpoint like _edges_deg: truncate the join+distinct
-        # lineage so every HITS round plans against the materialized
-        # edge blocks, not the replayed scan
-        _BIP_EDGES[key] = (
-            o.join(li, o.o_orderkey == li.l_orderkey)
-            .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    edges = _BIP_EDGES[key]
+    edges = _purchase_edges(spark, sf_dir)
     h = edges.select("c").distinct().select(
         "c", F.lit(SCALE).cast("bigint").alias("h")
     )

@@ -34,24 +34,13 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import local_df, prune_memo, tune
+from spec_search_spark.session import local_df, session_memo, tune
 
 K_CLUSTERS = 8
 N_ITER = 2
 N_PROBE_CLUSTERS = 2
 TOP_K = 10
 N_PROBES = 5
-
-# Deployment semantics: an IVF index is trained once and persisted, not
-# re-trained per query. Memoize (centroids, cached index DF) per
-# (session, corpus) — repeated searches in one session hit the trained
-# index, exactly like readers of the partitionBy("cluster") parquet
-# layout would. Also sidesteps the per-call pandas_udf objects that
-# defeat Spark's canonicalized-plan cache reuse. Keyed on the
-# applicationId (stable, never reused within a process) rather than
-# id(spark), which can be recycled after a stopped session is GC'd.
-_TRAINED: dict[tuple[str, str], tuple[list[list[float]], DataFrame]] = {}
-
 
 def _assign_udf(centroids: list[list[float]]):
     """pandas_udf: vector → (nearest centroid id, distance²). Ordered
@@ -129,32 +118,30 @@ def ivf_index(
     ).select("vec_id", "label", "embedding", F.col("a.cluster").alias("cluster"))
 
 
+# Deployment semantics: an IVF index is trained once and persisted, not
+# re-trained per query — repeated searches in one session hit the
+# trained index, exactly like readers of the partitionBy("cluster")
+# parquet layout would. Also sidesteps the per-call pandas_udf objects
+# that defeat Spark's canonicalized-plan cache reuse.
+@session_memo
 def trained_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[list[float]], DataFrame]:
     """Train-once accessor: (centroids, cached assigned-index DF)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TRAINED:
-        centroids = train_centroids(spark, sf_dir)
-        index = ivf_index(spark, sf_dir, centroids).cache()
-        index.count()  # materialize now: both probe-join sides reuse it
-        prune_memo(_TRAINED, key[0])
-        _TRAINED[key] = (centroids, index)
-    return _TRAINED[key]
+    centroids = train_centroids(spark, sf_dir)
+    index = ivf_index(spark, sf_dir, centroids).cache()
+    index.count()  # materialize now: both probe-join sides reuse it
+    return centroids, index
 
 
-def _probe_assignments(
-    spark: SparkSession, sf_dir: str, centroids: list[list[float]]
-) -> DataFrame:
+@session_memo
+def _probe_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(probe_id, probe_vec, cluster) — one row per (probe, probed
-    cluster): each probe's N_PROBE_CLUSTERS nearest centroids. The
-    probe set is tiny and bounded (the documented FAISS-style driver-
-    side collect); memoized per (session, corpus) alongside the
-    trained index so search and check don't re-collect it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PROBE_DF:
-        return _PROBE_DF[key]
-    cents = np.array(centroids, dtype=np.float64)
+    cluster): each probe's N_PROBE_CLUSTERS nearest trained centroids.
+    The probe set is tiny and bounded (the documented FAISS-style
+    driver-side collect); memoized alongside the trained index so
+    search and check don't re-collect it."""
+    cents = np.array(trained_index(spark, sf_dir)[0], dtype=np.float64)
     probes = [
         (int(r["vec_id"]), list(r["embedding"]))
         for r in load_table(spark, sf_dir, "embeddings")
@@ -168,22 +155,16 @@ def _probe_assignments(
         nearest = np.argsort(d2, kind="stable")[:N_PROBE_CLUSTERS]
         for c in nearest:
             probe_rows.append((pid, [float(x) for x in vec], int(c)))
-    prune_memo(_PROBE_DF, key[0])
-    _PROBE_DF[key] = local_df(
+    return local_df(
         spark, probe_rows, "probe_id int, probe_vec array<double>, cluster int"
     )
-    return _PROBE_DF[key]
-
-
-_PROBE_DF: dict[tuple[str, str], DataFrame] = {}
-_EXACT_TOPK: dict[tuple[str, str], DataFrame] = {}
 
 
 def ivf_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 per probe, scanning only the probe's nearest 2 clusters
     (cluster-pruned exact re-rank)."""
-    centroids, index = trained_index(spark, sf_dir)
-    probe_df = _probe_assignments(spark, sf_dir, centroids)
+    _, index = trained_index(spark, sf_dir)
+    probe_df = _probe_assignments(spark, sf_dir)
 
     from spec_search_spark.functions.vector import l2_squared
     from spec_search_spark.operators.similarity import partial_topk
@@ -252,6 +233,33 @@ FROM embeddings
 """
 
 
+@session_memo
+def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(probe_id, rn, ex_d2): the exact rank-rn distance per probe over
+    the full table — N_PROBES × TOP_K rows, cached (both check runs
+    reuse it)."""
+    from spec_search_spark.functions.vector import l2_squared
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    probes = emb.filter(F.col("vec_id") < N_PROBES).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    scored = emb.join(
+        F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
+    ).withColumn(
+        "ex_d2", F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4)
+    )
+    w = W.partitionBy("probe_id").orderBy(F.asc("ex_d2"), F.asc("vec_id"))
+    ex = (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= TOP_K)
+        .select("probe_id", "rn", "ex_d2")
+        .cache()
+    )
+    ex.count()  # materialize now
+    return ex
+
+
 def ivf_ann_search_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-verifying IVF search over a FIXED (probe × rank) grid: per
     (probe, rank 1..TOP_K) the result list is distance-monotone,
@@ -264,11 +272,9 @@ def ivf_ann_search_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     fewer than TOP_K non-probe vectors (rows there flip present_ok
     rather than vanishing and breaking the row-count compare).
     """
-    centroids, index = trained_index(spark, sf_dir)
+    _, index = trained_index(spark, sf_dir)
     res = ivf_ann_search(spark, sf_dir)
-    from spec_search_spark.functions.vector import l2_squared
-
-    probe_df = _probe_assignments(spark, sf_dir, centroids)
+    probe_df = _probe_assignments(spark, sf_dir)
     n_cand = (
         index.join(
             F.broadcast(probe_df.select("probe_id", "cluster")),
@@ -284,29 +290,7 @@ def ivf_ann_search_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.range(1, TOP_K + 1).select(F.col("id").cast("int").alias("rn"))
         )
     )
-
-    exact_key = (spark.sparkContext.applicationId, sf_dir)
-    if exact_key not in _EXACT_TOPK:
-        emb = load_table(spark, sf_dir, "embeddings")
-        probes = emb.filter(F.col("vec_id") < N_PROBES).select(
-            F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-        )
-        scored = emb.join(
-            F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
-        ).withColumn(
-            "ex_d2", F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4)
-        )
-        w = W.partitionBy("probe_id").orderBy(F.asc("ex_d2"), F.asc("vec_id"))
-        ex = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOP_K)
-            .select("probe_id", "rn", "ex_d2")
-            .cache()  # N_PROBES × TOP_K rows; the full-scan reference
-        )
-        ex.count()  # materialize now (both check runs reuse it)
-        prune_memo(_EXACT_TOPK, exact_key[0])
-        _EXACT_TOPK[exact_key] = ex
-    exact = _EXACT_TOPK[exact_key]
+    exact = _exact_topk(spark, sf_dir)
     wm = W.partitionBy("probe_id").orderBy("rn")
     mono = res.withColumn("prev_d2", F.lag("dist2").over(wm)).select(
         "probe_id",
@@ -431,20 +415,13 @@ FROM range({K_CLUSTERS}) t(c)
 
 SWEEP_NPROBES = (1, 2, 4)  # probed-cluster counts to sweep
 
-_RANKED_PROBES: dict[tuple[str, str], DataFrame] = {}
-
-
-def _ranked_probe_assignments(
-    spark: SparkSession, sf_dir: str, centroids: list[list[float]]
-) -> DataFrame:
+@session_memo
+def _ranked_probe_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(probe_id, probe_vec, cluster, rank) — each probe's
-    max(SWEEP_NPROBES) nearest centroids WITH their nearness rank, so
-    one table serves every sweep point (rank < p). Same bounded
-    driver-side collect as `_probe_assignments`; memoized."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RANKED_PROBES:
-        return _RANKED_PROBES[key]
-    cents = np.array(centroids, dtype=np.float64)
+    max(SWEEP_NPROBES) nearest trained centroids WITH their nearness
+    rank, so one table serves every sweep point (rank < p). Same
+    bounded driver-side collect as `_probe_assignments`; memoized."""
+    cents = np.array(trained_index(spark, sf_dir)[0], dtype=np.float64)
     probes = [
         (int(r["vec_id"]), list(r["embedding"]))
         for r in load_table(spark, sf_dir, "embeddings")
@@ -458,11 +435,9 @@ def _ranked_probe_assignments(
         nearest = np.argsort(d2, kind="stable")[: max(SWEEP_NPROBES)]
         for rank, c in enumerate(nearest):
             rows.append((pid, [float(x) for x in vec], int(c), rank))
-    prune_memo(_RANKED_PROBES, key[0])
-    _RANKED_PROBES[key] = local_df(
+    return local_df(
         spark, rows, "probe_id int, probe_vec array<double>, cluster int, rank int"
     )
-    return _RANKED_PROBES[key]
 
 
 def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -485,8 +460,8 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ivf.py; the per-probe candidate-set economics (rank<p
     join, partial top-k before the exchange) reuse the production
     search plan."""
-    centroids, index = trained_index(spark, sf_dir)
-    probes = _ranked_probe_assignments(spark, sf_dir, centroids)
+    _, index = trained_index(spark, sf_dir)
+    probes = _ranked_probe_assignments(spark, sf_dir)
     from spec_search_spark.functions.vector import l2_squared
     from spec_search_spark.operators.similarity import partial_topk
     from spec_search_spark.session import spread

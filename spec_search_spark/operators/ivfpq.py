@@ -60,7 +60,7 @@ from spec_search_spark.operators.pq import (
     _init_codebook,
     _update_codebook,
 )
-from spec_search_spark.session import local_df, prune_memo, tune
+from spec_search_spark.session import local_df, session_memo, tune
 
 DIM = M_SUB * SUB_DIM       # 64-dim embeddings
 N_PROBES = 5                # probe queries: vec_id < N_PROBES
@@ -69,19 +69,14 @@ SWEEP_NPROBES = (1, 2, 4)   # recall-report sweep points
 CAND_K = 100                # ADC survivors kept for exact re-rank
 TOP_K = 10
 
-_ENC_MEMO: dict = {}
-_LUT_MEMO: dict = {}
 
-
+@session_memo
 def _encoded(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(codebook, encoded): the residual-PQ codebook (sub, code, c) and
     the deployed index (vec_id, cluster, codes) — trained/encoded once
     per (session, corpus), localCheckpointed (FAISS build-once
     semantics; also what keeps every search plan's lineage flat)."""
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ENC_MEMO:
-        return _ENC_MEMO[key]
     assigned = kmeans._final_assignment(spark, sf_dir)  # vec_id, cid, e
     cent = kmeans._trained_centroids(spark, sf_dir)     # cid, c (6dp grid)
     # residuals: exact elementwise float subtraction in both engines
@@ -124,9 +119,7 @@ def _encoded(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     enc = codes.join(res.select("vec_id", "cluster"), "vec_id").localCheckpoint(
         eager=True
     )
-    prune_memo(_ENC_MEMO, key[0])
-    _ENC_MEMO[key] = (book, enc)
-    return _ENC_MEMO[key]
+    return book, enc
 
 
 def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,15 +130,13 @@ def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _probe_luts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(probe_id, rank, cid, lut): per probe, its max(SWEEP) nearest
     coarse centroids by (6dp distance, cid) with the 128-entry ADC
     lookup table of the probe's RESIDUAL against the codebook — one
     bounded table (probes × nprobe_max × M_SUB·K_CODES entries) serves
     every sweep point via rank < p. Memoized; broadcast at use."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LUT_MEMO:
-        return _LUT_MEMO[key]
     book, _ = _encoded(spark, sf_dir)
     cent = kmeans._trained_centroids(spark, sf_dir)
     pdist = _probes(spark, sf_dir).crossJoin(F.broadcast(cent)).select(
@@ -180,7 +171,7 @@ def _probe_luts(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("d"),
     )
-    luts = (
+    return (
         lut_rows.groupBy("probe_id", "rank", "cid")
         .agg(
             F.transform(
@@ -190,9 +181,6 @@ def _probe_luts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # ≤ probes × nprobe_max rows
     )
-    prune_memo(_LUT_MEMO, key[0])
-    _LUT_MEMO[key] = luts
-    return luts
 
 
 def _adc_scored(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import prune_memo, spread
+from spec_search_spark.session import session_memo, spread
 from spec_search_spark.functions.vector import (
     dot,
     dot_sql,
@@ -104,9 +104,7 @@ def _update(assigned: DataFrame, prev: DataFrame) -> DataFrame:
     )
 
 
-_CENTROID_MEMO: dict = {}
-
-
+@session_memo
 def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The TRAINED centroids, memoized per (session, corpus) like the
     V2 search index (similarity.py): the iterative training loop runs
@@ -114,16 +112,12 @@ def _trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantic_dedup alike. Only the model is memoized — the final
     assignment stays a live one-pass plan, so every consumer keeps the
     broadcast-join shape the plan audit pins."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CENTROID_MEMO:
-        emb = _emb(spark, sf_dir)
-        cent = _init_centroids(emb).localCheckpoint(eager=True)
-        for _ in range(N_ITERS):
-            assigned = _assign(emb, cent)
-            cent = _update(assigned, cent).localCheckpoint(eager=True)
-        prune_memo(_CENTROID_MEMO, key[0])
-        _CENTROID_MEMO[key] = cent
-    return _CENTROID_MEMO[key]
+    emb = _emb(spark, sf_dir)
+    cent = _init_centroids(emb).localCheckpoint(eager=True)
+    for _ in range(N_ITERS):
+        assigned = _assign(emb, cent)
+        cent = _update(assigned, cent).localCheckpoint(eager=True)
+    return cent
 
 
 def _final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import tune
+from spec_search_spark.session import session_memo, tune
 
 Z_BITS = 8           # bits per dimension after range normalization
 N_ZBUCKETS = 64      # clustered "files" the report describes
@@ -145,29 +145,21 @@ GROUP BY 1
 
 PRUNE_LANG = "en"
 
-_PARTITIONED: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _partitioned_docs_path(spark: SparkSession, sf_dir: str) -> str:
     """documents re-written hive-partitioned by lang (lang=en/...),
     once per (session, corpus) — the write-side half of partition
     pruning, memoized like bucketed's tables."""
     import tempfile
 
-    from spec_search_spark.session import prune_memo
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PARTITIONED:
-        base = tempfile.mkdtemp(prefix="spec_search_partitioned_")
-        (
-            load_table(spark, sf_dir, "documents")
-            .write.partitionBy("lang")
-            .mode("overwrite")
-            .parquet(base)
-        )
-        prune_memo(_PARTITIONED, key[0])
-        _PARTITIONED[key] = base
-    return _PARTITIONED[key]
+    base = tempfile.mkdtemp(prefix="spec_search_partitioned_")
+    (
+        load_table(spark, sf_dir, "documents")
+        .write.partitionBy("lang")
+        .mode("overwrite")
+        .parquet(base)
+    )
+    return base
 
 
 def partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,9 +195,7 @@ GROUP BY lang
 DPP_SHARDS = 16  # hash-shard layout width for the DPP fact
 DPP_MIN_CHARS = 530  # "oversize document" gate driving the dim
 
-_SHARDED: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _sharded_docs_path(spark: SparkSession, sf_dir: str) -> str:
     """documents re-written hive-partitioned by the hash shard
     `doc_id % {N}` — the layout a bulk store actually uses when no
@@ -213,23 +203,15 @@ def _sharded_docs_path(spark: SparkSession, sf_dir: str) -> str:
     (session, corpus) like the lang-partitioned copy."""
     import tempfile
 
-    from spec_search_spark.session import prune_memo
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHARDED:
-        base = tempfile.mkdtemp(prefix="spec_search_sharded_")
-        (
-            load_table(spark, sf_dir, "documents")
-            .withColumn(
-                "shard", F.expr(f"cast(doc_id % {DPP_SHARDS} as int)")
-            )
-            .write.partitionBy("shard")
-            .mode("overwrite")
-            .parquet(base)
-        )
-        prune_memo(_SHARDED, key[0])
-        _SHARDED[key] = base
-    return _SHARDED[key]
+    base = tempfile.mkdtemp(prefix="spec_search_sharded_")
+    (
+        load_table(spark, sf_dir, "documents")
+        .withColumn("shard", F.expr(f"cast(doc_id % {DPP_SHARDS} as int)"))
+        .write.partitionBy("shard")
+        .mode("overwrite")
+        .parquet(base)
+    )
+    return base
 
 
 def dpp_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:

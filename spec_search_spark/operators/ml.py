@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 from spec_search_spark.catalog import load_table
 from spec_search_spark.functions.text import tokens
 from spec_search_spark.operators.dedup import _POLY_SQL, _poly_hash
-from spec_search_spark.session import local_df, prune_memo, spread, tune
+from spec_search_spark.session import local_df, session_memo, spread, tune
 
 # --------------------------------------------------------------------------
 # PCA via power iteration on an exact-integer covariance matrix
@@ -59,22 +59,17 @@ PCA_XSCALE = 10_000  # component grid: round(x * 1e4) — ints ≤ ~1.2e4 center
 PCA_VSCALE = 100_000  # eigenvector grid per iteration
 PCA_ITERS = 8
 
-# Memoized 64×64 integer covariance matrix per (session, corpus): the
-# Gram pass is the only data-sized stage of PCA — a sufficient-statistic
-# artifact exactly like ivf's trained centroids, reusable by every
-# eigensolve (and by any future whitening/OPQ op) without re-scanning.
-_GRAM_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# The Gram pass is the only data-sized stage of PCA — a sufficient-
+# statistic artifact exactly like ivf's trained centroids, reusable by
+# every eigensolve (and by any future whitening/OPQ op) without
+# re-scanning.
+@session_memo
 def _covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(i, j, g): the 64×64 integer covariance matrix of the embedding
     cloud, memoized per (session, corpus). Two narrow partial+final
     aggregation passes over the data; the d²-row result is
     localCheckpointed so every eigensolve iteration joins a pinned
     4096-row table instead of re-deriving the scan."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key in _GRAM_MEMO:
-        return _GRAM_MEMO[memo_key]
     emb = load_table(spark, sf_dir, "embeddings")
     xi = emb.select(
         F.expr(
@@ -113,10 +108,7 @@ def _covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = prods.groupBy("i", "j").agg(
         F.expr("cast(round(sum(p) / max(n)) as bigint)").alias("g")
     )
-    g = g.localCheckpoint(eager=True)
-    prune_memo(_GRAM_MEMO, memo_key[0])
-    _GRAM_MEMO[memo_key] = g
-    return g
+    return g.localCheckpoint(eager=True)
 
 
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -715,13 +707,6 @@ _LR_OUT = """
 """
 
 
-# Trained (features, beta) per (session, corpus): the IRLS walk is a
-# model-training artifact like the kmeans centroids / IVF quantizer —
-# trained once per session, consumed live by every evaluation pass
-# (accuracy report, calibration report).
-_BETA_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _logreg_feats(docs: DataFrame) -> DataFrame:
     """The (y, x1_4, x2_4) feature projection of the documents table —
     a pure stateless row expression, shared by `_trained_logreg` and
@@ -743,15 +728,16 @@ def _logreg_feats(docs: DataFrame) -> DataFrame:
     )
 
 
+# The IRLS walk is a model-training artifact like the kmeans centroids /
+# IVF quantizer — trained once per session, consumed live by every
+# evaluation pass (accuracy report, calibration report).
+@session_memo
 def _trained_logreg(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(feature table, 1-row β table) after LOGREG_ITERS IRLS steps;
-    both pinned (localCheckpoint) and memoized per (session, corpus)."""
+    both pinned (localCheckpoint)."""
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BETA_MEMO:
-        return _BETA_MEMO[key]
     docs = load_table(spark, sf_dir, "documents")
     feats = _logreg_feats(docs).localCheckpoint(eager=True)
 
@@ -772,9 +758,7 @@ def _trained_logreg(
         beta = sa.selectExpr(
             *[f"{e} AS {n}" for n, e in _LR_STAGE_B]
         ).localCheckpoint(eager=True)
-    prune_memo(_BETA_MEMO, key[0])
-    _BETA_MEMO[key] = (feats, beta)
-    return _BETA_MEMO[key]
+    return feats, beta
 
 
 def logreg_irls_doc_model(spark: SparkSession, sf_dir: str) -> DataFrame:

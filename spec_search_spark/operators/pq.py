@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import prune_memo
+from spec_search_spark.session import session_memo
 from spec_search_spark.functions.vector import l2_squared, l2_squared_sql
 
 M_SUB = 8          # subspaces
@@ -116,25 +116,18 @@ def _update_codebook(assigned: DataFrame, prev: DataFrame) -> DataFrame:
     )
 
 
-_BOOK_MEMO: dict = {}
-
-
+@session_memo
 def _trained_book(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(sv, codebook) with the TRAINING LOOP memoized per (session,
     corpus) — the kmeans.py/similarity.py session-memo pattern. Only
     the model is memoized; encode stays a live one-pass plan so
     consumers keep the broadcast-join shape the plan audit pins."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _BOOK_MEMO:
-        return _BOOK_MEMO[key]
     sv = _subvecs(spark, sf_dir).localCheckpoint(eager=True)
     book = _init_codebook(sv).localCheckpoint(eager=True)
     for _ in range(N_PQ_ITERS):
         assigned = _assign_codes(sv, book)
         book = _update_codebook(assigned, book).localCheckpoint(eager=True)
-    prune_memo(_BOOK_MEMO, key[0])
-    _BOOK_MEMO[key] = (sv, book)
-    return _BOOK_MEMO[key]
+    return sv, book
 
 
 def _trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table, register_views
-from spec_search_spark.session import tune
+from spec_search_spark.session import session_memo, tune
 
 
 def scalar_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -104,9 +104,7 @@ GROUP BY l_returnflag
 """
 
 
-_CENTS_VC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _flag_cents_vc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (l_returnflag, cents, _c) count table over
     l_extendedprice — the shared index-shaped intermediate behind
@@ -116,21 +114,15 @@ def _flag_cents_vc(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup-postings policy: an artifact many later queries re-read must
     degrade to a disk read on eviction, never a recompute)."""
     from spec_search_spark.operators.dedup import _materialize
-    from spec_search_spark.session import prune_memo
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CENTS_VC_MEMO:
-        li = load_table(spark, sf_dir, "lineitem")
-        cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-        vc = _materialize(
-            li.select("l_returnflag", cents.alias("cents"))
-            .groupBy("l_returnflag", "cents")
-            .agg(F.count(F.lit(1)).alias("_c")),
-            durable=True,
-        )
-        prune_memo(_CENTS_VC_MEMO, key[0])
-        _CENTS_VC_MEMO[key] = vc
-    return _CENTS_VC_MEMO[key]
+    li = load_table(spark, sf_dir, "lineitem")
+    cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
+    return _materialize(
+        li.select("l_returnflag", cents.alias("cents"))
+        .groupBy("l_returnflag", "cents")
+        .agg(F.count(F.lit(1)).alias("_c")),
+        durable=True,
+    )
 
 
 def _percentiles_rank_walk(

@@ -50,7 +50,7 @@ from spec_search_spark.functions.vector import (
 from spec_search_spark.operators.text_analysis import CHUNK_OVERLAP, CHUNK_SIZE
 from spec_search_spark.functions.text import chunk_at, chunk_fixed_sql, chunk_indices
 from spec_search_spark.functions.sheets import composite_id
-from spec_search_spark.session import spread, tune
+from spec_search_spark.session import session_memo, spread, tune
 
 TOP_K = 10          # reference default n_results (app.py:50-52)
 N_PROBES = 5
@@ -696,9 +696,7 @@ def build_index_df(docs: DataFrame, embed_udf=None) -> DataFrame:
     )
 
 
-_INDEX: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def build_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V1: documents → empty-filter → chunk → embed → composite id.
 
@@ -715,12 +713,9 @@ def build_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what the S5/S7 index-write path does.
     """
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _INDEX:
-        _INDEX[key] = build_index_df(
-            load_table(spark, sf_dir, "documents")
-        ).localCheckpoint(eager=True)
-    return _INDEX[key]
+    return build_index_df(load_table(spark, sf_dir, "documents")).localCheckpoint(
+        eager=True
+    )
 
 
 def vector_index_build_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import prune_memo
+from spec_search_spark.session import session_memo
 from spec_search_spark.functions.text import (
     FP_BASE,
     FP_MOD,
@@ -66,14 +66,12 @@ def _tokens(text: Column) -> Column:
 # window fingerprint: (P-1)*COMBINE_B + (P-1) < 2^52 — no int64 overflow
 COMBINE_B = 1_000_003
 
-# Memoized duplicated-window postings per (session, corpus): the hit
-# table is an index-shaped artifact (the span-dedup analog of dedup.py's
-# minhash postings memo) — `dup_spans_merged` and `span_dup_ratio` both
-# consume it, and recomputing the tokenize→hash→fingerprint→join
-# pipeline per caller doubled the pair's steady-state cost.
-_HITS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# Memoized: the hit table is an index-shaped artifact (the span-dedup
+# analog of dedup.py's minhash postings memo) — `dup_spans_merged` and
+# `span_dup_ratio` both consume it, and recomputing the tokenize→hash→
+# fingerprint→join pipeline per caller doubled the pair's steady-state
+# cost.
+@session_memo
 def _window_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, pos) for every K-token window whose fingerprint occurs
     in ≥2 distinct documents. Positions are 0-based token offsets.
@@ -88,9 +86,6 @@ def _window_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow plus a concat_ws per position — measured 2.5s → ~1s at
     sf0.1.) Tokens are atomic units, so the token-hash fold cannot
     confuse regroupings the string concat would distinguish."""
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key in _HITS_MEMO:
-        return _HITS_MEMO[memo_key]
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = docs.select(
         "doc_id", F.posexplode(_tokens(F.col("text"))).alias("pos", "tok")
@@ -119,12 +114,7 @@ def _window_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from spec_search_spark.operators.dedup import _materialize
 
-    hits = _materialize(
-        wins.join(dup, "wh").select("doc_id", "pos"), durable=True
-    )
-    prune_memo(_HITS_MEMO, memo_key[0])
-    _HITS_MEMO[memo_key] = hits
-    return hits
+    return _materialize(wins.join(dup, "wh").select("doc_id", "pos"), durable=True)
 
 
 def dup_spans_merged(spark: SparkSession, sf_dir: str) -> DataFrame:

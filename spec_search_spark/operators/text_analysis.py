@@ -35,7 +35,7 @@ from spec_search_spark.functions.text import (
     tokens,
 )
 from spec_search_spark.functions.text import STOPWORDS
-from spec_search_spark.session import local_df, spread, tune
+from spec_search_spark.session import local_df, session_memo, spread, tune
 
 CHUNK_SIZE = 120  # scaled-down from the reference's 1000 so the ~300-char
 CHUNK_OVERLAP = 30  # test docs actually produce multi-chunk output
@@ -609,31 +609,29 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: (applicationId, sf_dir) -> trained merge list — bpe_train_merges and
-#: bpe_segment_stats share one training run per session+corpus
-_BPE_MEMO: dict = {}
-
-
 def _bpe_trained_merges(
     spark: SparkSession, sf_dir: str
 ) -> list[tuple[int, str, str, int]]:
-    """Train and memoize the merge list [(idx, raw_pair, rendered, n)];
-    raw_pair keeps the placeholder chars so the merges can be APPLIED
-    (bpe_segment_stats), rendered is the printable form."""
+    """The trained merge list [(idx, raw_pair, rendered, n)] —
+    bpe_train_merges and bpe_segment_stats share one training run per
+    session+corpus. raw_pair keeps the placeholder chars so the merges
+    can be APPLIED (bpe_segment_stats), rendered is the printable form."""
     import os
 
-    from spec_search_spark.session import prune_memo
-
-    tune(spark)
+    # the memo key includes the resolved threshold: flipping
+    # SPARK_GRAFT_BPE_DRIVER_MAX mid-session must not return the other
+    # path's memoized merge list
     driver_max = int(
         os.environ.get("SPARK_GRAFT_BPE_DRIVER_MAX", str(BPE_DRIVER_VOCAB_MAX))
     )
-    # memo key includes the resolved threshold (ADVICE r7): flipping
-    # SPARK_GRAFT_BPE_DRIVER_MAX mid-session must not return the other
-    # path's memoized merge list
-    key = (spark.sparkContext.applicationId, sf_dir, driver_max)
-    if key in _BPE_MEMO:
-        return _BPE_MEMO[key]
+    return _bpe_train(spark, sf_dir, driver_max)
+
+
+@session_memo
+def _bpe_train(
+    spark: SparkSession, sf_dir: str, driver_max: int
+) -> list[tuple[int, str, str, int]]:
+    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("text")
     toks = docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
     wc = (
@@ -644,12 +642,8 @@ def _bpe_trained_merges(
     )
     if wc.count() <= driver_max:
         items = [(r["m"], int(r["c"])) for r in wc.collect()]
-        merges = _bpe_greedy_loop(items, BPE_TRAIN_MERGES)
-    else:
-        merges = _bpe_distributed_loop(wc, BPE_TRAIN_MERGES)
-    prune_memo(_BPE_MEMO, key[0])
-    _BPE_MEMO[key] = merges
-    return merges
+        return _bpe_greedy_loop(items, BPE_TRAIN_MERGES)
+    return _bpe_distributed_loop(wc, BPE_TRAIN_MERGES)
 
 
 def bpe_segment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

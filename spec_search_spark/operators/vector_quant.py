@@ -27,7 +27,7 @@ from pyspark.sql.window import Window as W
 from spec_search_spark.catalog import load_table
 from spec_search_spark.functions.vector import cosine_similarity, cosine_similarity_sql
 from spec_search_spark.operators.similarity import N_PROBES, TOP_K
-from spec_search_spark.session import tune
+from spec_search_spark.session import session_memo, tune
 
 Q_MAX = 127  # int8 range
 CAND = 50  # approx-scored candidate pool per probe, re-ranked exactly
@@ -113,25 +113,20 @@ FROM q
 """
 
 
+@session_memo
 def _quantized_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quantized corpus is an index-shaped intermediate (like
     dedup's hashed postings / ivf's trained centroids): build it once
     per (session, corpus) and cache — the SQ8 code build is a pure map,
     but its HOF projections carry a large codegen cost that shouldn't
     be re-paid by every reader."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _QUANTIZED:
-        q = (
-            _quantized(load_table(spark, sf_dir, "embeddings"))
-            .select("vec_id", "scale", "qv")  # narrow: never cache fp arrays
-            .cache()
-        )
-        q.count()
-        _QUANTIZED[key] = q
-    return _QUANTIZED[key]
-
-
-_QUANTIZED: dict[tuple[str, str], DataFrame] = {}
+    q = (
+        _quantized(load_table(spark, sf_dir, "embeddings"))
+        .select("vec_id", "scale", "qv")  # narrow: never cache fp arrays
+        .cache()
+    )
+    q.count()
+    return q
 
 
 def ann_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

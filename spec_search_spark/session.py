@@ -6,10 +6,31 @@ cores for local runs (a cluster deployment would size to ~2-3× total
 cores and rely on AQE coalescing), Arrow for every Python<->JVM batch
 transfer, UTC session timezone so results are comparable across
 engines.
+
+Session memo. Artifacts built once and read many times (indexes,
+trained models, pinned intermediates) go through :func:`session_memo`
+and live in the single registry ``_MEMO``:
+
+- key: ``(applicationId, builder's qualified name, sf_dir, *extra)``;
+  every key is a tuple that begins with the applicationId;
+- fingerprint: each entry carries the sorted ``(name, size, mtime_ns)``
+  of ``sf_dir``'s entries, and a hit whose fingerprint no longer
+  matches is rebuilt and replaces the old entry, so a rewritten input
+  file is never served from a stale artifact;
+- stopped sessions: on insert, entries under another applicationId
+  are dropped. A local process has one live session at a time and
+  applicationIds are never reused, so holding them would only pin
+  checkpoint blocks and cached plans for the process lifetime;
+- cap: on insert, each builder keeps at most ``MEMO_CAP`` entries,
+  the oldest going first.
+
+How an artifact is stored (localCheckpoint, cache, durable persist)
+stays the builder's choice.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -163,15 +184,49 @@ def local_df(spark: SparkSession, rows, schema):
     return spark.createDataFrame(pdf, schema)
 
 
-def prune_memo(memo: dict, app_id: str, cap: int = 8) -> None:
-    """Evict module-level memo entries from other (stopped) sessions and
-    cap per-memo size. Memo keys are (applicationId, ...) tuples; a local
-    process has one live session at a time and applicationIds are never
-    reused, so any entry under a different app id belongs to a stopped
-    session — holding it would pin localCheckpoint blocks and cached
-    plans for process lifetime (a slow leak in long-lived multi-corpus
-    harness processes). Call BEFORE inserting a new entry."""
-    for k in [k for k in memo if k[0] != app_id]:
-        memo.pop(k, None)
-    while len(memo) >= cap:
-        memo.pop(next(iter(memo)), None)
+MEMO_CAP = 8
+
+_MEMO: dict[tuple, tuple] = {}
+
+
+def _fingerprint(sf_dir: str):
+    """Sorted (name, size, mtime_ns) of ``sf_dir``'s entries; None when
+    it cannot be listed."""
+    try:
+        with os.scandir(sf_dir) as it:
+            stats = [(e.name, e.stat()) for e in it]
+    except OSError:
+        return None
+    return sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats)
+
+
+def session_memo(build):
+    """Memoize ``build(spark, sf_dir, *extra)`` in the session registry
+    (policy in the module docstring). ``cache_clear()`` drops the
+    builder's entries, as on ``functools.lru_cache``."""
+    name = f"{build.__module__}.{build.__qualname__}"
+
+    @functools.wraps(build)
+    def memoized(spark: SparkSession, sf_dir: str, *extra):
+        app = spark.sparkContext.applicationId
+        key = (app, name, sf_dir, *extra)
+        fp = _fingerprint(sf_dir)
+        hit = _MEMO.get(key)
+        if hit is not None and hit[0] == fp:
+            return hit[1]
+        value = build(spark, sf_dir, *extra)
+        _MEMO.pop(key, None)
+        for k in [k for k in _MEMO if k[0] != app]:
+            del _MEMO[k]
+        mine = [k for k in _MEMO if k[1] == name]
+        for k in mine[: max(0, len(mine) - MEMO_CAP + 1)]:
+            del _MEMO[k]
+        _MEMO[key] = (fp, value)
+        return value
+
+    def cache_clear() -> None:
+        for k in [k for k in _MEMO if k[1] == name]:
+            del _MEMO[k]
+
+    memoized.cache_clear = cache_clear
+    return memoized

@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from spec_search_spark.catalog import load_table
+from spec_search_spark.session import session_memo, tune
+
 FORMATS = ("parquet", "orc", "csv", "json")
 
 
@@ -116,7 +119,17 @@ _FW_WIDTHS = [
     ("price_cents", 14),
 ]
 
-_FW_DIRS: dict[tuple[str, str], str] = {}
+@session_memo
+def _fw_dir(spark: SparkSession, sf_dir: str) -> str:
+    path = os.path.join(tempfile.mkdtemp(prefix="spec_search_fw_"), "orders_fw")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("price_cents"),
+    )
+    write_fixed_width(orders, path, _FW_WIDTHS)
+    return path
 
 
 def fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,24 +148,10 @@ def fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed tables. The final aggregate is partial+final on the
     3-value status column.
     """
-    from spec_search_spark.catalog import load_table
-    from spec_search_spark.session import tune
-
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FW_DIRS:
-        path = os.path.join(tempfile.mkdtemp(prefix="spec_search_fw_"), "orders_fw")
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias("price_cents"),
-        )
-        write_fixed_width(orders, path, _FW_WIDTHS)
-        _FW_DIRS[key] = path
     parsed = read_fixed_width(
         spark,
-        _FW_DIRS[key],
+        _fw_dir(spark, sf_dir),
         _FW_WIDTHS,
         types={"o_orderkey": "bigint", "o_custkey": "bigint", "price_cents": "bigint"},
     )
@@ -178,7 +177,13 @@ GROUP BY o_orderstatus
 """
 
 
-_XML_DIRS: dict[tuple[str, str], str] = {}
+@session_memo
+def _xml_dir(spark: SparkSession, sf_dir: str) -> str:
+    path = os.path.join(tempfile.mkdtemp(prefix="spec_search_xml_"), "nation_xml")
+    load_table(spark, sf_dir, "nation").write.format("xml").option(
+        "rootTag", "nations"
+    ).option("rowTag", "nation").save(path)
+    return path
 
 
 def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,17 +195,7 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     csv/json/fixed-width.
 
     Output: (r_name, n_nations, name_chars)."""
-    from spec_search_spark.catalog import load_table
-    from spec_search_spark.session import tune
-
     tune(spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _XML_DIRS:
-        path = os.path.join(tempfile.mkdtemp(prefix="spec_search_xml_"), "nation_xml")
-        load_table(spark, sf_dir, "nation").write.format("xml").option(
-            "rootTag", "nations"
-        ).option("rowTag", "nation").save(path)
-        _XML_DIRS[key] = path
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.LongType()),
@@ -212,7 +207,7 @@ def xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.format("xml")
         .option("rowTag", "nation")
         .schema(schema)
-        .load(_XML_DIRS[key])
+        .load(_xml_dir(spark, sf_dir))
     )
     region = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     return (

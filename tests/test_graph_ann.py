@@ -283,7 +283,7 @@ def test_beats_ivf_at_equal_budget_sf01(spark):
         r["cluster"]: r["n"]
         for r in index.groupBy("cluster").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    probed = _probe_assignments(spark, sf01, centroids).collect()
+    probed = _probe_assignments(spark, sf01).collect()
     ivf_budget: dict[int, int] = {}
     for r in probed:
         ivf_budget[r["probe_id"]] = ivf_budget.get(r["probe_id"], 0) + sizes[r["cluster"]]

@@ -211,12 +211,14 @@ def test_image_stats_match_direct_decode(spark, sf_dir):
 def test_covariance_memo_is_stable_and_symmetric(spark, sf_dir):
     # the memoized Gram artifact: repeat calls return the pinned table,
     # and the matrix is symmetric with nonnegative diagonal (variance)
-    from spec_search_spark.operators.ml import _GRAM_MEMO, _covariance_matrix
+    from spec_search_spark.operators.ml import _covariance_matrix
+    from spec_search_spark.session import _MEMO
 
     g1 = _covariance_matrix(spark, sf_dir)
     g2 = _covariance_matrix(spark, sf_dir)
     assert g2 is g1, "second call must hit the memo, not rebuild"
-    assert (spark.sparkContext.applicationId, sf_dir) in _GRAM_MEMO
+    name = f"{_covariance_matrix.__module__}.{_covariance_matrix.__qualname__}"
+    assert (spark.sparkContext.applicationId, name, sf_dir) in _MEMO
     rows = {(r["i"], r["j"]): r["g"] for r in g1.collect()}
     assert len(rows) == 64 * 64
     for (i, j), v in rows.items():

@@ -133,20 +133,20 @@ def test_bpe_distributed_path_equals_driver_path(spark, sf_dir):
     pin it to the default driver-side path's result."""
     from spec_search_spark.operators.text_analysis import bpe_train_merges
 
-    from spec_search_spark.operators.text_analysis import _BPE_MEMO
+    from spec_search_spark.operators.text_analysis import _bpe_train
 
     default = [tuple(r) for r in bpe_train_merges(spark, sf_dir).collect()]
     prev = os.environ.get("SPARK_GRAFT_BPE_DRIVER_MAX")
     try:
         os.environ["SPARK_GRAFT_BPE_DRIVER_MAX"] = "0"
-        _BPE_MEMO.clear()  # else the memoized driver-path result returns
+        _bpe_train.cache_clear()  # else the memoized driver-path result returns
         forced = [tuple(r) for r in bpe_train_merges(spark, sf_dir).collect()]
     finally:
         if prev is None:
             os.environ.pop("SPARK_GRAFT_BPE_DRIVER_MAX", None)
         else:
             os.environ["SPARK_GRAFT_BPE_DRIVER_MAX"] = prev
-        _BPE_MEMO.clear()  # drop the distributed-path memo too
+        _bpe_train.cache_clear()  # drop the distributed-path memo too
     assert forced == default
     assert len(default) > 0
 

@@ -126,11 +126,11 @@ def test_vocab_shuffle_fallback_identical(spark, sf_dir, monkeypatch):
 
     broadcast_rows = rows(dedup.hashed_shingle_postings(spark, sf_dir))
     monkeypatch.setattr(dedup, "BROADCAST_VOCAB_MAX", 0)
-    dedup._HASHED_POSTINGS.clear()  # bust the session memo
+    dedup.hashed_shingle_postings.cache_clear()  # bust the session memo
     try:
         shuffle_rows = rows(dedup.hashed_shingle_postings(spark, sf_dir))
     finally:
-        dedup._HASHED_POSTINGS.clear()
+        dedup.hashed_shingle_postings.cache_clear()
     assert shuffle_rows == broadcast_rows
 
 

@@ -62,13 +62,15 @@ def test_window_hits_memo_is_stable_and_per_corpus(spark, sf_dir):
     # repeated calls (same session+corpus key) — downstream consumers
     # (dup_spans_merged, span_dup_ratio) share it, so instability here
     # would silently desynchronize the pair
-    from spec_search_spark.operators.span_dedup import _HITS_MEMO, _window_hits
+    from spec_search_spark.operators.span_dedup import _window_hits
+    from spec_search_spark.session import _MEMO
 
     h1 = _window_hits(spark, sf_dir)
     h2 = _window_hits(spark, sf_dir)
     assert h2 is h1, "second call must hit the memo, not rebuild"
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in _HITS_MEMO
+    name = f"{_window_hits.__module__}.{_window_hits.__qualname__}"
+    key = (spark.sparkContext.applicationId, name, sf_dir)
+    assert key in _MEMO
     n1 = h1.count()
     assert n1 > 0
     # the artifact feeds both consumers: their doc coverage must agree
