@@ -14,8 +14,9 @@ Scale: the fixture builder is a test harness (driver-side, bounded by
 the local corpus); the READ path is the engine part — ``read_sheets``,
 Spark's native JSON scan (the store coalesced to ~cores partitions,
 file-level pruning on ``_metadata.file_name``), then a posexplode
-unpivot identical to cell_grid_unpivot. The stream slot still reads
-through the ``sheets`` Python DataSource's stream reader.
+unpivot identical to cell_grid_unpivot. The stream slot reads through
+``read_sheets_stream``, Spark's file stream source with the same
+decode.
 """
 
 from __future__ import annotations
@@ -40,17 +41,20 @@ from spec_search_spark.sources.sheets_source import (
     SHEET_SUFFIX,
     read_records,
     read_sheets,
-    register,
+    read_sheets_stream,
 )
 
 TAB_NAME = "data"
 
 
-def build_sheets_fixture(sf_dir: str, out_dir: str) -> str:
+def _write_fixture(
+    sf_dir: str, out_dir: str, prefix: str, header: list[str] | None = None
+) -> str:
     """Materialize documents.parquet as a directory of sheet JSON files
-    (one per CELLS_PER_FILE docs, grid layout identical to
-    sheets_pipeline.build_grid). Deterministic: same input → same
-    bytes, so rebuilding is idempotent."""
+    ``{prefix}_{fid:03d}`` (one per CELLS_PER_FILE docs, grid layout
+    identical to sheets_pipeline.build_grid), each tab led by ``header``
+    when one is given. Deterministic: same input → same bytes, so
+    rebuilding is idempotent."""
     import pyarrow.parquet as pq
 
     t = pq.read_table(
@@ -65,8 +69,9 @@ def build_sheets_fixture(sf_dir: str, out_dir: str) -> str:
         files.setdefault(fid, {}).setdefault(row, {})[col] = text
     os.makedirs(out_dir, exist_ok=True)
     for fid, rows in sorted(files.items()):
-        name = f"sheet_{fid:03d}"
-        values = [
+        name = f"{prefix}_{fid:03d}"
+        values = [header] if header else []
+        values += [
             [rows[r].get(c) for c in range(max(rows[r]) + 1)]
             for r in range(max(rows) + 1)
         ]
@@ -80,6 +85,11 @@ def build_sheets_fixture(sf_dir: str, out_dir: str) -> str:
         with open(os.path.join(out_dir, f"{name}{SHEET_SUFFIX}"), "w") as fh:
             json.dump(doc, fh)
     return out_dir
+
+
+def build_sheets_fixture(sf_dir: str, out_dir: str) -> str:
+    """The connector's sheet store: ``sheet_NNN`` files, no header."""
+    return _write_fixture(sf_dir, out_dir, "sheet")
 
 
 def fixture_dir_for(sf_dir: str) -> str:
@@ -124,36 +134,8 @@ def build_records_fixture(sf_dir: str, out_dir: str) -> str:
     carries a HEADER row of fixed column names c00..c29 ahead of the
     data rows — the ``get_all_records`` shape
     (`/root/reference/project_search.py:45-49`)."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
-    )
-    docs = sorted(zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()))
     header = [f"c{c:02d}" for c in range(COLS_PER_ROW)]
-    files: dict[int, dict[int, dict[int, str]]] = {}
-    for doc_id, text in docs:
-        fid = int(doc_id) // CELLS_PER_FILE
-        row = (int(doc_id) % CELLS_PER_FILE) // COLS_PER_ROW
-        col = int(doc_id) % COLS_PER_ROW
-        files.setdefault(fid, {}).setdefault(row, {})[col] = text
-    os.makedirs(out_dir, exist_ok=True)
-    for fid, rows in sorted(files.items()):
-        name = f"records_{fid:03d}"
-        values = [header] + [
-            [rows[r].get(c) for c in range(max(rows[r]) + 1)]
-            for r in range(max(rows) + 1)
-        ]
-        doc = {
-            "file_id": fid,
-            "file_name": name,
-            "tabs": [
-                {"sheet_id": 100 + fid, "tab_name": TAB_NAME, "values": values}
-            ],
-        }
-        with open(os.path.join(out_dir, f"{name}{SHEET_SUFFIX}"), "w") as fh:
-            json.dump(doc, fh)
-    return out_dir
+    return _write_fixture(sf_dir, out_dir, "records", header)
 
 
 def sheets_records_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -205,16 +187,14 @@ WHERE text IS NOT NULL AND text <> ''
 
 
 STREAM_WAVES_TARGET = 8  # feed arrival pacing: the correctness property
-# under test is that offset planning neither drops nor replays a file
+# under test is that the stream source neither drops nor replays a file
 # across SEVERAL distinct arrival epochs — a property of the epoch
 # machinery, not of the epoch COUNT. r8 paced 2 files/wave, so the wave
-# count grew with the fixture (42 serial micro-batches at sf0.1) and
-# the slot spent 15.5s in pure per-epoch overhead (~0.35s each:
-# Python-DataSource offset planning + partition planning + worker
-# round-trips per batch — the irreducible per-micro-batch floor of a
-# Python streaming source). Pacing a FIXED number of waves keeps the
+# count grew with the fixture (42 serial micro-batches at sf0.1), and
+# every micro-batch pays a fixed floor (offset and commit log writes,
+# file listing, one job). Pacing a FIXED number of waves keeps the
 # multi-epoch proof at every scale factor with scale-invariant drain
-# time (~3s at sf0.1).
+# time.
 
 
 def feed_files_in_waves(fixture: str, feed: str, q, per_wave: int) -> int:
@@ -228,40 +208,36 @@ def feed_files_in_waves(fixture: str, feed: str, q, per_wave: int) -> int:
     waves = 0
     for i in range(0, len(files), per_wave):
         for f in files[i : i + per_wave]:
-            shutil.copy(os.path.join(fixture, f), os.path.join(feed, f))
+            # copy under a hidden name, then rename: a running query
+            # never lists a half-copied file
+            tmp = os.path.join(feed, f".{f}.tmp")
+            shutil.copy(os.path.join(fixture, f), tmp)
+            os.replace(tmp, os.path.join(feed, f))
         q.processAllAvailable()
         waves += 1
     return waves
 
 
 def sheets_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom DataSource's streaming READ path: readStream over a
-    feed directory that files ARRIVE in (STREAM_WAVES_TARGET waves,
-    stream drained between waves — see the pacing note at
+    """The sheet store's streaming READ path: ``read_sheets_stream``
+    over a feed directory that files ARRIVE in (STREAM_WAVES_TARGET
+    waves, stream drained between waves — see the pacing note at
     STREAM_WAVES_TARGET), then folded to per-file grid statistics.
 
     Oracle: the fixture layout is deterministic arithmetic over
     `documents` (same placement as sheets_source_unpivot), so DuckDB
     recomputes rows-per-file and non-empty-cells-per-file without the
     connector. Equality proves every file was ingested exactly once
-    across the arrival waves — offset planning neither drops nor
-    replays a file."""
+    across the arrival waves — the source neither drops nor replays a
+    file."""
     import tempfile as _tf
     import uuid as _uuid
 
     tune(spark)
     fixture = build_sheets_fixture(sf_dir, fixture_dir_for(sf_dir))
-    register(spark)
     name = f"sheets_stream_{_uuid.uuid4().hex[:8]}"
     feed = _tf.mkdtemp(prefix="sheets_feed_")
-    # bundle: pack each micro-batch's new files into ≤cores partitions
-    # (each task through the Python source pays a scheduler + worker
-    # round trip)
-    stream = (
-        spark.readStream.format("sheets")
-        .option("bundle", str(spark.sparkContext.defaultParallelism))
-        .load(feed)
-    )
+    stream = read_sheets_stream(spark, feed)
     ckpt = _tf.mkdtemp(prefix="ckpt_sheets_src_")
     q = (
         stream.writeStream.outputMode("append")

@@ -33,8 +33,10 @@ Write — the ``sheets`` Python DataSource:
 grid row shape and writes the fixture layout back: executors write
 temp JSON parts (parallel, cell-count work), commit() merges parts
 into per-file documents on the driver (serial work ∝ file count, not
-cell count) and is atomic-ish: parts land in a temp dir and final
-files replace targets only in commit.
+cell count) and is atomic per file: parts land in a temp dir, and each
+final document is written to a hidden temp name beside its target and
+``os.replace``d onto it in commit, so a crash mid-write leaves the old
+file whole (Spark's listing skips names starting with ``.``).
 
 Streaming write — ``df.writeStream.format("sheets")`` upserts each
 micro-batch into the sheet files at row granularity (overlay), with
@@ -42,9 +44,24 @@ per-epoch commit markers so a replayed batchId after restart is a
 no-op (the vestigial `/index-file` webhook of `app.py:252-259` as a
 real incremental sink).
 
-Streaming read — ``spark.readStream.format("sheets")``, the
-SheetsStreamReader: offsets are positions in the sorted file listing,
-each micro-batch decodes its new files into Arrow batches.
+Streaming read — ``read_sheets_stream`` is Spark's file stream source
+over the ``*.sheet.json`` files of one directory, with the same schema,
+options and grid projection as ``read_sheets``. A file is new by its
+path: the source records every path it has delivered in the
+checkpoint's file log, so arrival order, name order and restarts
+neither drop nor replay a file. A feed directory that does not exist
+yet is an empty feed: the reader creates it, because Spark refuses a
+missing stream directory, and the glob path ``{dir}/*.sheet.json``
+that it would accept lists every file as its own root, which past 32
+files is a Spark listing job on every trigger (5.7 s against 1.9 s for
+the sf0.1 stream slot on 4 vCPUs). ``maxFileAge`` is pinned far
+beyond any real feed's age: with Spark's 7-day default a file whose
+mtime is older than the newest seen file by more than that is skipped
+without a trace, and a sheet copied in with its original mtime (a
+synced folder, ``cp -p``) can be months older than the feed's newest.
+Both readers pass ``ignoreMissingFiles``: a file deleted between the
+listing and the read is skipped, not fatal (per read, not per session,
+so a missing parquet file elsewhere still fails loudly).
 """
 
 from __future__ import annotations
@@ -59,10 +76,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
-    InputPartition,
     WriterCommitMessage,
 )
 from pyspark.sql.types import (
@@ -95,18 +110,19 @@ FILE_SCHEMA = (
 
 _RANGE_RE = re.compile(r"^([A-Z]+)(\d+):([A-Z]+)(\d+)$")
 
-#: byte cap per packed scan partition: read_sheets coalesces a store to
-#: ~cores partitions, and the stream reader's option("bundle", N) packs
-#: new files into ~N partitions, ONLY while a partition stays under
-#: this many bytes — a store far bigger than N × cap therefore splits
-#: by size (≈ total_bytes / cap partitions), not into N giant serial
-#: reads.
-_BUNDLE_BYTES_CAP = 128 * 1024 * 1024
+#: byte cap per partition of a full-store ``read_sheets``: the store is
+#: coalesced to ~cores partitions unless that would put more than this
+#: many bytes into one, so a store far bigger than cores × cap splits
+#: by size (≈ total_bytes / cap partitions), not into a few giant
+#: serial reads.
+_PARTITION_BYTES_CAP = 128 * 1024 * 1024
 
-#: rows per emitted Arrow batch (bounds executor memory for bundles of
-#: many files and for one huge file; a tiny file still emits one small
-#: batch).
-_ARROW_BATCH_ROWS = 10_000
+#: the stream source's ``maxFileAge``: ~100 years, so no arrival is
+#: ever too old to be read (see the module docstring).
+_STREAM_MAX_FILE_AGE = "36500d"
+
+#: reader options shared by the batch and the stream scan
+_JSON_OPTIONS = {"multiLine": True, "mode": "FAILFAST", "ignoreMissingFiles": True}
 
 
 def _col_to_idx(letters: str) -> int:
@@ -133,6 +149,19 @@ def _list_sheet_files(path: str) -> list[str]:
     )
 
 
+def _grid(files: DataFrame) -> DataFrame:
+    """Sheet documents → grid rows: ``explode(tabs)``, then
+    ``posexplode(values)`` — the one projection both readers share."""
+    tabs = files.select("file_id", "file_name", F.explode("tabs").alias("tab"))
+    return tabs.select(
+        "file_id",
+        "file_name",
+        F.col("tab.sheet_id").alias("sheet_id"),
+        F.col("tab.tab_name").alias("tab_name"),
+        F.posexplode("tab.values").alias("row_idx", "cells"),
+    )
+
+
 def read_sheets(
     spark: SparkSession,
     path: str,
@@ -143,8 +172,7 @@ def read_sheets(
     file ``{sheet}.sheet.json``), optionally cut to an A1 ``range_``."""
     files = (
         spark.read.schema(FILE_SCHEMA)
-        .option("multiLine", True)
-        .option("mode", "FAILFAST")
+        .options(**_JSON_OPTIONS)
         .option("pathGlobFilter", f"*{SHEET_SUFFIX}")
         .json(path)
     )
@@ -159,21 +187,28 @@ def read_sheets(
         # scan already holds.
         size = files._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         par = spark.sparkContext.defaultParallelism
-        files = files.coalesce(max(par, -(-size // _BUNDLE_BYTES_CAP)))
-    tabs = files.select("file_id", "file_name", F.explode("tabs").alias("tab"))
-    grid = tabs.select(
-        "file_id",
-        "file_name",
-        F.col("tab.sheet_id").alias("sheet_id"),
-        F.col("tab.tab_name").alias("tab_name"),
-        F.posexplode("tab.values").alias("row_idx", "cells"),
-    )
+        files = files.coalesce(max(par, -(-size // _PARTITION_BYTES_CAP)))
+    grid = _grid(files)
     if range_ is None:
         return grid
     r_lo, r_hi, c_lo, c_hi = _parse_range(range_)
     return grid.filter(F.col("row_idx").between(r_lo, r_hi)).withColumn(
         "cells", F.slice("cells", c_lo + 1, c_hi - c_lo + 1)
     )
+
+
+def read_sheets_stream(spark: SparkSession, path: str) -> DataFrame:
+    """Streaming grid rows of the sheet files that arrive under
+    ``path``: each file once, in the micro-batch after it appears."""
+    os.makedirs(path, exist_ok=True)
+    files = (
+        spark.readStream.schema(FILE_SCHEMA)
+        .options(**_JSON_OPTIONS)
+        .option("maxFileAge", _STREAM_MAX_FILE_AGE)
+        .option("pathGlobFilter", f"*{SHEET_SUFFIX}")
+        .json(path)
+    )
+    return _grid(files)
 
 
 def read_records(spark: SparkSession, path: str) -> DataFrame:
@@ -192,143 +227,6 @@ def read_records(spark: SparkSession, path: str) -> DataFrame:
             for j, name in enumerate(header)
         )
     )
-
-
-def _arrow_grid_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            pa.field("file_id", pa.int64()),
-            pa.field("file_name", pa.string()),
-            pa.field("sheet_id", pa.int64()),
-            pa.field("tab_name", pa.string()),
-            pa.field("row_idx", pa.int32()),
-            pa.field("cells", pa.list_(pa.string())),
-        ]
-    )
-
-
-def _grid_arrow_batches(paths):
-    """Grid rows for a list of sheet files as Arrow RecordBatches
-    (guide §4.2: columnar batches across the Python→JVM boundary, not
-    per-row pickled tuples), flushed every _ARROW_BATCH_ROWS rows —
-    also in the middle of a file, so one huge sheet stays bounded."""
-    import pyarrow as pa
-
-    schema = _arrow_grid_schema()
-    cols: list[list] = [[] for _ in schema]
-
-    def flush():
-        batch = pa.RecordBatch.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-            schema=schema,
-        )
-        for c in cols:
-            c.clear()
-        return batch
-
-    for path in paths:
-        with open(path) as fh:
-            doc = json.load(fh)
-        fid, fname = int(doc["file_id"]), doc["file_name"]
-        for tab in doc["tabs"]:
-            sid, tname = int(tab["sheet_id"]), tab["tab_name"]
-            for row_idx, cells in enumerate(tab["values"]):
-                cols[0].append(fid)
-                cols[1].append(fname)
-                cols[2].append(sid)
-                cols[3].append(tname)
-                cols[4].append(row_idx)
-                cols[5].append(
-                    [None if c is None else str(c) for c in cells]
-                )
-                if len(cols[0]) >= _ARROW_BATCH_ROWS:
-                    yield flush()
-    if cols[0]:
-        yield flush()
-
-
-class SheetsStreamReader(DataSourceStreamReader):
-    """Micro-batch streaming READER over the sheet-file feed: the
-    offset is a position in the sorted file listing, each batch
-    ingests the files that appeared since the last committed offset —
-    the engine form of the reference's vestigial `/index-file`
-    webhook's ingestion side (`app.py:252-259`), polling the folder
-    instead of being called per file.
-
-    Contract notes: ``latestOffset`` reports the TRUE latest (all
-    files currently present) — the plain Python streaming API has no
-    admission-control hook, and a reader-side throttle that remembers
-    its own position replays data after a restart (a throttled offset
-    can land BEHIND the checkpointed commit, and the engine then plans
-    a backward batch; found by the restart test). Arrival pacing
-    therefore lives where it belongs — in the feed (files appear over
-    time; sheet names must be append-only in listing order, as
-    arriving files sorting before already-committed positions would
-    shift the mapping). partitions(start, end) hands one
-    InputPartition per new file to executors, so each batch's decode
-    work is cluster-parallel exactly like the batch scan; restart
-    resumes from the checkpointed offset with no reader-side state at
-    all."""
-
-    def __init__(self, options) -> None:
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("sheets source requires a path")
-        self.bundle = int(options.get("bundle", "0") or "0")
-
-    def _feed(self) -> list[str]:
-        # a feed dir that does not exist YET is an empty feed, not an
-        # error — read_sheets keeps its loud missing-path failure
-        return _list_sheet_files(self.path) if os.path.isdir(self.path) else []
-
-    def initialOffset(self) -> dict:
-        return {"index": 0}
-
-    def latestOffset(self) -> dict:
-        return {"index": len(self._feed())}
-
-    def partitions(self, start: dict, end: dict):
-        files = self._feed()[start["index"] : end["index"]]
-        return [InputPartition(chunk) for chunk in _bundle(files, self.bundle)]
-
-    def read(self, partition: InputPartition):
-        paths = (
-            partition.value
-            if isinstance(partition.value, (list, tuple))
-            else [partition.value]
-        )
-        yield from _grid_arrow_batches(paths)
-
-    def commit(self, end: dict) -> None:
-        pass
-
-
-def _bundle(files: list[str], target: int) -> list[list[str]]:
-    """Pack files into ~``target`` partitions in listing order, capping
-    each partition at _BUNDLE_BYTES_CAP bytes: deterministic greedy
-    packing, so the same listing always yields the same partitions. A
-    file deleted between the listing and its size lookup is dropped."""
-    if target <= 0 or len(files) <= target:
-        return [[f] for f in files]
-    per = -(-len(files) // target)
-    out: list[list[str]] = []
-    cur: list[str] = []
-    cur_bytes = 0
-    for f in files:
-        try:
-            sz = os.path.getsize(f)
-        except FileNotFoundError:
-            continue
-        if cur and (len(cur) >= per or cur_bytes + sz > _BUNDLE_BYTES_CAP):
-            out.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(f)
-        cur_bytes += sz
-    if cur:
-        out.append(cur)
-    return out
 
 
 @dataclass
@@ -402,8 +300,16 @@ def _merge_into_dir(path: str, files: dict, overlay: bool) -> None:
                 for (sheet_id, tab_name), rows in sorted(merged.items())
             ],
         }
-        with open(target, "w") as fh:
-            json.dump(doc, fh)
+        # hidden temp name, then one rename: a failed dump never leaves
+        # a truncated document at the target
+        tmp = os.path.join(path, f".{file_name}{SHEET_SUFFIX}.{uuid.uuid4().hex}.tmp")
+        try:
+            with open(tmp, "w") as fh:
+                json.dump(doc, fh)
+            os.replace(tmp, target)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
 
 class SheetsWriter(DataSourceWriter):
@@ -472,17 +378,11 @@ class SheetsDataSource(DataSource):
     def name(cls) -> str:
         return "sheets"
 
-    def schema(self):
-        return GRID_SCHEMA
-
     def writer(self, schema, overwrite: bool):
         return SheetsWriter(self.options, overwrite)
 
     def streamWriter(self, schema, overwrite: bool):
         return SheetsStreamWriter(self.options)
-
-    def streamReader(self, schema):
-        return SheetsStreamReader(self.options)
 
 
 def register(spark) -> None:

@@ -1,12 +1,18 @@
 """The sheet store: S1 file-pruned native scan, S3 header records,
 S4 ranged scan, S6 write-back round trip, the streaming reader and
-sink, and row identity with a pure-Python decode of the format."""
+sink, listing races and torn commits, and row identity with a
+pure-Python decode of the format."""
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
+import shutil
+import time
+import uuid
 from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +25,7 @@ from spec_search_spark.sources import sheets_source
 from spec_search_spark.sources.sheets_source import (
     SHEET_SUFFIX,
     read_records,
+    read_sheets_stream,
     register,
 )
 
@@ -139,10 +146,10 @@ def test_stream_sink_upserts_rows(spark, tmp_path):
     a second run over new input overlays changed rows and keeps
     untouched ones."""
     import json as _json
-    import time
 
     from spec_search_spark.sources.sheets_source import GRID_SCHEMA
 
+    register(spark)
     inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     os.makedirs(out)
 
@@ -178,16 +185,13 @@ def test_stream_sink_upserts_rows(spark, tmp_path):
 def test_stream_reader_multi_epoch_exactly_once(spark, fixture_dir, tmp_path):
     """Files arriving in waves are each ingested exactly once, one or
     more micro-batches per wave (no drop, no replay)."""
-    import uuid
-
     from spec_search_spark.operators.sheets_connector import feed_files_in_waves
 
-    register(spark)
     n_files = len([f for f in os.listdir(fixture_dir) if f.endswith(SHEET_SUFFIX)])
     assert n_files > 2
     name = f"stream_rd_{uuid.uuid4().hex[:8]}"
     feed = str(tmp_path / "feed")
-    stream = spark.readStream.format("sheets").load(feed)
+    stream = read_sheets_stream(spark, feed)
     q = (
         stream.writeStream.outputMode("append")
         .format("memory")
@@ -206,7 +210,7 @@ def test_stream_reader_multi_epoch_exactly_once(spark, fixture_dir, tmp_path):
     assert n_batches >= waves
     got = spark.table(name)
     batch = read_sheets(spark, fixture_dir)
-    # the stream reader and read_sheets are two decoders of one format
+    # the stream and the batch scan share one decode of the format
     assert got.exceptAll(batch).count() == 0
     assert batch.exceptAll(got).count() == 0
     assert (
@@ -221,7 +225,6 @@ def test_stream_reader_restart_resumes_from_checkpoint(spark, fixture_dir, tmp_p
     once (the offset log is the source of truth)."""
     from spec_search_spark.operators.sheets_connector import feed_files_in_waves
 
-    register(spark)
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
     feed = str(tmp_path / "feed")
@@ -230,16 +233,13 @@ def test_stream_reader_restart_resumes_from_checkpoint(spark, fixture_dir, tmp_p
 
     def start():
         return (
-            spark.readStream.format("sheets")
-            .load(feed)
+            read_sheets_stream(spark, feed)
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
             .start()
         )
-
-    import shutil
 
     os.makedirs(feed, exist_ok=True)
     q = start()
@@ -273,6 +273,99 @@ def test_stream_reader_restart_resumes_from_checkpoint(spark, fixture_dir, tmp_p
         got.select("file_id", "sheet_id", "row_idx").distinct().count()
         == got.count()
     )
+
+
+def _stream_two_arrivals(spark, fixture_dir, tmp_path, first, late, late_age_s=0):
+    """Stream the sheets ``first``, drain, then ``late`` with its mtime
+    ``late_age_s`` seconds in the past, drain again. Returns the
+    streamed grid rows and read_sheets' rows of the same files."""
+    feed = str(tmp_path / "feed")
+    os.makedirs(feed)
+    name = f"stream_two_{uuid.uuid4().hex[:8]}"
+    q = (
+        read_sheets_stream(spark, feed)
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        for wave, age in ((first, 0), ([late], late_age_s)):
+            for sheet in wave:
+                f = f"{sheet}{SHEET_SUFFIX}"
+                tmp = os.path.join(feed, f".{f}.tmp")
+                shutil.copy(os.path.join(fixture_dir, f), tmp)
+                if age:
+                    past = time.time() - age
+                    os.utime(tmp, (past, past))
+                os.replace(tmp, os.path.join(feed, f))
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    batch = read_sheets(spark, fixture_dir).filter(
+        F.col("file_name").isin(*first, late)
+    )
+    return _grid_rows(spark.table(name)), _grid_rows(batch)
+
+
+def test_stream_out_of_order_name_arrives_once(spark, fixture_dir, tmp_path):
+    """A file whose name sorts before already-delivered files is still
+    delivered, exactly once, and nothing delivered before replays."""
+    got, expected = _stream_two_arrivals(
+        spark, fixture_dir, tmp_path, ["sheet_001", "sheet_002"], "sheet_000"
+    )
+    assert Counter(got) == Counter(expected)
+
+
+def test_stream_old_mtime_file_arrives_once(spark, fixture_dir, tmp_path):
+    """A file arriving with an mtime 30 days older than the files
+    already seen is delivered exactly once (Spark's 7-day default
+    maxFileAge would skip it)."""
+    got, expected = _stream_two_arrivals(
+        spark, fixture_dir, tmp_path, ["sheet_000", "sheet_001"], "sheet_002",
+        late_age_s=30 * 86400,
+    )
+    assert Counter(got) == Counter(expected)
+
+
+def test_file_deleted_after_listing_is_skipped(spark, fixture_dir, tmp_path):
+    """A sheet file removed between the listing (DataFrame construction)
+    and the read is skipped; every other file's rows come back."""
+    store = str(tmp_path / "store")
+    shutil.copytree(fixture_dir, store)
+    df = read_sheets(spark, store)
+    os.remove(os.path.join(store, f"sheet_001{SHEET_SUFFIX}"))
+    assert Counter(_grid_rows(df)) == Counter(_decode(store))
+
+
+def test_failed_commit_keeps_previous_file(spark, adversarial_dir, monkeypatch):
+    """A sink commit that dies halfway through writing a document
+    leaves the previous file whole: the store still reads, with the
+    old rows, and no partial document is visible as a sheet file."""
+    def sheet_files():
+        names = fnmatch.filter(os.listdir(adversarial_dir), f"*{SHEET_SUFFIX}")
+        return {n: Path(adversarial_dir, n).read_text(encoding="utf-8") for n in names}
+
+    before = sheet_files()
+    expected = _decode(adversarial_dir)
+    writer = sheets_source.SheetsWriter({"path": adversarial_dir}, overwrite=False)
+    msg = writer.write(
+        iter([{"file_id": 3, "file_name": "c_odd", "sheet_id": 31,
+               "tab_name": "t", "row_idx": 0, "cells": ["new"]}])
+    )
+    dumps = json.dumps
+
+    def torn_dump(obj, fh, **kw):
+        fh.write(dumps(obj)[:10])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(sheets_source.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        writer.commit([msg])
+    monkeypatch.undo()
+    writer.abort([msg])
+    assert sheet_files() == before
+    assert Counter(_grid_rows(read_sheets(spark, adversarial_dir))) == Counter(expected)
 
 
 # ------------------------------------------------- adversarial store
@@ -348,6 +441,16 @@ def test_adversarial_store_matches_python_decode(spark, adversarial_dir):
     expected = _decode(adversarial_dir)
     assert len(expected) == 9
     assert Counter(_grid_rows(read_sheets(spark, adversarial_dir))) == Counter(expected)
+    name = f"adv_stream_{uuid.uuid4().hex[:8]}"
+    q = (
+        read_sheets_stream(spark, adversarial_dir)
+        .writeStream.format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert Counter(_grid_rows(spark.table(name))) == Counter(expected)
 
 
 def test_adversarial_records_pad_rule(spark, adversarial_dir):
@@ -374,37 +477,3 @@ def test_truncated_file_fails_the_scan(spark, adversarial_dir):
 
 def test_empty_store_reads_zero_rows(spark, tmp_path):
     assert read_sheets(spark, str(tmp_path)).count() == 0
-
-
-def test_arrow_batches_flush_inside_one_file(monkeypatch, adversarial_dir):
-    """One sheet far larger than _ARROW_BATCH_ROWS must not become one
-    unbounded batch: the flush check runs per row, not per file."""
-    monkeypatch.setattr(sheets_source, "_ARROW_BATCH_ROWS", 2)
-    path = os.path.join(adversarial_dir, f"c_odd{SHEET_SUFFIX}")
-    batches = list(sheets_source._grid_arrow_batches([path]))
-    assert [b.num_rows for b in batches] == [2, 1]
-    got = [
-        (r["file_id"], r["file_name"], r["sheet_id"], r["tab_name"], r["row_idx"],
-         tuple(r["cells"]))
-        for b in batches
-        for r in b.to_pylist()
-    ]
-    assert got == [row for row in _decode(adversarial_dir) if row[1] == "c_odd"]
-
-
-def test_bundle_drops_file_deleted_after_listing(monkeypatch):
-    """A file that vanishes between the listing and its size lookup is
-    left out of the bundle; planning does not raise and the remaining
-    files keep their listing order."""
-    files = [f"/store/{c}{SHEET_SUFFIX}" for c in "abcde"]
-    gone = files[1]
-
-    def getsize(path):
-        if path == gone:
-            raise FileNotFoundError(path)
-        return 10
-
-    monkeypatch.setattr(sheets_source.os.path, "getsize", getsize)
-    bundles = sheets_source._bundle(files, 2)
-    assert [f for b in bundles for f in b] == [f for f in files if f != gone]
-    assert bundles == [files[0:1] + files[2:4], files[4:5]]
