@@ -510,9 +510,8 @@ def _search_df(spark: SparkSession, sf_dir: str, adj: DataFrame) -> DataFrame:
 
 def _exact_arm(emb: DataFrame, probes: DataFrame) -> DataFrame:
     """Exact kNN per probe under the same metric/rounding/tie order —
-    the partial-top-k scan (map-side cut, no full sort)."""
-    from spec_search_spark.operators.similarity import partial_topk
-
+    the broadcast-probe scan, its window cut map-side (WindowGroupLimit)
+    below the probe_id exchange — no full sort."""
     scored = emb.join(
         F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
     ).select(
@@ -520,10 +519,9 @@ def _exact_arm(emb: DataFrame, probes: DataFrame) -> DataFrame:
         "vec_id",
         _d2e4(F.col("embedding"), F.col("probe_vec")).alias("d2_e4"),
     )
-    local = partial_topk(scored, "probe_id", ["d2_e4", "vec_id"], TOP_K)
     w = W.partitionBy("probe_id").orderBy(F.asc("d2_e4"), F.asc("vec_id"))
     return (
-        local.withColumn("rn", F.row_number().over(w))
+        scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("probe_id", "vec_id")
     )
@@ -542,7 +540,7 @@ def graph_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk's distinct scored-candidate count per probe, so the
     recall-per-budget tradeoff is in the data, not the docstring.
 
-    Scale: the exact arm is the partial-top-k scan; the approx arm
+    Scale: the exact arm is the map-side-cut window scan; the approx arm
     reads the memoized pinned walk; the hit-join runs on ≤ N_PROBES ×
     TOP_K rows per cohort."""
     emb = _emb(spark, sf_dir)

@@ -167,7 +167,6 @@ def ivf_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_df = _probe_assignments(spark, sf_dir)
 
     from spec_search_spark.functions.vector import l2_squared
-    from spec_search_spark.operators.similarity import partial_topk
 
     cand = index.join(
         F.broadcast(probe_df),
@@ -178,13 +177,13 @@ def ivf_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         index.cluster.alias("cluster"),
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
     )
-    # partial per-partition top-k before the per-probe window: the
-    # cluster-pruned candidate set never shuffles in full onto the
-    # handful of probe_id reducer tasks (see similarity.partial_topk).
-    local = partial_topk(cand, "probe_id", ["dist2", "vec_id"], TOP_K)
+    # the per-probe window is cut map-side (WindowGroupLimit) below its
+    # exchange: the cluster-pruned candidate set never shuffles in full
+    # onto the handful of probe_id reducer tasks (see similarity's
+    # module docstring).
     w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
     return (
-        local.withColumn("rn", F.row_number().over(w))
+        cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("probe_id", "vec_id", "cluster", "dist2", "rn")
     )
@@ -458,12 +457,11 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
       global top-k members.
     Real recall values are pinned against a numpy brute force in
     tests/test_ivf.py; the per-probe candidate-set economics (rank<p
-    join, partial top-k before the exchange) reuse the production
-    search plan."""
+    join, per-probe window cut map-side before the exchange) reuse the
+    production search plan."""
     _, index = trained_index(spark, sf_dir)
     probes = _ranked_probe_assignments(spark, sf_dir)
     from spec_search_spark.functions.vector import l2_squared
-    from spec_search_spark.operators.similarity import partial_topk
     from spec_search_spark.session import spread
 
     emb = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
@@ -475,10 +473,9 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("d2"),
     )
-    ex_local = partial_topk(ex_scored, "probe_id", ["d2", "vec_id"], TOP_K)
     w = W.partitionBy("probe_id").orderBy(F.asc("d2"), F.asc("vec_id"))
     exact = (
-        ex_local.withColumn("rn", F.row_number().over(w))
+        ex_scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("probe_id", "vec_id")
     )
@@ -508,9 +505,8 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_p = []
     for p in SWEEP_NPROBES:
         cand = scored.filter(F.col("rank") < p)
-        local = partial_topk(cand, "probe_id", ["d2", "vec_id"], TOP_K)
         topk = (
-            local.withColumn("rn", F.row_number().over(w))
+            cand.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= TOP_K)
             .select(F.lit(p).alias("nprobe"), "probe_id", "vec_id")
         )

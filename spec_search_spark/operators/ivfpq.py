@@ -33,10 +33,11 @@ Plan shape (the audit pins it):
   cluster key — only rows in probed clusters survive the hash join (a
   cluster-partitioned parquet layout turns this into partition
   pruning at deployment);
-- per-probe top-k goes through `similarity.partial_topk` (per-input-
-  partition Arrow top-k) BEFORE the probe_id exchange — the scored
-  candidate set never shuffles in full onto the handful of probe
-  reducers;
+- per-probe top-k is a row_number window that Spark cuts map-side
+  (WindowGroupLimit, k = CAND_K ≤ the 1000-row threshold — see
+  similarity's module docstring) BEFORE the probe_id exchange — the
+  scored candidate set never shuffles in full onto the handful of
+  probe reducers;
 - the exact re-rank touches ≤ probes × CAND_K rows.
 
 At 100 TB: scan cost ∝ nprobe/K_COARSE of the corpus in 8-byte codes;
@@ -231,12 +232,9 @@ def _search_at(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
 
 def _arm_topk(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
     """CAND_K ADC survivors → exact re-rank → per-probe TOP_K."""
-    from spec_search_spark.operators.similarity import partial_topk
-
-    local = partial_topk(approx, "probe_id", ["approx_d2", "vec_id"], CAND_K)
     wc = Window.partitionBy("probe_id").orderBy("approx_d2", "vec_id")
     candk = (
-        local.withColumn("crn", F.row_number().over(wc))
+        approx.withColumn("crn", F.row_number().over(wc))
         .filter(F.col("crn") <= CAND_K)
         .drop("crn")
     )
@@ -273,9 +271,7 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(probe_id, vec_id): exact L2 top-k per probe over the full
     corpus — the recall denominator (knn_exact's shape on the 1e-6
-    grid with the shared partial-top-k economics)."""
-    from spec_search_spark.operators.similarity import partial_topk
-
+    grid with the shared map-side window cut)."""
     scored = (
         kmeans._emb(spark, sf_dir)
         .join(F.broadcast(_probes(spark, sf_dir)), F.col("vec_id") != F.col("probe_id"))
@@ -285,10 +281,9 @@ def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(l2_squared(F.col("e"), F.col("q")), 6).alias("xd2"),
         )
     )
-    local = partial_topk(scored, "probe_id", ["xd2", "vec_id"], TOP_K)
     w = Window.partitionBy("probe_id").orderBy("xd2", "vec_id")
     return (
-        local.withColumn("rn", F.row_number().over(w))
+        scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("probe_id", "vec_id")
     )

@@ -9,8 +9,9 @@ on; here it is engine surface).
 Scale shape (the two-phase ANN discipline of similarity.py):
 - the CORPUS-scale work — scoring every vector against the broadcast
   probe and cutting to the CAND-row candidate pool — is fully
-  distributed (partial per-partition top-k before the single tiny
-  window, so the corpus never shuffles or sorts);
+  distributed (one TakeOrderedAndProject: each partition keeps its
+  CAND best rows before the single-partition merge, so the corpus
+  never shuffles or sorts);
 - the greedy selection is an inherently sequential O(CAND²·K) loop
   over the FIXED-SIZE pool: the candidate pairwise similarities are
   computed by the engine (broadcast self-join of the CAND-row pool),
@@ -25,7 +26,7 @@ and the unrolled K-step DuckDB CTE replays the identical selection.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -33,7 +34,7 @@ from spec_search_spark.functions.vector import (
     cosine_similarity,
     cosine_similarity_sql,
 )
-from spec_search_spark.operators.similarity import _emb, _probes, partial_topk
+from spec_search_spark.operators.similarity import _emb, _probes
 from spec_search_spark.session import local_df, tune
 
 CAND = 24  # candidate pool (the corpus-scale cut)
@@ -59,29 +60,14 @@ def _candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distributed phase."""
     emb = _emb(spark, sf_dir)
     probe = _probes(spark, sf_dir).filter(F.col("probe_id") == 0)
-    scored = emb.join(
-        F.broadcast(probe), F.col("vec_id") != F.col("probe_id")
-    ).select(
-        "vec_id",
-        _sim_e4(F.col("embedding"), F.col("probe_vec")).alias("rel_e4"),
-        "embedding",
-    )
-    narrow = partial_topk(
-        scored.select(
-            F.lit(0).alias("k"),
-            "vec_id",
-            "rel_e4",
-            (F.col("rel_e4") * -1).alias("neg"),
-        ),
-        "k",
-        ["neg", "vec_id"],
-        CAND,
-    )
-    w = Window.partitionBy("k").orderBy(F.desc("rel_e4"), F.asc("vec_id"))
     top = (
-        narrow.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= CAND)
-        .select("vec_id", "rel_e4")
+        emb.join(F.broadcast(probe), F.col("vec_id") != F.col("probe_id"))
+        .select(
+            "vec_id",
+            _sim_e4(F.col("embedding"), F.col("probe_vec")).alias("rel_e4"),
+        )
+        .orderBy(F.desc("rel_e4"), F.asc("vec_id"))
+        .limit(CAND)
     )
     return top.join(emb.select("vec_id", "embedding"), "vec_id")
 

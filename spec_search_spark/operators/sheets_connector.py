@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -254,6 +255,9 @@ def sheets_stream_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed_files_in_waves(fixture, feed, q, per_wave)
     finally:
         q.stop()
+        # the rows live in the memory table, not in either directory
+        shutil.rmtree(feed, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
     rows = spark.table(name)
     live = F.size(F.filter("cells", lambda c: c.isNotNull() & (c != "")))
     return rows.groupBy("file_id", "file_name").agg(

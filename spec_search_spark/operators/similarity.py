@@ -14,8 +14,14 @@ core capability, re-expressed Spark-first):
 Scale design:
 - probes are always the broadcast side; the 100 TB embedding table
   never shuffles for a search.
-- top-k per probe = partial top-k per partition (window after a
-  repartition on probe_id) — never a global sort.
+- top-k per probe = `row_number()` over a probe_id window filtered to
+  rn <= k — never a global sort. Spark cuts it map-side by itself:
+  `InferWindowGroupLimit` plans a Partial `WindowGroupLimit` below the
+  probe_id exchange, so only ≤ k rows per probe per input partition
+  cross it, never the scored corpus. The rule fires for a
+  row_number/rank filter whose k ≤
+  `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000); the
+  largest k here is `ivfpq.CAND_K` = 100.
 - LSH bucket join: bucket ids are small ints; candidate sets shrink
   the exact-distance work by ~2^planes; at 100 TB you'd add multi-probe
   (flip lowest-margin bits) for recall — parameters here.
@@ -107,44 +113,10 @@ LIMIT {TOP_K}
 """
 
 
-def partial_topk(df: DataFrame, key: str, order: list[str], k: int) -> DataFrame:
-    """Per-input-partition top-k per `key` WITHOUT a shuffle.
-
-    The naive per-probe window (`partition by probe_id order by dist`)
-    shuffles the ENTIRE scored table onto n_probes reducer tasks — at
-    100 TB with a handful of probes that serializes the scan. This
-    Arrow-batched mapInPandas pass keeps only the k best rows per key
-    per input partition (same (dist, id) total order as the final
-    window, so ties resolve identically and the result is exact), so
-    the global window afterwards sees ≤ k × n_partitions × n_keys
-    survivor rows instead of the corpus. Map-side combine for top-k,
-    the same shape Spark gives aggregates for free.
-
-    Call on a NARROW projection (key + order + carried scalars) — the
-    wide columns (embeddings) must be dropped before the Arrow hop.
-    """
-    schema = df.schema
-    names = [f.name for f in schema.fields]
-
-    def fold(batches):
-        acc = None
-        for pdf in batches:
-            cur = pd.concat([acc, pdf]) if acc is not None else pdf
-            acc = (
-                cur.sort_values(order, kind="mergesort")
-                .groupby(key, sort=False)
-                .head(k)
-            )
-        if acc is not None and len(acc):
-            yield acc[names]
-
-    return df.mapInPandas(fold, schema)
-
-
-def knn_multi_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-5 L2 neighbors for each of 5 probes — partial per-partition
-    top-k (no shuffle) then the tiny per-probe window over survivors,
-    the many-query batch shape of reference E1."""
+def _exact_knn(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """(probe_id, vec_id, dist2, rn): exact top-k L2 neighbors of every
+    probe, self excluded — the one exact arm the multi-probe scan and
+    the ANN evals share (4dp-rounded L2, vec_id tiebreak)."""
     emb = _emb(spark, sf_dir)
     probes = _probes(spark, sf_dir)
     scored = emb.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id")).select(
@@ -152,13 +124,19 @@ def knn_multi_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
     )
-    local = partial_topk(scored, "probe_id", ["dist2", "vec_id"], 5)
     w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
     return (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
         .select("probe_id", "vec_id", "dist2", "rn")
     )
+
+
+def knn_multi_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-5 L2 neighbors for each of 5 probes — the per-probe window
+    cut map-side below its one exchange, the many-query batch shape of
+    reference E1."""
+    return _exact_knn(spark, sf_dir, 5)
 
 
 KNN_MULTI_SQL = f"""
@@ -275,10 +253,9 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
     )
-    local = partial_topk(cand, "probe_id", ["dist2", "vec_id"], TOP_K)
     w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
     return (
-        local.withColumn("rn", F.row_number().over(w))
+        cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("probe_id", "vec_id", "bucket", "dist2", "rn")
     )
@@ -309,25 +286,12 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     that tells you whether a bucketing config is shippable before you
     point it at the full corpus.
 
-    Both arms reuse the production operators (exact arm = the
-    multi-probe scan at k=TOP_K, approx arm = `ann_lsh_bucketed`), so
+    Both arms reuse the production operators (exact arm = `_exact_knn`,
+    the multi-probe scan at k=TOP_K; approx arm = `ann_lsh_bucketed`), so
     the report measures the deployed plans, not a reimplementation.
     Scale: both arms end at ≤ N_PROBES×TOP_K rows; the hit-join and
     per-probe rollup are driver-trivial regardless of corpus size."""
-    emb = _emb(spark, sf_dir)
-    probes = _probes(spark, sf_dir)
-    scored = emb.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id")).select(
-        "probe_id",
-        "vec_id",
-        F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
-    )
-    local = partial_topk(scored, "probe_id", ["dist2", "vec_id"], TOP_K)
-    w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
-    exact = (
-        local.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id")
-    )
+    exact = _exact_knn(spark, sf_dir, TOP_K).select("probe_id", "vec_id")
     approx = ann_lsh_bucketed(spark, sf_dir).select(
         "probe_id", "vec_id", F.lit(1).alias("hit")
     )
@@ -403,7 +367,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets). Probe side stays the broadcast side: the probed-bucket
     fan-out (P+1 rows per probe) happens on the tiny table, the corpus
     keeps its single bucket id. Exact L2 re-rank of candidates only,
-    partial top-k before the per-probe exchange — same two-phase shape
+    the per-probe window cut map-side below its exchange — same shape
     as ann_lsh_bucketed."""
     emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr(F.col("embedding")))
     probes = (
@@ -434,10 +398,9 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
     )
-    local = partial_topk(cand, "probe_id", ["dist2", "vec_id"], TOP_K)
     w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
     return (
-        local.withColumn("rn", F.row_number().over(w))
+        cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= TOP_K)
         .select("probe_id", "vec_id", "bucket", "dist2", "rn")
     )
@@ -1000,15 +963,15 @@ def semantic_search_reranked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: stage-2 cost is O(k) per query regardless of corpus size —
     the expensive model never sees more than RERANK_DEPTH candidates.
-    Stage 1 is the partial_topk shape, NOT an intermediate
-    orderBy+limit: composed under more operators, Spark plans
-    orderBy(...).limit(k) as a full rangepartitioning shuffle of the
-    scored corpus + Sort + limit (the interior-range-exchange audit
-    caught exactly this in r9), so the candidate cut here is the
-    per-input-partition Arrow top-k followed by one bounded window
-    over ≤ RERANK_DEPTH × n_partitions survivor rows — the corpus
-    never exchanges. The final TOP_K reorder is terminal and plans as
-    TakeOrderedAndProject.
+    Stage 1 is a row_number window filtered to RERANK_DEPTH, NOT an
+    intermediate orderBy+limit: composed under more operators, Spark
+    plans orderBy(...).limit(k) as a full rangepartitioning shuffle of
+    the scored corpus + Sort + limit (the interior-range-exchange audit
+    caught exactly this in r9), while Spark cuts this unpartitioned
+    window with a TakeOrderedAndProject under it: each partition keeps
+    its RERANK_DEPTH best rows before the single-partition merge — the
+    corpus never exchanges. The final TOP_K reorder is terminal and
+    plans as TakeOrderedAndProject too.
     """
     from spec_search_spark.operators.dedup import _poly_hash
 
@@ -1017,14 +980,12 @@ def semantic_search_reranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         index.withColumn("dist2", F.round(l2_squared(F.col("embedding"), probe), 6))
         .select("id", "doc_id", "chunk_idx", "chunk", "dist2")
-        .withColumn("q", F.lit(0))
     )
-    local = partial_topk(scored, "q", ["dist2", "id"], RERANK_DEPTH)
-    w = W.partitionBy("q").orderBy(F.asc("dist2"), F.asc("id"))
+    w = W.orderBy(F.asc("dist2"), F.asc("id"))
     cands = (
-        local.withColumn("rn", F.row_number().over(w))
+        scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= RERANK_DEPTH)
-        .drop("rn", "q")
+        .drop("rn")
     )
     score = (
         F.pmod(_poly_hash(F.concat(F.lit(HYBRID_QUERY + "||"), F.col("chunk"))), F.lit(100000))
@@ -1411,25 +1372,13 @@ def rbo_ann_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth ≥ max(ra, rb), so its total weight is a PURE FUNCTION of
     max(ra, rb) — precomputed in python, snapped to integer nano-units
     and embedded as literals in BOTH engines (zero cross-engine float
-    surface). The rankings ride the existing probe-broadcast +
-    partial_topk shape; matches are one equi-join of two ≤K·n_probes
+    surface). The exact ranking is `_exact_knn`, the approx one
+    `ann_lsh_bucketed`; matches are one equi-join of two ≤K·n_probes
     tables; the final score is one fixed-arity division."""
     cs, ideal = _rbo_coeffs()
-    emb = _emb(spark, sf_dir)
     probes = _probes(spark, sf_dir)
-    scored = (
-        emb.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id"))
-        .withColumn(
-            "dist2", F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4)
-        )
-        .select("probe_id", "vec_id", "dist2")
-    )
-    surv = partial_topk(scored, "probe_id", ["dist2", "vec_id"], TOP_K)
-    w = W.partitionBy("probe_id").orderBy("dist2", "vec_id")
-    exact = (
-        surv.withColumn("ra", F.row_number().over(w))
-        .filter(F.col("ra") <= TOP_K)
-        .select("probe_id", "vec_id", "ra")
+    exact = _exact_knn(spark, sf_dir, TOP_K).select(
+        "probe_id", "vec_id", F.col("rn").alias("ra")
     )
     approx = ann_lsh_bucketed(spark, sf_dir).select(
         "probe_id", "vec_id", F.col("rn").alias("rb")
@@ -1517,9 +1466,9 @@ def retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-probe sums (FIXTURES rule 5), and ideal DCG comes from the
     same snapped term over an exploded 1..min(K, n_rel) sequence, so
     every metric is a fixed-arity double over exact integers. Scale:
-    probes broadcast; `partial_topk` keeps the per-probe window off
-    the corpus (survivors only); the label table is a partial+final
-    count.
+    probes broadcast; the per-probe window is cut map-side
+    (WindowGroupLimit) below its exchange, so only survivors cross it;
+    the label table is a partial+final count.
 
     Output: (probe_id, n_rel, hits_at_k, mrr_micro, dcg_micro,
     idcg_micro, ndcg_6, recall_6) ordered by probe_id."""
@@ -1536,10 +1485,9 @@ def retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("probe_id", "probe_label", "vec_id", "label", "dist2")
     )
-    surv = partial_topk(scored, "probe_id", ["dist2", "vec_id"], TOP_K)
     w = W.partitionBy("probe_id").orderBy("dist2", "vec_id")
     ranked = (
-        surv.withColumn("rank", F.row_number().over(w))
+        scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .withColumn(
             "rel", F.when(F.col("label") == F.col("probe_label"), 1).otherwise(0)

@@ -201,20 +201,21 @@ CHECKS: list[tuple[str, list[str], list[str]]] = [
      ["ArrowAggregatePython", "hashpartitioning(label",
       "ReadSchema: struct<vec_id:bigint,embedding:array<float>,label:int>"],
      ["CartesianProduct"]),
-    # multi-probe top-k: partial per-partition top-k (MapInPandas)
-    # BEFORE the per-probe exchange — the scored table never shuffles
-    # in full onto the handful of probe_id reducers; see
+    # multi-probe top-k: Spark's map-side WindowGroupLimit cuts the
+    # per-probe window BEFORE the per-probe exchange — the scored table
+    # never shuffles in full onto the handful of probe_id reducers, and
+    # no Python hop does the cut; see
     # test_plans.test_two_phase_topk_single_shuffle for the structural
     # (ordering + shuffle-count) assertion
     ("knn_multi_probe",
-     ["MapInPandas", "hashpartitioning(probe_id"],
-     ["SortMergeJoin", "CartesianProduct"]),
+     ["WindowGroupLimit", "hashpartitioning(probe_id"],
+     ["SortMergeJoin", "CartesianProduct", "MapInPandas"]),
     ("ann_lsh_bucketed",
-     ["MapInPandas", "hashpartitioning(probe_id"],
-     ["SortMergeJoin", "CartesianProduct"]),
+     ["WindowGroupLimit", "hashpartitioning(probe_id"],
+     ["SortMergeJoin", "CartesianProduct", "MapInPandas"]),
     ("ann_lsh_multiprobe",
-     ["MapInPandas", "hashpartitioning(probe_id"],
-     ["SortMergeJoin", "CartesianProduct"]),
+     ["WindowGroupLimit", "hashpartitioning(probe_id"],
+     ["SortMergeJoin", "CartesianProduct", "MapInPandas"]),
     # near-dup pair join is banded: join keys include (band_idx, sig),
     # never a label-only pair join (quadratic in a label block) —
     # see test_plans.test_neardup_banding for the candidate-count bound
@@ -264,9 +265,10 @@ CHECKS: list[tuple[str, list[str], list[str]]] = [
     ("ann_int8_rerank",
      ["MapInPandas", "hashpartitioning(probe_id"],
      ["SortMergeJoin", "CartesianProduct"]),
-    # recall report: both arms keep their partial-top-k shape; the
+    # recall report: both arms keep their map-side window cut; the
     # hit-join is over ≤ probes×k rows, never a sort-merge join
-    ("ann_recall_report", ["MapInPandas"], ["SortMergeJoin", "CartesianProduct"]),
+    ("ann_recall_report", ["WindowGroupLimit"],
+     ["SortMergeJoin", "CartesianProduct", "MapInPandas"]),
     # SCD2 snapshot: window + agg share ONE user_id exchange; current
     # state comes from the window, never a self-join back to events
     ("scd2_current_snapshot",
@@ -1104,10 +1106,10 @@ CHECKS: list[tuple[str, list[str], list[str]]] = [
      ["Join"],
      ["CartesianProduct", "MapInPandas", "BatchEvalPython",
       "BroadcastNestedLoopJoin"]),
-    # nprobe sweep: probe tables broadcast, partial top-k before every
-    # per-probe window exchange, exact arm = the knn_exact BNLJ shape
-    # (the cached index lineage keeps the build's Arrow assignment, so
-    # MapInPandas is not forbidden here)
+    # nprobe sweep: probe tables broadcast, a map-side WindowGroupLimit
+    # before every per-probe window exchange, exact arm = the knn_exact
+    # BNLJ shape (the cached index lineage keeps the build's Arrow
+    # assignment, so MapInPandas is not forbidden here)
     ("ivf_nprobe_sweep",
      ["BroadcastHashJoin", "Window"],
      ["CartesianProduct", "BatchEvalPython",
@@ -1266,13 +1268,13 @@ CHECKS: list[tuple[str, list[str], list[str]]] = [
     ("hits_hubs_authorities",
      ["partial_sum", "TakeOrderedAndProject"],
      ["CartesianProduct", "Window", "rangepartitioning("]),
-    # retrieval eval: probes broadcast onto the scan, partial_topk
-    # keeps the per-probe window off the corpus (survivors only), the
-    # label table is a broadcast count — no corpus shuffle anywhere
+    # retrieval eval: probes broadcast onto the scan, the map-side
+    # WindowGroupLimit keeps the per-probe window off the corpus
+    # (survivors only), the label table is a broadcast count — no
+    # corpus shuffle anywhere
     ("retrieval_eval_report",
-     ["BroadcastHashJoin", "MapInPandas", "Window"],
-     ["CartesianProduct",
-     ]),
+     ["BroadcastHashJoin", "WindowGroupLimit", "Window"],
+     ["CartesianProduct", "MapInPandas"]),
     # audio silence runs: chained MapInPandas in ONE stage — payload
     # bytes never shuffle; no row-at-a-time python, no join at all
     ("audio_silence_runs",
@@ -1301,16 +1303,16 @@ CHECKS: list[tuple[str, list[str], list[str]]] = [
     # IVFADC: the deployed codes index is a pinned artifact (Scan
     # ExistingRDD); the ADC scan joins it to the BROADCAST per-probe-
     # cluster LUTs on the cluster key (only probed clusters survive —
-    # partition pruning at deployment); partial top-k (MapInPandas)
+    # partition pruning at deployment); the map-side WindowGroupLimit
     # runs BEFORE the probe_id exchange so the candidate table never
     # shuffles in full; re-rank touches ≤ probes × CAND_K rows
     ("ivfpq_search",
-     ["Scan ExistingRDD", "BroadcastHashJoin", "MapInPandas",
+     ["Scan ExistingRDD", "BroadcastHashJoin", "WindowGroupLimit",
       "hashpartitioning(probe_id"],
-     ["CartesianProduct"]),
+     ["CartesianProduct", "MapInPandas"]),
     ("ivfpq_recall_report",
-     ["Scan ExistingRDD", "BroadcastHashJoin", "MapInPandas"],
-     ["CartesianProduct"]),
+     ["Scan ExistingRDD", "BroadcastHashJoin", "WindowGroupLimit"],
+     ["CartesianProduct", "MapInPandas"]),
     # IVFADC delta upsert: delta-sized crossJoin against the broadcast
     # 16-row centroid table + 128-row codebook assignment; the corpus
     # appears only as the pinned codes artifact (n_base)
@@ -1370,12 +1372,13 @@ CHECKS: list[tuple[str, list[str], list[str]]] = [
      ["CartesianProduct", "BatchEvalPython", "rangepartitioning(",
       "MapInPandas"]),
     # graph-ANN recall report: exact arm = broadcast-probe scan with
-    # the partial-top-k MapInPandas cut; approx arm reads the memoized
+    # the map-side WindowGroupLimit cut; approx arm reads the memoized
     # checkpointed walk answer (LogicalRDD). The build/walk lineages
     # get their own un-pinned audit block below (see audit()).
     ("graph_ann_recall_report",
-     ["MapInPandas", "Scan ExistingRDD"],
-     ["CartesianProduct", "BatchEvalPython", "SortMergeJoin"]),
+     ["WindowGroupLimit", "Scan ExistingRDD"],
+     ["CartesianProduct", "BatchEvalPython", "SortMergeJoin",
+      "MapInPandas"]),
     # graph-ANN delta insert: memoized pinned answer (ADVICE r10 — a
     # maintenance batch runs once per delta in deployment), so the
     # registered plan is a bare LogicalRDD; the full walk+shrink
@@ -1532,16 +1535,18 @@ def audit(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, bool]]:
     # mmr_diversified_topk returns a driver-assembled SELECT_K-row
     # transcript (LocalTableScan — nothing to audit there); its
     # corpus-scale phase is the candidate cut, so audit THAT plan:
-    # broadcast probe, partial top-k before any exchange, no global
-    # sort of the scored corpus.
+    # broadcast probe, a TakeOrderedAndProject (per-partition top-CAND
+    # before its single-partition merge), no global sort of the scored
+    # corpus, no Python hop.
     from spec_search_spark.operators.mmr import _candidates
 
     mmr_plan = plan_of(_candidates(spark, sf_dir))
-    for frag in ("MapInPandas", "BroadcastHashJoin"):
+    for frag in ("TakeOrderedAndProject", "BroadcastHashJoin"):
         results.append(
             ("mmr_diversified_topk[candidates]", f"requires `{frag}`",
              frag in mmr_plan))
-    for frag in ("CartesianProduct", "rangepartitioning(", "BatchEvalPython"):
+    for frag in ("CartesianProduct", "rangepartitioning(", "BatchEvalPython",
+                 "MapInPandas"):
         results.append(
             ("mmr_diversified_topk[candidates]", f"forbids `{frag}`",
              frag not in mmr_plan))
@@ -1686,15 +1691,15 @@ def audit(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, bool]]:
          "forbids Window over SinglePartition exchange (structural)",
          not window_over_single_partition(ga_l1plan)))
     # layered recall: per-probe windows throughout, exact arm's
-    # partial-top-k MapInPandas, no cartesian anywhere; range exchange
-    # only as the result sort
+    # map-side WindowGroupLimit cut, no cartesian anywhere; range
+    # exchange only as the result sort
     ga_lyplan = plan_of(_layered_df(spark, sf_dir))
-    for frag in ("windowspecdefinition(probe_id", "MapInPandas",
+    for frag in ("windowspecdefinition(probe_id", "WindowGroupLimit",
                  "BroadcastNestedLoopJoin"):
         results.append(
             ("graph_ann_layered_recall[lineage]", f"requires `{frag}`",
              frag in ga_lyplan))
-    for frag in ("CartesianProduct", "BatchEvalPython"):
+    for frag in ("CartesianProduct", "BatchEvalPython", "MapInPandas"):
         results.append(
             ("graph_ann_layered_recall[lineage]", f"forbids `{frag}`",
              frag not in ga_lyplan))

@@ -36,7 +36,9 @@ into per-file documents on the driver (serial work ∝ file count, not
 cell count) and is atomic per file: parts land in a temp dir, and each
 final document is written to a hidden temp name beside its target and
 ``os.replace``d onto it in commit, so a crash mid-write leaves the old
-file whole (Spark's listing skips names starting with ``.``).
+file whole (Spark's listing skips names starting with ``.``). An
+overwrite removes the files it did not rewrite only after every new
+document is in place, so a failed commit loses no file.
 
 Streaming write — ``df.writeStream.format("sheets")`` upserts each
 micro-batch into the sheet files at row granularity (overlay), with
@@ -327,10 +329,14 @@ class SheetsWriter(DataSourceWriter):
         import shutil
 
         files = _collect_parts(messages)
-        if self.overwrite:
-            for old in _list_sheet_files(self.path):
-                os.remove(old)
+        # new documents first, then the stale ones: a commit that fails
+        # part-way loses no file
         _merge_into_dir(self.path, files, overlay=False)
+        if self.overwrite:
+            keep = {f"{file_name}{SHEET_SUFFIX}" for _fid, file_name in files}
+            for old in _list_sheet_files(self.path):
+                if os.path.basename(old) not in keep:
+                    os.remove(old)
         shutil.rmtree(self.tmp_dir, ignore_errors=True)
 
     def abort(self, messages):

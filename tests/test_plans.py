@@ -14,28 +14,36 @@ def test_plan_audit_all_pass(spark, sf_dir):
 
 
 def test_two_phase_topk_single_shuffle(spark, sf_dir):
-    """The probe-search queries must run the partial top-k
-    (MapInPandas) BELOW their single shuffle exchange: the full scored
-    table never exchanges onto the handful of probe_id reducer tasks —
-    only the ≤ k×partitions×probes survivor set does."""
+    """The probe-search queries must run Spark's map-side top-k cut
+    (a Partial WindowGroupLimit) BELOW their single shuffle exchange:
+    the full scored table never exchanges onto the handful of probe_id
+    reducer tasks — only the ≤ k×partitions×probes survivor set does."""
     import re
 
     from spec_search_spark.operators.ivf import ivf_ann_search
+    from spec_search_spark.operators.ivfpq import IVFPQ_NPROBE, _search_at
     from spec_search_spark.operators.similarity import ann_lsh_bucketed, knn_multi_probe
     from spec_search_spark.plans.audit import plan_of
 
-    for fn in (knn_multi_probe, ann_lsh_bucketed, ivf_ann_search):
+    searches = {
+        "knn_multi_probe": knn_multi_probe,
+        "ann_lsh_bucketed": ann_lsh_bucketed,
+        "ivf_ann_search": ivf_ann_search,
+        # ivfpq_search without its (probe_id, rn) result sort, whose
+        # range exchange is presentation, not search
+        "ivfpq_search": lambda s, d: _search_at(s, d, IVFPQ_NPROBE),
+    }
+    for name, fn in searches.items():
         plan = plan_of(fn(spark, sf_dir))
         tree = plan.split("\n\n", 1)[0]
         # exactly one shuffle exchange ("- Exchange (n)"; BroadcastExchange
         # is a different token and InMemoryTableScan subtrees don't count)
         shuffles = re.findall(r"- Exchange \(\d+\)", tree)
-        assert len(shuffles) == 1, (fn.__name__, tree)
-        # and the partial top-k sits BELOW it (later in top-down text)
-        assert tree.index("- Exchange (") < tree.index("MapInPandas ("), (
-            fn.__name__,
-            tree,
-        )
+        assert len(shuffles) == 1, (name, tree)
+        # and the map-side cut sits BELOW it (later in top-down text; the
+        # Final WindowGroupLimit above the exchange does not count)
+        below = tree[tree.index("- Exchange ("):]
+        assert "WindowGroupLimit (" in below, (name, tree)
 
 
 def test_neardup_banding(spark, sf_dir):

@@ -9,6 +9,7 @@ import fnmatch
 import json
 import os
 import shutil
+import tempfile
 import time
 import uuid
 from collections import Counter
@@ -19,7 +20,9 @@ from pyspark.sql import functions as F
 
 from spec_search_spark.operators.sheets_connector import (
     build_sheets_fixture,
+    fixture_dir_for,
     read_sheets,
+    sheets_stream_scan,
 )
 from spec_search_spark.sources import sheets_source
 from spec_search_spark.sources.sheets_source import (
@@ -366,6 +369,63 @@ def test_failed_commit_keeps_previous_file(spark, adversarial_dir, monkeypatch):
     writer.abort([msg])
     assert sheet_files() == before
     assert Counter(_grid_rows(read_sheets(spark, adversarial_dir))) == Counter(expected)
+
+
+def test_failed_overwrite_keeps_every_file(spark, adversarial_dir, monkeypatch):
+    """An overwrite commit that dies after its first new document loses
+    no sheet file: stale documents are removed only once every new one
+    is in place, so all three files of the store survive, each whole."""
+    before = set(fnmatch.filter(os.listdir(adversarial_dir), f"*{SHEET_SUFFIX}"))
+    assert len(before) == 3
+    writer = sheets_source.SheetsWriter({"path": adversarial_dir}, overwrite=True)
+    msg = writer.write(
+        iter([
+            {"file_id": 1, "file_name": "a_ragged", "sheet_id": 11,
+             "tab_name": "t", "row_idx": 0, "cells": ["new"]},
+            {"file_id": 4, "file_name": "d_new", "sheet_id": 41,
+             "tab_name": "t", "row_idx": 0, "cells": ["new"]},
+        ])
+    )
+    dump, dumped = json.dump, []
+
+    def dump_then_fail(obj, fh, **kw):
+        dumped.append(obj["file_name"])
+        if len(dumped) > 1:
+            raise OSError("disk full")
+        dump(obj, fh, **kw)
+
+    monkeypatch.setattr(sheets_source.json, "dump", dump_then_fail)
+    with pytest.raises(OSError, match="disk full"):
+        writer.commit([msg])
+    monkeypatch.undo()
+    writer.abort([msg])
+    assert dumped == ["a_ragged", "d_new"]  # failed part-way, not up front
+    after = set(fnmatch.filter(os.listdir(adversarial_dir), f"*{SHEET_SUFFIX}"))
+    assert after == before
+    assert Counter(_grid_rows(read_sheets(spark, adversarial_dir))) == Counter(
+        _decode(adversarial_dir)
+    )
+
+
+def test_stream_scan_removes_its_temp_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    """sheets_stream_scan leaves no feed or checkpoint directory behind,
+    and its per-file counts equal those of a batch read of the store."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    got = sorted(tuple(r) for r in sheets_stream_scan(spark, sf_dir).collect())
+    left = [
+        n for n in os.listdir(tmp_path)
+        if n.startswith(("sheets_feed_", "ckpt_sheets_src_"))
+    ]
+    assert left == []
+    live = F.size(F.filter("cells", lambda c: c.isNotNull() & (c != "")))
+    want = sorted(
+        tuple(r)
+        for r in read_sheets(spark, fixture_dir_for(sf_dir))
+        .groupBy("file_id", "file_name")
+        .agg(F.count(F.lit(1)).alias("n_rows"), F.sum(live).cast("bigint"))
+        .collect()
+    )
+    assert got and got == want
 
 
 # ------------------------------------------------- adversarial store
