@@ -85,6 +85,13 @@ from pyspark.sql.window import Window as W
 
 from spec_search_spark.catalog import load_table
 from spec_search_spark.functions.vector import l2_squared, l2_squared_sql
+from spec_search_spark.operators.similarity import (
+    N_PROBES,
+    TOP_K,
+    exact_knn,
+    probes_of,
+    topk_per_probe,
+)
 from spec_search_spark.session import session_memo, tune
 
 
@@ -135,8 +142,6 @@ GRAPH_M = 12  # graph out-degree (per-node neighbor-list size)
 NND_ROUNDS = 1  # NN-descent refinement rounds (unrolled)
 BEAM = 20  # beam width of the query walk
 HOPS = 2  # beam-expansion rounds (unrolled)
-TOP_K = 10
-N_PROBES = 5  # probes = vec_id < 5 (repo-wide convention)
 M1 = 6  # seed-graph (layer-1) out-degree
 BEAM_L1 = 4  # layer-1 beam width
 HOPS_L1 = 2  # layer-1 expansion rounds (unrolled)
@@ -361,11 +366,8 @@ def _cohort_probes(
 ) -> DataFrame:
     emb = _emb(spark, sf_dir)
     if cohort == "seed":
-        pred = F.col("vec_id") < N_PROBES
-    else:
-        pred = (F.col("vec_id") >= k_cells) & (
-            F.col("vec_id") < k_cells + N_PROBES
-        )
+        return probes_of(emb)
+    pred = (F.col("vec_id") >= k_cells) & (F.col("vec_id") < k_cells + N_PROBES)
     return emb.filter(pred).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
@@ -420,14 +422,9 @@ def _beam_walk(
     distinct or checkpoint on the accumulator (each eager materialize
     costs ~0.8 s of fixed scheduling floor; measured 13.1 s → 6.5 s at
     sf0.1 when dropped)."""
-    wb = W.partitionBy("probe_id").orderBy(F.asc("d2_e4"), F.asc("vec_id"))
     scored0 = _scored(vis0, emb, probes, bcast_probes)
     frontiers = [scored0]
-    cur = (
-        scored0.withColumn("brk", F.row_number().over(wb))
-        .filter(F.col("brk") <= beam)
-        .select("probe_id", "vec_id", "d2_e4")
-    )
+    cur = topk_per_probe(scored0, beam, "d2_e4").select("probe_id", "vec_id", "d2_e4")
     for _ in range(hops):
         exp = (
             cur.join(adj, adj.src == cur.vec_id)
@@ -438,11 +435,7 @@ def _beam_walk(
         sexp = _scored(exp, emb, probes, bcast_probes)
         frontiers.append(sexp)
         pool = cur.unionByName(sexp).distinct()
-        cur = (
-            pool.withColumn("brk", F.row_number().over(wb))
-            .filter(F.col("brk") <= beam)
-            .select("probe_id", "vec_id", "d2_e4")
-        )
+        cur = topk_per_probe(pool, beam, "d2_e4").select("probe_id", "vec_id", "d2_e4")
     vis_scored = frontiers[0]
     for df in frontiers[1:]:
         vis_scored = vis_scored.unionByName(df)
@@ -469,10 +462,8 @@ def _walk_visited(spark: SparkSession, sf_dir: str, cohort: str) -> DataFrame:
 
 
 def _topk_of(visited: DataFrame) -> DataFrame:
-    wb = W.partitionBy("probe_id").orderBy(F.asc("d2_e4"), F.asc("vec_id"))
     return (
-        visited.withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= TOP_K)
+        topk_per_probe(visited, TOP_K, "d2_e4")
         .select("probe_id", F.col("rn").cast("int").alias("rn"), "vec_id", "d2_e4")
         .orderBy("probe_id", "rn")
     )
@@ -496,9 +487,7 @@ def _search_df(spark: SparkSession, sf_dir: str, adj: DataFrame) -> DataFrame:
     (separated so `plans/audit.py` can inspect it without the
     memo/checkpoint)."""
     emb = _emb(spark, sf_dir)
-    probes = _emb(spark, sf_dir).filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-    )
+    probes = probes_of(emb)
     vis0 = (
         probes.join(adj, adj.src == F.col("probe_id"))
         .filter(F.col("dst") != F.col("probe_id"))
@@ -506,25 +495,6 @@ def _search_df(spark: SparkSession, sf_dir: str, adj: DataFrame) -> DataFrame:
         .distinct()
     )
     return _topk_of(_beam_walk(emb, adj, probes, vis0))
-
-
-def _exact_arm(emb: DataFrame, probes: DataFrame) -> DataFrame:
-    """Exact kNN per probe under the same metric/rounding/tie order —
-    the broadcast-probe scan, its window cut map-side (WindowGroupLimit)
-    below the probe_id exchange — no full sort."""
-    scored = emb.join(
-        F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
-    ).select(
-        "probe_id",
-        "vec_id",
-        _d2e4(F.col("embedding"), F.col("probe_vec")).alias("d2_e4"),
-    )
-    w = W.partitionBy("probe_id").orderBy(F.asc("d2_e4"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id")
-    )
 
 
 def graph_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,16 +510,16 @@ def graph_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk's distinct scored-candidate count per probe, so the
     recall-per-budget tradeoff is in the data, not the docstring.
 
-    Scale: the exact arm is the map-side-cut window scan; the approx arm
-    reads the memoized pinned walk; the hit-join runs on ≤ N_PROBES ×
-    TOP_K rows per cohort."""
+    Scale: the exact arm is `similarity.exact_knn` on the d2_e4 grid;
+    the approx arm reads the memoized pinned walk; the hit-join runs on
+    ≤ N_PROBES × TOP_K rows per cohort."""
     emb = _emb(spark, sf_dir)
     _edges, _adj, _memb, k_cells = _built(spark, sf_dir)
     parts = []
     for cohort in COHORTS:
         probes = _cohort_probes(spark, sf_dir, cohort, k_cells)
         visited = _walk_visited(spark, sf_dir, cohort)
-        exact = _exact_arm(emb, probes)
+        exact = exact_knn(emb, TOP_K, _d2e4, probes).select("probe_id", "vec_id")
         approx = _topk_of(visited).select(
             "probe_id", "vec_id", F.lit(1).alias("hit")
         )
@@ -679,7 +649,6 @@ def _layered_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = _cohort_probes(spark, sf_dir, "offseed", k_cells)
     seeds_cand = _seeds(emb, k_cells).select(F.col("cid").alias("vec_id"))
     sup_cand = _supers(emb, k_cells).select(F.col("gid").alias("vec_id"))
-    wc = W.partitionBy("probe_id").orderBy(F.asc("d2_e4"), F.asc("vec_id"))
 
     def members_vis0(cells: DataFrame) -> DataFrame:
         return (
@@ -698,10 +667,8 @@ def _layered_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         probes,
     )
-    cells_f = (
-        sseed.withColumn("crk", F.row_number().over(wc))
-        .filter(F.col("crk") <= CELL_ASSIGN)
-        .select("probe_id", F.col("vec_id").alias("cid"))
+    cells_f = topk_per_probe(sseed, CELL_ASSIGN, "d2_e4").select(
+        "probe_id", F.col("vec_id").alias("cid")
     )
     walk_f = _beam_walk(emb, adj, probes, members_vis0(cells_f))
     scored_f = walk_f.unionByName(sseed).distinct()
@@ -711,10 +678,8 @@ def _layered_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ssup = _scored(
         probes.select("probe_id").crossJoin(F.broadcast(sup_cand)), emb, probes
     )
-    g1 = (
-        ssup.withColumn("grk", F.row_number().over(wc))
-        .filter(F.col("grk") <= 1)
-        .select("probe_id", F.col("vec_id").alias("gid"))
+    g1 = topk_per_probe(ssup, 1, "d2_e4").select(
+        "probe_id", F.col("vec_id").alias("gid")
     )
     vis0_l1 = (
         g1.join(_seed_groups(emb, k_cells), "gid")
@@ -724,15 +689,13 @@ def _layered_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     walk_l1 = _beam_walk(
         emb, adj1, probes, vis0_l1, beam=BEAM_L1, hops=HOPS_L1
     )
-    cells_l = (
-        walk_l1.withColumn("crk", F.row_number().over(wc))
-        .filter(F.col("crk") <= L_CELLS)
-        .select("probe_id", F.col("vec_id").alias("cid"))
+    cells_l = topk_per_probe(walk_l1, L_CELLS, "d2_e4").select(
+        "probe_id", F.col("vec_id").alias("cid")
     )
     walk_b = _beam_walk(emb, adj, probes, members_vis0(cells_l))
     scored_l = walk_b.unionByName(walk_l1).unionByName(ssup).distinct()
 
-    exact = _exact_arm(emb, probes)
+    exact = exact_knn(emb, TOP_K, _d2e4, probes).select("probe_id", "vec_id")
     parts = []
     for arm, scored_all in (("flat", scored_f), ("layered", scored_l)):
         approx = _topk_of(scored_all).select(
@@ -1167,17 +1130,12 @@ def _delta_df(spark: SparkSession, sf_dir: str, pin) -> DataFrame:
         .select("probe_id", "vec_id")
         .distinct()
     )
-    wb = W.partitionBy("probe_id").orderBy(F.asc("d2_e4"), F.asc("vec_id"))
-    dout = (
-        _beam_walk(emb, adj, dprobes, vis0, bcast_probes=False)
-        .withColumn("rank", F.row_number().over(wb))
-        .filter(F.col("rank") <= GRAPH_M)
-        .select(
-            F.col("probe_id").alias("src"),
-            F.col("rank").cast("int").alias("rank"),
-            F.col("vec_id").alias("dst"),
-            "d2_e4",
-        )
+    walk = _beam_walk(emb, adj, dprobes, vis0, bcast_probes=False)
+    dout = topk_per_probe(walk, GRAPH_M, "d2_e4").select(
+        F.col("probe_id").alias("src"),
+        F.col("rn").cast("int").alias("rank"),
+        F.col("vec_id").alias("dst"),
+        "d2_e4",
     )
     # n_delta × GRAPH_M rows, consumed three times (output, reverse
     # edges, shrink) — pin once or the whole walk re-executes per

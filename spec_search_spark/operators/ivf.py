@@ -34,13 +34,19 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import local_df, session_memo, tune
+from spec_search_spark.functions.vector import l2_squared
+from spec_search_spark.operators.similarity import (
+    N_PROBES,
+    TOP_K,
+    exact_knn,
+    probes_of,
+    topk_per_probe,
+)
+from spec_search_spark.session import local_df, session_memo, spread, tune
 
 K_CLUSTERS = 8
 N_ITER = 2
 N_PROBE_CLUSTERS = 2
-TOP_K = 10
-N_PROBES = 5
 
 def _assign_udf(centroids: list[list[float]]):
     """pandas_udf: vector → (nearest centroid id, distance²). Ordered
@@ -143,11 +149,8 @@ def _probe_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     search and check don't re-collect it."""
     cents = np.array(trained_index(spark, sf_dir)[0], dtype=np.float64)
     probes = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_PROBES)
-        .select("vec_id", "embedding")
-        .collect()
+        (int(r["probe_id"]), list(r["probe_vec"]))
+        for r in probes_of(load_table(spark, sf_dir, "embeddings")).collect()
     ]
     probe_rows = []
     for pid, vec in probes:
@@ -165,9 +168,6 @@ def ivf_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cluster-pruned exact re-rank)."""
     _, index = trained_index(spark, sf_dir)
     probe_df = _probe_assignments(spark, sf_dir)
-
-    from spec_search_spark.functions.vector import l2_squared
-
     cand = index.join(
         F.broadcast(probe_df),
         (index.cluster == probe_df.cluster) & (F.col("vec_id") != F.col("probe_id")),
@@ -177,15 +177,8 @@ def ivf_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         index.cluster.alias("cluster"),
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
     )
-    # the per-probe window is cut map-side (WindowGroupLimit) below its
-    # exchange: the cluster-pruned candidate set never shuffles in full
-    # onto the handful of probe_id reducer tasks (see similarity's
-    # module docstring).
-    w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id", "cluster", "dist2", "rn")
+    return topk_per_probe(cand, TOP_K, "dist2").select(
+        "probe_id", "vec_id", "cluster", "dist2", "rn"
     )
 
 
@@ -204,8 +197,6 @@ def ivf_index_build_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     array cells, so the registered query exposes no array column.
     """
     centroids, index = trained_index(spark, sf_dir)
-    from spec_search_spark.functions.vector import l2_squared
-
     cent_df = local_df(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
@@ -237,22 +228,9 @@ def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(probe_id, rn, ex_d2): the exact rank-rn distance per probe over
     the full table — N_PROBES × TOP_K rows, cached (both check runs
     reuse it)."""
-    from spec_search_spark.functions.vector import l2_squared
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-    )
-    scored = emb.join(
-        F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
-    ).withColumn(
-        "ex_d2", F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4)
-    )
-    w = W.partitionBy("probe_id").orderBy(F.asc("ex_d2"), F.asc("vec_id"))
     ex = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "rn", "ex_d2")
+        exact_knn(load_table(spark, sf_dir, "embeddings"), TOP_K)
+        .select("probe_id", "rn", F.col("dist").alias("ex_d2"))
         .cache()
     )
     ex.count()  # materialize now
@@ -351,8 +329,6 @@ def ivf_delta_upsert_query(spark: SparkSession, sf_dir: str) -> DataFrame:
       is minimal over all centroids (independent expression-fold path,
       same ulp slack as ivf_index_build).
     """
-    from spec_search_spark.functions.vector import l2_squared
-
     centroids, index = trained_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     is_delta = F.pmod(F.col("vec_id"), F.lit(DELTA_MOD)) == DELTA_RESIDUE
@@ -422,11 +398,8 @@ def _ranked_probe_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded driver-side collect as `_probe_assignments`; memoized."""
     cents = np.array(trained_index(spark, sf_dir)[0], dtype=np.float64)
     probes = [
-        (int(r["vec_id"]), list(r["embedding"]))
-        for r in load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < N_PROBES)
-        .select("vec_id", "embedding")
-        .collect()
+        (int(r["probe_id"]), list(r["probe_vec"]))
+        for r in probes_of(load_table(spark, sf_dir, "embeddings")).collect()
     ]
     rows = []
     for pid, vec in probes:
@@ -457,28 +430,11 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
       global top-k members.
     Real recall values are pinned against a numpy brute force in
     tests/test_ivf.py; the per-probe candidate-set economics (rank<p
-    join, per-probe window cut map-side before the exchange) reuse the
-    production search plan."""
+    join, `topk_per_probe`) reuse the production search plan."""
     _, index = trained_index(spark, sf_dir)
     probes = _ranked_probe_assignments(spark, sf_dir)
-    from spec_search_spark.functions.vector import l2_squared
-    from spec_search_spark.session import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
-    pvec = probes.select("probe_id", "probe_vec").distinct()
-    ex_scored = emb.join(
-        F.broadcast(pvec), F.col("vec_id") != F.col("probe_id")
-    ).select(
-        "probe_id",
-        "vec_id",
-        F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("d2"),
-    )
-    w = W.partitionBy("probe_id").orderBy(F.asc("d2"), F.asc("vec_id"))
-    exact = (
-        ex_scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id")
-    )
+    exact = exact_knn(emb, TOP_K).select("probe_id", "vec_id")
 
     # Score candidates ONCE at the LARGEST sweep point, keeping each
     # candidate's cluster rank; arm p's candidate set is exactly the
@@ -504,13 +460,8 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     per_p = []
     for p in SWEEP_NPROBES:
-        cand = scored.filter(F.col("rank") < p)
-        topk = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOP_K)
-            .select(F.lit(p).alias("nprobe"), "probe_id", "vec_id")
-        )
-        per_p.append(topk)
+        topk = topk_per_probe(scored.filter(F.col("rank") < p), TOP_K, "d2")
+        per_p.append(topk.select(F.lit(p).alias("nprobe"), "probe_id", "vec_id"))
     approx = per_p[0]
     for df in per_p[1:]:
         approx = approx.unionByName(df)

@@ -33,11 +33,9 @@ Plan shape (the audit pins it):
   cluster key — only rows in probed clusters survive the hash join (a
   cluster-partitioned parquet layout turns this into partition
   pruning at deployment);
-- per-probe top-k is a row_number window that Spark cuts map-side
-  (WindowGroupLimit, k = CAND_K ≤ the 1000-row threshold — see
-  similarity's module docstring) BEFORE the probe_id exchange — the
-  scored candidate set never shuffles in full onto the handful of
-  probe reducers;
+- per-probe top-k is `similarity.topk_per_probe`, cut map-side BEFORE
+  the probe_id exchange — the scored candidate set never shuffles in
+  full onto the handful of probe reducers;
 - the exact re-rank touches ≤ probes × CAND_K rows.
 
 At 100 TB: scan cost ∝ nprobe/K_COARSE of the corpus in 8-byte codes;
@@ -47,7 +45,7 @@ would sample (the FAISS norm) but keeps this plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spec_search_spark.functions.vector import l2_squared, l2_squared_sql
@@ -61,14 +59,25 @@ from spec_search_spark.operators.pq import (
     _init_codebook,
     _update_codebook,
 )
+from spec_search_spark.operators.similarity import (
+    N_PROBES,
+    TOP_K,
+    _emb,
+    exact_knn,
+    probes_of,
+    topk_per_probe,
+)
 from spec_search_spark.session import local_df, session_memo, tune
 
 DIM = M_SUB * SUB_DIM       # 64-dim embeddings
-N_PROBES = 5                # probe queries: vec_id < N_PROBES
 IVFPQ_NPROBE = 2            # probed coarse clusters in ivfpq_search
 SWEEP_NPROBES = (1, 2, 4)   # recall-report sweep points
 CAND_K = 100                # ADC survivors kept for exact re-rank
-TOP_K = 10
+
+
+def _d2_6dp(a: Column, b: Column) -> Column:
+    """The 1e-6 distance grid every IVFADC stage and its oracle share."""
+    return F.round(l2_squared(a, b), 6)
 
 
 @session_memo
@@ -123,14 +132,6 @@ def _encoded(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     return book, enc
 
 
-def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        kmeans._emb(spark, sf_dir)
-        .filter(F.col("vec_id") < N_PROBES)
-        .select(F.col("vec_id").alias("probe_id"), F.col("e").alias("q"))
-    )
-
-
 @session_memo
 def _probe_luts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(probe_id, rank, cid, lut): per probe, its max(SWEEP) nearest
@@ -140,12 +141,12 @@ def _probe_luts(spark: SparkSession, sf_dir: str) -> DataFrame:
     every sweep point via rank < p. Memoized; broadcast at use."""
     book, _ = _encoded(spark, sf_dir)
     cent = kmeans._trained_centroids(spark, sf_dir)
-    pdist = _probes(spark, sf_dir).crossJoin(F.broadcast(cent)).select(
+    pdist = probes_of(_emb(spark, sf_dir)).crossJoin(F.broadcast(cent)).select(
         "probe_id",
-        "q",
+        "probe_vec",
         "cid",
         "c",
-        F.round(l2_squared(F.col("q"), F.col("c")), 6).alias("d2"),
+        _d2_6dp(F.col("probe_vec"), F.col("c")).alias("d2"),
     )
     w = Window.partitionBy("probe_id").orderBy("d2", "cid")
     near = (
@@ -156,7 +157,7 @@ def _probe_luts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probe_id",
         "rank",
         "cid",
-        F.zip_with("q", "c", lambda x, y: x - y).alias("qr"),
+        F.zip_with("probe_vec", "c", lambda x, y: x - y).alias("qr"),
     )
     lut_rows = qres.crossJoin(
         F.broadcast(book.select("sub", "code", F.col("c").alias("bc")))
@@ -165,11 +166,8 @@ def _probe_luts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         "cid",
         (F.col("sub") * K_CODES + F.col("code")).alias("idx"),
-        F.round(
-            l2_squared(
-                F.expr(f"slice(qr, sub * {SUB_DIM} + 1, {SUB_DIM})"), F.col("bc")
-            ),
-            6,
+        _d2_6dp(
+            F.expr(f"slice(qr, sub * {SUB_DIM} + 1, {SUB_DIM})"), F.col("bc")
         ).alias("d"),
     )
     return (
@@ -232,26 +230,19 @@ def _search_at(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
 
 def _arm_topk(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
     """CAND_K ADC survivors → exact re-rank → per-probe TOP_K."""
-    wc = Window.partitionBy("probe_id").orderBy("approx_d2", "vec_id")
-    candk = (
-        approx.withColumn("crn", F.row_number().over(wc))
-        .filter(F.col("crn") <= CAND_K)
-        .drop("crn")
-    )
+    emb = _emb(spark, sf_dir)
+    candk = topk_per_probe(approx, CAND_K, "approx_d2").drop("rn")
     rr = (
-        candk.join(kmeans._emb(spark, sf_dir), "vec_id")
-        .join(F.broadcast(_probes(spark, sf_dir)), "probe_id")
+        candk.join(emb, "vec_id")
+        .join(F.broadcast(probes_of(emb)), "probe_id")
         .select(
             "probe_id",
             "vec_id",
             "approx_d2",
-            F.round(l2_squared(F.col("e"), F.col("q")), 6).alias("d2"),
+            _d2_6dp(F.col("embedding"), F.col("probe_vec")).alias("d2"),
         )
     )
-    wr = Window.partitionBy("probe_id").orderBy("d2", "vec_id")
-    return rr.withColumn("rn", F.row_number().over(wr)).filter(
-        F.col("rn") <= TOP_K
-    )
+    return topk_per_probe(rr, TOP_K, "d2")
 
 
 def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -268,27 +259,6 @@ def ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(probe_id, vec_id): exact L2 top-k per probe over the full
-    corpus — the recall denominator (knn_exact's shape on the 1e-6
-    grid with the shared map-side window cut)."""
-    scored = (
-        kmeans._emb(spark, sf_dir)
-        .join(F.broadcast(_probes(spark, sf_dir)), F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(l2_squared(F.col("e"), F.col("q")), 6).alias("xd2"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy("xd2", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id")
-    )
-
-
 def ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@{TOP_K} of IVFADC vs exact kNN per (nprobe, probe) over
     nprobe ∈ {SWEEP_NPROBES} — the tuning curve that picks the
@@ -297,7 +267,9 @@ def ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     are oracle-replayed, not invariant-checked).
 
     Output: (nprobe, probe_id, n_hits, recall) ordered."""
-    exact = _exact_topk(spark, sf_dir)
+    emb = _emb(spark, sf_dir)
+    # the recall denominator: exact top-k on the same 1e-6 grid
+    exact = exact_knn(emb, TOP_K, _d2_6dp).select("probe_id", "vec_id")
     # score candidates ONCE at the largest sweep point with cluster
     # rank kept; each arm filters the pinned scored table instead of
     # re-running the ADC fold per nprobe (same recipe as
@@ -328,7 +300,7 @@ def ivfpq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = allt.join(exact, ["probe_id", "vec_id"]).groupBy(
         "nprobe", "probe_id"
     ).agg(F.count(F.lit(1)).alias("n_hits"))
-    grid = _probes(spark, sf_dir).select("probe_id").crossJoin(
+    grid = probes_of(emb).select("probe_id").crossJoin(
         F.broadcast(
             local_df(spark, [(p,) for p in SWEEP_NPROBES], "nprobe int")
         )
@@ -388,7 +360,7 @@ def ivfpq_delta_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "e",
         "cid",
         "c",
-        F.round(l2_squared(F.col("e"), F.col("c")), 6).alias("d2"),
+        _d2_6dp(F.col("e"), F.col("c")).alias("d2"),
     )
     wv = Window.partitionBy("vec_id").orderBy("d2", "cid")
     assigned = (

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
+from spec_search_spark.operators.similarity import N_PROBES, TOP_K, topk_per_probe
 from spec_search_spark.session import tune
 
 SEED_BRP = 42
@@ -45,10 +46,9 @@ def mllib_brp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approxSimilarityJoin of the embedding table against 5 probe
     vectors within an L2 radius, top-10 per probe."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.sql.window import Window as W
 
     data = _emb_vectors(spark, sf_dir)
-    probes = data.filter(F.col("vec_id") < 5).select(
+    probes = data.filter(F.col("vec_id") < N_PROBES).select(
         F.col("vec_id").alias("probe_id"), F.col("features").alias("p_features")
     )
     lsh = BucketedRandomProjectionLSH(
@@ -63,10 +63,7 @@ def mllib_brp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("datasetA.vec_id").alias("vec_id"),
         F.round(F.col("dist"), 4).alias("dist"),
     ).filter(F.col("vec_id") != F.col("probe_id"))
-    w = W.partitionBy("probe_id").orderBy(F.asc("dist"), F.asc("vec_id"))
-    return (
-        out.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 10)
-    )
+    return topk_per_probe(out, TOP_K, "dist")
 
 
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -34,7 +34,7 @@ from spec_search_spark.functions.vector import (
     cosine_similarity,
     cosine_similarity_sql,
 )
-from spec_search_spark.operators.similarity import _emb, _probes
+from spec_search_spark.operators.similarity import _emb, probes_of
 from spec_search_spark.session import local_df, tune
 
 CAND = 24  # candidate pool (the corpus-scale cut)
@@ -59,7 +59,7 @@ def _candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, rel_e4, embedding): top-CAND by cosine to probe 0 —
     the distributed phase."""
     emb = _emb(spark, sf_dir)
-    probe = _probes(spark, sf_dir).filter(F.col("probe_id") == 0)
+    probe = probes_of(emb).filter(F.col("probe_id") == 0)
     top = (
         emb.join(F.broadcast(probe), F.col("vec_id") != F.col("probe_id"))
         .select(

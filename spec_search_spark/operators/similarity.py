@@ -14,6 +14,10 @@ core capability, re-expressed Spark-first):
 Scale design:
 - probes are always the broadcast side; the 100 TB embedding table
   never shuffles for a search.
+- the probe set (`probes_of`), the per-probe cut (`topk_per_probe`)
+  and the exact ground truth (`exact_knn`) live here once; every ANN
+  family (ivf, ivfpq, graph_ann, vector_quant, mllib_lsh, mmr) uses
+  them.
 - top-k per probe = `row_number()` over a probe_id window filtered to
   rn <= k — never a global sort. Spark cuts it map-side by itself:
   `InferWindowGroupLimit` plans a Partial `WindowGroupLimit` below the
@@ -21,7 +25,7 @@ Scale design:
   cross it, never the scored corpus. The rule fires for a
   row_number/rank filter whose k ≤
   `spark.sql.optimizer.windowGroupLimitThreshold` (default 1000); the
-  largest k here is `ivfpq.CAND_K` = 100.
+  largest k in use is `ivfpq.CAND_K` = 100.
 - LSH bucket join: bucket ids are small ints; candidate sets shrink
   the exact-distance work by ~2^planes; at 100 TB you'd add multi-probe
   (flip lowest-margin bits) for recall — parameters here.
@@ -32,7 +36,7 @@ Scale design:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
@@ -75,12 +79,42 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-def _probes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _emb(spark, sf_dir)
-        .filter(F.col("vec_id") < N_PROBES)
-        .select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec"))
+def probes_of(emb: DataFrame, *extra: Column) -> DataFrame:
+    """(probe_id, probe_vec, *extra): the probe set, vec_id < N_PROBES
+    of an embedding frame."""
+    return emb.filter(F.col("vec_id") < N_PROBES).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec"), *extra
     )
+
+
+def topk_per_probe(scored: DataFrame, k: int, *order) -> DataFrame:
+    """`scored` + rn, kept while rn <= k: row_number over each probe_id
+    ordered by (*order, vec_id) — the one per-probe cut, planned as a
+    map-side WindowGroupLimit (module docstring)."""
+    w = W.partitionBy("probe_id").orderBy(*order, "vec_id")
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def _l2_4dp(a: Column, b: Column) -> Column:
+    return F.round(l2_squared(a, b), 4)
+
+
+def exact_knn(
+    emb: DataFrame, k: int, dist=_l2_4dp, probes: DataFrame | None = None
+) -> DataFrame:
+    """(probe_id, vec_id, dist, rn): exact top-k neighbors of every
+    probe (default `probes_of(emb)`), self excluded — the one exact arm
+    every ANN family's recall is graded against. `dist(embedding,
+    probe_vec)` is the caller's rounding grid, so each oracle's tie
+    order holds: round(l2², 4) by default, 6 dp for ivfpq, `_d2e4` for
+    graph_ann."""
+    probes = probes_of(emb) if probes is None else probes
+    scored = emb.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id")).select(
+        "probe_id",
+        "vec_id",
+        dist(F.col("embedding"), F.col("probe_vec")).alias("dist"),
+    )
+    return topk_per_probe(scored, k, "dist")
 
 
 # --- exact kNN --------------------------------------------------------------
@@ -92,7 +126,7 @@ def knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the vector column; TakeOrderedAndProject for the limit.
     """
     emb = _emb(spark, sf_dir)
-    probe = _probes(spark, sf_dir).filter(F.col("probe_id") == 0)
+    probe = probes_of(emb).filter(F.col("probe_id") == 0)
     return (
         emb.join(F.broadcast(probe), F.col("vec_id") != F.col("probe_id"))
         .withColumn("dist2", F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4))
@@ -113,30 +147,13 @@ LIMIT {TOP_K}
 """
 
 
-def _exact_knn(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    """(probe_id, vec_id, dist2, rn): exact top-k L2 neighbors of every
-    probe, self excluded — the one exact arm the multi-probe scan and
-    the ANN evals share (4dp-rounded L2, vec_id tiebreak)."""
-    emb = _emb(spark, sf_dir)
-    probes = _probes(spark, sf_dir)
-    scored = emb.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id")).select(
-        "probe_id",
-        "vec_id",
-        F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
-    )
-    w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("probe_id", "vec_id", "dist2", "rn")
-    )
-
-
 def knn_multi_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 L2 neighbors for each of 5 probes — the per-probe window
     cut map-side below its one exchange, the many-query batch shape of
     reference E1."""
-    return _exact_knn(spark, sf_dir, 5)
+    return exact_knn(_emb(spark, sf_dir), 5).select(
+        "probe_id", "vec_id", F.col("dist").alias("dist2"), "rn"
+    )
 
 
 KNN_MULTI_SQL = f"""
@@ -158,7 +175,7 @@ WHERE rn <= 5
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 cosine neighbors of probe vec_id=0."""
     emb = _emb(spark, sf_dir)
-    probe = _probes(spark, sf_dir).filter(F.col("probe_id") == 0)
+    probe = probes_of(emb).filter(F.col("probe_id") == 0)
     return (
         emb.join(F.broadcast(probe), F.col("vec_id") != F.col("probe_id"))
         .withColumn(
@@ -242,8 +259,9 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on bucket (or is written bucketed by this key, making repeat
     queries shuffle-free).
     """
-    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr(F.col("embedding")))
-    probes = _probes(spark, sf_dir).withColumn("p_bucket", _bucket_expr(F.col("probe_vec")))
+    emb = _emb(spark, sf_dir)
+    probes = probes_of(emb).withColumn("p_bucket", _bucket_expr(F.col("probe_vec")))
+    emb = emb.withColumn("bucket", _bucket_expr(F.col("embedding")))
     cand = emb.join(
         F.broadcast(probes),
         (F.col("bucket") == F.col("p_bucket")) & (F.col("vec_id") != F.col("probe_id")),
@@ -253,11 +271,8 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
     )
-    w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id", "bucket", "dist2", "rn")
+    return topk_per_probe(cand, TOP_K, "dist2").select(
+        "probe_id", "vec_id", "bucket", "dist2", "rn"
     )
 
 
@@ -286,12 +301,12 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     that tells you whether a bucketing config is shippable before you
     point it at the full corpus.
 
-    Both arms reuse the production operators (exact arm = `_exact_knn`,
+    Both arms reuse the production operators (exact arm = `exact_knn`,
     the multi-probe scan at k=TOP_K; approx arm = `ann_lsh_bucketed`), so
     the report measures the deployed plans, not a reimplementation.
     Scale: both arms end at ≤ N_PROBES×TOP_K rows; the hit-join and
     per-probe rollup are driver-trivial regardless of corpus size."""
-    exact = _exact_knn(spark, sf_dir, TOP_K).select("probe_id", "vec_id")
+    exact = exact_knn(_emb(spark, sf_dir), TOP_K).select("probe_id", "vec_id")
     approx = ann_lsh_bucketed(spark, sf_dir).select(
         "probe_id", "vec_id", F.lit(1).alias("hit")
     )
@@ -369,9 +384,9 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps its single bucket id. Exact L2 re-rank of candidates only,
     the per-probe window cut map-side below its exchange — same shape
     as ann_lsh_bucketed."""
-    emb = _emb(spark, sf_dir).withColumn("bucket", _bucket_expr(F.col("embedding")))
+    emb = _emb(spark, sf_dir)
     probes = (
-        _probes(spark, sf_dir)
+        probes_of(emb)
         .withColumn("p_bucket", _bucket_expr(F.col("probe_vec")))
         .select(
             "probe_id",
@@ -387,6 +402,7 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("probed_bucket"),
         )
     )
+    emb = emb.withColumn("bucket", _bucket_expr(F.col("embedding")))
     # a vector matches at most ONE probed bucket per probe (the flipped
     # buckets are pairwise distinct), so no pair dedup is needed.
     cand = emb.join(
@@ -398,11 +414,8 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
         F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4).alias("dist2"),
     )
-    w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id", "bucket", "dist2", "rn")
+    return topk_per_probe(cand, TOP_K, "dist2").select(
+        "probe_id", "vec_id", "bucket", "dist2", "rn"
     )
 
 
@@ -777,10 +790,11 @@ def filtered_ann_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     a selective filter prunes row groups and the distance fold runs
     only over survivors — filter-then-search, never search-then-filter.
     """
-    emb = _emb(spark, sf_dir).filter(F.col("label") == FILTER_LABEL)
-    probe = _probes(spark, sf_dir).filter(F.col("probe_id") == 0)
+    emb = _emb(spark, sf_dir)
+    probe = probes_of(emb).filter(F.col("probe_id") == 0)
     return (
-        emb.join(F.broadcast(probe), F.col("vec_id") != F.col("probe_id"))
+        emb.filter(F.col("label") == FILTER_LABEL)
+        .join(F.broadcast(probe), F.col("vec_id") != F.col("probe_id"))
         .withColumn("dist2", F.round(l2_squared(F.col("embedding"), F.col("probe_vec")), 4))
         .orderBy(F.asc("dist2"), F.asc("vec_id"))
         .select("vec_id", "label", "dist2")
@@ -1372,14 +1386,13 @@ def rbo_ann_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth ≥ max(ra, rb), so its total weight is a PURE FUNCTION of
     max(ra, rb) — precomputed in python, snapped to integer nano-units
     and embedded as literals in BOTH engines (zero cross-engine float
-    surface). The exact ranking is `_exact_knn`, the approx one
+    surface). The exact ranking is `exact_knn`, the approx one
     `ann_lsh_bucketed`; matches are one equi-join of two ≤K·n_probes
     tables; the final score is one fixed-arity division."""
     cs, ideal = _rbo_coeffs()
-    probes = _probes(spark, sf_dir)
-    exact = _exact_knn(spark, sf_dir, TOP_K).select(
-        "probe_id", "vec_id", F.col("rn").alias("ra")
-    )
+    emb = _emb(spark, sf_dir)
+    probes = probes_of(emb)
+    exact = exact_knn(emb, TOP_K).select("probe_id", "vec_id", F.col("rn").alias("ra"))
     approx = ann_lsh_bucketed(spark, sf_dir).select(
         "probe_id", "vec_id", F.col("rn").alias("rb")
     )
@@ -1473,11 +1486,7 @@ def retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (probe_id, n_rel, hits_at_k, mrr_micro, dcg_micro,
     idcg_micro, ndcg_6, recall_6) ordered by probe_id."""
     emb = _emb(spark, sf_dir)
-    probes = emb.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_vec"),
-        F.col("label").alias("probe_label"),
-    )
+    probes = probes_of(emb, F.col("label").alias("probe_label"))
     scored = (
         emb.join(F.broadcast(probes), F.col("vec_id") != F.col("probe_id"))
         .withColumn(
@@ -1485,10 +1494,9 @@ def retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("probe_id", "probe_label", "vec_id", "label", "dist2")
     )
-    w = W.partitionBy("probe_id").orderBy("dist2", "vec_id")
     ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        topk_per_probe(scored, TOP_K, "dist2")
+        .withColumnRenamed("rn", "rank")
         .withColumn(
             "rel", F.when(F.col("label") == F.col("probe_label"), 1).otherwise(0)
         )

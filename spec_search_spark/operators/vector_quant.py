@@ -22,12 +22,22 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.functions.vector import cosine_similarity, cosine_similarity_sql
-from spec_search_spark.operators.similarity import N_PROBES, TOP_K
-from spec_search_spark.session import session_memo, tune
+from spec_search_spark.functions.vector import (
+    cosine_similarity,
+    cosine_similarity_sql,
+    l2_squared,
+    l2_squared_sql,
+)
+from spec_search_spark.operators.similarity import (
+    N_PROBES,
+    TOP_K,
+    exact_knn,
+    probes_of,
+    topk_per_probe,
+)
+from spec_search_spark.session import session_memo, spread, tune
 
 Q_MAX = 127  # int8 range
 CAND = 50  # approx-scored candidate pool per probe, re-ranked exactly
@@ -193,21 +203,11 @@ def ann_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = q.select("vec_id", "scale", "qv").mapInPandas(
         score_fold, "probe_id bigint, vec_id bigint, neg_approx double"
     )
-    wc = W.partitionBy("probe_id").orderBy(F.asc("neg_approx"), F.asc("vec_id"))
-    cand = (
-        scored.withColumn("rc", F.row_number().over(wc))
-        .filter(F.col("rc") <= CAND)
-        .select("probe_id", "vec_id")
-    )
+    cand = topk_per_probe(scored, CAND, "neg_approx").select("probe_id", "vec_id")
     emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-    )
     rer = (
         emb.join(F.broadcast(cand), "vec_id")
-        .join(
-            F.broadcast(probes.select("probe_id", "probe_vec")), "probe_id"
-        )
+        .join(F.broadcast(probes_of(emb)), "probe_id")
         .select(
             "probe_id",
             "vec_id",
@@ -216,11 +216,8 @@ def ann_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos_sim"),
         )
     )
-    wr = W.partitionBy("probe_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (
-        rer.withColumn("rn", F.row_number().over(wr))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "rn", "vec_id", "cos_sim")
+    return topk_per_probe(rer, TOP_K, F.desc("cos_sim")).select(
+        "probe_id", "rn", "vec_id", "cos_sim"
     )
 
 
@@ -271,14 +268,9 @@ def matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a count join of the truncated lists against the full-dim list.
     All selections use round(dist², 4) + vec_id tiebreaks, so both
     engines pick identical lists."""
-    from spec_search_spark.functions.vector import l2_squared
-
     tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_vec"),
-    )
+    probes = probes_of(emb)
     per_dim = []
     for d in MRL_DIMS:
         scored = emb.join(
@@ -295,13 +287,8 @@ def matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("dist2"),
         )
-        w = W.partitionBy("probe_id").orderBy(
-            F.asc("dist2"), F.asc("vec_id")
-        )
         per_dim.append(
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= TOP_K)
-            .select("dim", "probe_id", "vec_id")
+            topk_per_probe(scored, TOP_K, "dist2").select("dim", "probe_id", "vec_id")
         )
     ranked = per_dim[0]
     for more in per_dim[1:]:
@@ -336,8 +323,6 @@ def matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mrl_sql() -> str:
-    from spec_search_spark.functions.vector import l2_squared_sql
-
     per_dim = []
     for d in MRL_DIMS:
         per_dim.append(f"""
@@ -422,8 +407,6 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread: the JL signed sums + both scoring passes are pure per-row
     # compute on the local single-row-group scan's one core (no-op at
     # scale — see session.spread).
-    from spec_search_spark.session import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"), "vec_id")
     proj = emb.select(
         "vec_id",
@@ -434,40 +417,17 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             + ")"
         ).alias("pv"),
     )
-    probes = proj.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"),
-        F.col("embedding").alias("probe_vec"),
-        F.col("pv").alias("probe_pv"),
-    )
-    from spec_search_spark.functions.vector import l2_squared
-
+    probes = probes_of(proj, F.col("pv").alias("probe_pv"))
     scored = proj.join(
         F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
+    ).select(
+        "probe_id",
+        "vec_id",
+        F.round(l2_squared(F.col("pv"), F.col("probe_pv")), 4).alias("dist2"),
     )
-    w = W.partitionBy("probe_id").orderBy(F.asc("dist2"), F.asc("vec_id"))
-    approx = (
-        scored.select(
-            "probe_id",
-            "vec_id",
-            F.round(l2_squared(F.col("pv"), F.col("probe_pv")), 4).alias(
-                "dist2"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select("probe_id", "vec_id")
-    )
-    truth = (
-        scored.select(
-            "probe_id",
-            "vec_id",
-            F.round(
-                l2_squared(F.col("embedding"), F.col("probe_vec")), 4
-            ).alias("dist2"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
-        .select(F.col("probe_id").alias("tp"), F.col("vec_id").alias("tv"))
+    approx = topk_per_probe(scored, TOP_K, "dist2").select("probe_id", "vec_id")
+    truth = exact_knn(emb, TOP_K).select(
+        F.col("probe_id").alias("tp"), F.col("vec_id").alias("tv")
     )
     return (
         approx.join(
@@ -492,8 +452,6 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jl_sql() -> str:
-    from spec_search_spark.functions.vector import l2_squared_sql
-
     pv = (
         "list_value("
         + ", ".join(_jl_component("embedding", k, 1) for k in range(JL_DIM))

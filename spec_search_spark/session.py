@@ -23,6 +23,10 @@ and live in the single registry ``_MEMO``:
   checkpoint blocks and cached plans for the process lifetime;
 - cap: on insert, each builder keeps at most ``MEMO_CAP`` entries,
   the oldest going first.
+- release: a cap eviction or a stale replace unpersists every cached
+  DataFrame in the dropped value (a tuple is walked one level deep);
+  localCheckpoint blocks are left to Spark's ContextCleaner, which
+  drops them once the frame is unreachable.
 
 How an artifact is stored (localCheckpoint, cache, durable persist)
 stays the builder's choice.
@@ -33,7 +37,8 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable confs applied even to an externally provided session
 # (the correctness driver passes its own SparkSession to entry()).
@@ -200,6 +205,16 @@ def _fingerprint(sf_dir: str):
     return sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats)
 
 
+def _release(value) -> None:
+    """Unpersist the cached DataFrames of an evicted memo value."""
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame) and v.is_cached:
+            try:
+                v.unpersist()
+            except Py4JError:  # its session is stopped: nothing to free
+                pass
+
+
 def session_memo(build):
     """Memoize ``build(spark, sf_dir, *extra)`` in the session registry
     (policy in the module docstring). ``cache_clear()`` drops the
@@ -214,13 +229,14 @@ def session_memo(build):
         hit = _MEMO.get(key)
         if hit is not None and hit[0] == fp:
             return hit[1]
+        if hit is not None:
+            _release(_MEMO.pop(key)[1])
         value = build(spark, sf_dir, *extra)
-        _MEMO.pop(key, None)
         for k in [k for k in _MEMO if k[0] != app]:
             del _MEMO[k]
         mine = [k for k in _MEMO if k[1] == name]
         for k in mine[: max(0, len(mine) - MEMO_CAP + 1)]:
-            del _MEMO[k]
+            _release(_MEMO.pop(k)[1])
         _MEMO[key] = (fp, value)
         return value
 

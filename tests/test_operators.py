@@ -5,6 +5,8 @@ invariants, and the non-oracle ops)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 
@@ -581,3 +583,42 @@ def test_asof_cogroup_bucket_with_no_purchases(spark, tmp_path):
         assert out[cid]["purchase_value"] is None
     assert out[4]["purchase_id"] == 3
     assert out[4]["purchase_value"] == 9.5
+
+
+_TIE_CASES = st.lists(
+    st.tuples(
+        st.integers(0, 3),  # probe_id
+        st.integers(0, 40),  # vec_id
+        st.integers(0, 4),  # dist: few values, so ties are common
+    ),
+    max_size=40,
+    unique_by=lambda t: (t[0], t[1]),
+)
+
+
+@given(rows=_TIE_CASES, k=st.integers(1, 6))
+# a tie straddling rank k, and a probe with fewer than k candidates
+@example(rows=[(0, 5, 1), (0, 3, 2), (0, 1, 2), (0, 9, 2), (1, 4, 0)], k=3)
+@settings(max_examples=25, deadline=None)
+def test_topk_per_probe_matches_lexsort(spark, rows, k):
+    """topk_per_probe keeps, per probe, the first k rows by (dist,
+    vec_id) with rn = 1..k — numpy's lexsort((vec_id, dist)) per probe."""
+    import numpy as np
+
+    from spec_search_spark.operators.similarity import topk_per_probe
+    from spec_search_spark.session import local_df
+
+    scored = local_df(spark, rows, "probe_id int, vec_id bigint, dist double")
+    got = sorted(
+        tuple(r)
+        for r in topk_per_probe(scored, k, "dist")
+        .select("probe_id", "vec_id", "dist", "rn")
+        .collect()
+    )
+    want = []
+    arr = np.array(rows, dtype=np.int64).reshape(-1, 3)
+    for p in np.unique(arr[:, 0]):
+        mine = arr[arr[:, 0] == p]
+        order = np.lexsort((mine[:, 1], mine[:, 2]))[:k]
+        want += [(int(p), int(v), float(d), rn) for rn, (_, v, d) in enumerate(mine[order], 1)]
+    assert got == sorted(want)

@@ -20,9 +20,23 @@ def test_two_phase_topk_single_shuffle(spark, sf_dir):
     reducer tasks — only the ≤ k×partitions×probes survivor set does."""
     import re
 
+    from spec_search_spark.operators.graph_ann import _d2e4
     from spec_search_spark.operators.ivf import ivf_ann_search
-    from spec_search_spark.operators.ivfpq import IVFPQ_NPROBE, _search_at
-    from spec_search_spark.operators.similarity import ann_lsh_bucketed, knn_multi_probe
+    from spec_search_spark.operators.ivfpq import (
+        CAND_K,
+        IVFPQ_NPROBE,
+        _adc_scored,
+        _d2_6dp,
+        _search_at,
+    )
+    from spec_search_spark.operators.similarity import (
+        TOP_K,
+        _emb,
+        ann_lsh_bucketed,
+        exact_knn,
+        knn_multi_probe,
+        topk_per_probe,
+    )
     from spec_search_spark.plans.audit import plan_of
 
     searches = {
@@ -32,6 +46,14 @@ def test_two_phase_topk_single_shuffle(spark, sf_dir):
         # ivfpq_search without its (probe_id, rn) result sort, whose
         # range exchange is presentation, not search
         "ivfpq_search": lambda s, d: _search_at(s, d, IVFPQ_NPROBE),
+        # the shared exact arm on each oracle grid in use
+        "exact_knn[4dp]": lambda s, d: exact_knn(_emb(s, d), TOP_K),
+        "exact_knn[6dp]": lambda s, d: exact_knn(_emb(s, d), TOP_K, _d2_6dp),
+        "exact_knn[d2e4]": lambda s, d: exact_knn(_emb(s, d), TOP_K, _d2e4),
+        # the largest k in use still plans the map-side cut
+        "ivfpq_cand_k": lambda s, d: topk_per_probe(
+            _adc_scored(s, d, IVFPQ_NPROBE), CAND_K, "approx_d2"
+        ),
     }
     for name, fn in searches.items():
         plan = plan_of(fn(spark, sf_dir))

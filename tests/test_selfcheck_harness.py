@@ -6,12 +6,25 @@ it exists to ignore)."""
 from __future__ import annotations
 
 import math
+import os
 import sys
 from pathlib import Path
 
+import duckdb
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
-from selfcheck import norm_cell, norm_rows  # noqa: E402
+from selfcheck import duckdb_connect, norm_cell, norm_rows  # noqa: E402
+
+
+def test_duckdb_connection_is_capped_for_the_host():
+    def setting(con, name):
+        return con.execute(f"SELECT current_setting('{name}')").fetchone()[0]
+
+    capped, fresh = duckdb_connect(), duckdb.connect()
+    assert setting(capped, "threads") == min(2, os.cpu_count() or 1)
+    # set from MemAvailable, not DuckDB's 80%-of-RAM default
+    assert setting(capped, "memory_limit") != setting(fresh, "memory_limit")
 
 
 def test_detects_value_drift():

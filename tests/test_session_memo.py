@@ -100,6 +100,36 @@ def test_each_builder_keeps_at_most_cap_entries(spark, tmp_path):
     assert _entries(_name(build)) == []
 
 
+def test_evicted_entries_release_their_cache(spark, sf_dir, tmp_path):
+    """A cap eviction or a stale replace unpersists the dropped index;
+    the entries the memo keeps stay cached."""
+    from pyspark import StorageLevel
+
+    from spec_search_spark.operators.ivf import trained_index
+    from spec_search_spark.session import MEMO_CAP
+
+    dirs = []
+    for i in range(MEMO_CAP + 2):
+        d = tmp_path / f"c{i}"
+        d.mkdir()
+        shutil.copyfile(os.path.join(sf_dir, "embeddings.parquet"), d / "embeddings.parquet")
+        dirs.append(str(d))
+    trained_index.cache_clear()
+    indexes = [trained_index(spark, d)[1] for d in dirs]
+    try:
+        assert [ix.storageLevel == StorageLevel.NONE for ix in indexes] == (
+            [True] * 2 + [False] * MEMO_CAP
+        )
+        _keep_first_half(dirs[-1], "embeddings")
+        indexes.append(trained_index(spark, dirs[-1])[1])
+        assert indexes[-2].storageLevel == StorageLevel.NONE
+        assert indexes[2].storageLevel != StorageLevel.NONE
+    finally:
+        trained_index.cache_clear()
+        for ix in indexes:
+            ix.unpersist()
+
+
 def test_clear_memos_forces_a_rebuild(spark, sf_dir, tmp_path):
     """perfbench prices index builds by clearing memos before each of
     its builds; a build after `workloads.clear_memos` must be a miss."""

@@ -9,12 +9,13 @@ Usage: python tools/selfcheck.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from spec_search_spark.catalog import TABLES  # noqa: E402
 from spec_search_spark.session import get_spark  # noqa: E402
@@ -64,6 +65,29 @@ def norm_rows(cols, rows):
     return out
 
 
+def _mem_available_mb() -> int | None:
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return None
+
+
+def duckdb_connect():
+    """A DuckDB connection sized to the host: at most 2 threads, and
+    half of MemAvailable, so the oracle and the Spark side of the same
+    check share the machine instead of racing for it."""
+    con = duckdb.connect()
+    con.execute(f"SET threads = {min(2, os.cpu_count() or 1)}")
+    avail = _mem_available_mb()
+    if avail:
+        con.execute(f"SET memory_limit = '{avail // 2}MB'")
+    return con
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -74,7 +98,7 @@ def main() -> int:
     oracles = e.oracle_sql()
 
     spark = get_spark("selfcheck")
-    con = duckdb.connect()
+    con = duckdb_connect()
     for t in TABLES:
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
