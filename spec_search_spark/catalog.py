@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spec_search_spark.session import refresh_if_rewritten
+
 TABLES = (
     "region",
     "nation",
@@ -42,10 +44,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     whole operator surface (unix_micros, watermarks, window frames)
     sees one stable type. Integer division (`div`) keeps the full
     64-bit precision (a double division would corrupt epoch-nanos).
+
+    A file rewritten since its last load in this session has its cached
+    plans refreshed first (`session.refresh_if_rewritten`).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    refresh_if_rewritten(spark, path)
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T

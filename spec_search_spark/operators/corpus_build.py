@@ -73,7 +73,6 @@ from spec_search_spark.operators.dedup import (
     _POLY_SQL,
     _SHINGLES_SQL,
     _dedup_clusters_sql,
-    _materialize,
     _poly_hash,
     dedup_clusters,
     hashed_shingle_postings,
@@ -94,7 +93,7 @@ from spec_search_spark.operators.pipeline_ops import (
     shard_rank,
 )
 from spec_search_spark.operators.span_dedup import _HITS_SQL, span_dup_ratio
-from spec_search_spark.session import tune
+from spec_search_spark.session import pin, tune
 
 SAMPLE_MOD = 1_000_000  # the weighted_sample threshold grid
 CONTAIN_NUM = 4  # flag when n_overlap/n_shingles ≥ 4/5 — integer
@@ -156,8 +155,8 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     f3 = f2 & F.coalesce("is_canonical", F.lit(False))
     f4 = f3 & ~is_bench & ~F.coalesce("contaminated", F.lit(False))
     # flags feeds the weights aggregate AND the final flag table —
-    # bounded-transient persist so the verdict joins run once.
-    flags = _materialize(
+    # pinned so the verdict joins run once.
+    flags, _ = pin(
         base.join(span, "doc_id", "left")
         .join(cc, "doc_id", "left")
         .join(cont, "doc_id", "left")
@@ -204,7 +203,7 @@ def corpus_build_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist it (its own SQL mirror is MATERIALIZED for the same
     # multi-consumer reason), or the broadcast-w join and the per-row
     # sample poly-hash would re-run corpus-wide per consumer.
-    f5t = _materialize(flags.join(F.broadcast(w), "source", "left").select(
+    f5t, _ = pin(flags.join(F.broadcast(w), "source", "left").select(
         "doc_id",
         "source",
         "nt",

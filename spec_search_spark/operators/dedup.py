@@ -40,7 +40,7 @@ from spec_search_spark.functions.text import (
     RE_TOKEN_SPLIT,
     make_poly_hash_udf,
 )
-from spec_search_spark.session import session_memo, spread, tune
+from spec_search_spark.session import pin, session_memo, spread, tune
 
 P = FP_MOD  # 2^31-1, prime
 N_HASHES = 16
@@ -60,44 +60,6 @@ SIMHASH_BANDS = 4  # 15 bits per band; lossless for hamming < 4 (pigeonhole)
 
 
 # --- shared shingle machinery ----------------------------------------------
-
-def _materialize(df: DataFrame, durable: bool = False) -> DataFrame:
-    """persist + force computation NOW. A lazily-cached DF feeding both
-    sides of a self-join gets computed concurrently by both branches
-    (per-partition block races) — materializing first guarantees the
-    expensive upstream (hash udf, signature agg) runs exactly once.
-
-    Two storage policies, chosen by LIFETIME:
-
-    * ``durable=True`` — session-memoized artifacts (hashed postings,
-      span-hit tables) that many later queries re-read: persist
-      MEMORY_AND_DISK. Under memory pressure an evicted MEMORY_ONLY
-      block is silently RECOMPUTED through the full upstream plan on
-      every later access — the r5 bench-ledger poisoning, where
-      eviction turned a cached value-count read back into the slowest
-      path for all N repetitions. With disk spill a miss costs one
-      local read, not a replan.
-    * default (transient) — per-query intermediates that are dead the
-      moment their query finishes: MEMORY_ONLY. Giving these disk
-      residency would make every storage-pool eviction a disk WRITE
-      of bytes nobody will read again — measured as a sustained
-      multi-query slowdown window late in the 157-slot bench, where
-      hundreds of transient persists accumulate; dropping a dead
-      transient must stay free. CAVEAT (deliberate trade): for a
-      transient, the exactly-once guarantee only holds while the
-      blocks stay resident — if eviction strikes between the persist
-      and the self-join's consumption, both branches recompute the
-      upstream concurrently again (duplicated work, never wrong
-      results). Intermediates that feed self-joins and MUST NOT
-      replan should pass durable=True."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(
-        StorageLevel.MEMORY_AND_DISK if durable else StorageLevel.MEMORY_ONLY
-    )
-    df.count()
-    return df
-
 
 def _tokens(text: Column) -> Column:
     t = F.trim(text)
@@ -191,7 +153,7 @@ def shingle_postings(
     # the docs table arrives as few parquet splits; gated on the scan's
     # split count, so at 100 TB (thousands of splits) NO shuffle of the
     # raw text happens. cache: every consumer reads these postings 2-3×.
-    postings = _materialize(
+    postings, _ = pin(
         spread(docs, "doc_id")
         .select("doc_id", _tokens(F.col("text")).alias("toks"))
         .select("doc_id", F.explode(_shingles_from_toks(F.col("toks"))).alias("shingle"))
@@ -232,14 +194,11 @@ def hashed_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, corpus) like ivf.trained_index: an index-shaped intermediate
     is built once, not re-validated (two count jobs) per query call."""
     p = shingle_postings(spark, sf_dir)
-    vocab = _materialize(
-        p.select("shingle").distinct().withColumn("h", _poly_hash(F.col("shingle"))),
-        durable=True,
+    vocab, n_vocab = pin(
+        p.select("shingle").distinct().withColumn("h", _poly_hash(F.col("shingle")))
     )
-    join_vocab = (
-        F.broadcast(vocab) if vocab.count() <= BROADCAST_VOCAB_MAX else vocab
-    )
-    return _materialize(p.join(join_vocab, "shingle"), durable=True)
+    join_vocab = F.broadcast(vocab) if n_vocab <= BROADCAST_VOCAB_MAX else vocab
+    return pin(p.join(join_vocab, "shingle"))[0]
 
 
 # --- exact dedup ------------------------------------------------------------
@@ -513,7 +472,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized: both sides of the candidate self-join read the band
     # table; lazily, the whole shingle→hash→16-min signature pipeline
     # would execute twice (it dominated the first bench run at 160 s).
-    exploded = _materialize(_band_rows(sig))
+    exploded, _ = pin(_band_rows(sig))
     a = exploded.alias("a")
     b = exploded.alias("b")
     return (
@@ -581,7 +540,7 @@ def incremental_minhash_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed predicate on the probe side of the same band equi-join.
     """
     sig = minhash_signatures(spark, sf_dir)
-    bands = _materialize(
+    bands, _ = pin(
         _band_rows(sig).withColumn(
             "is_delta",
             F.pmod(
@@ -730,7 +689,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # docs, so per-occurrence hashing did vocabulary-sized work times
     # corpus-sized repetition. SimHash votes count every OCCURRENCE
     # (unchanged — the join fans the hash back out per posting).
-    vocab = _materialize(
+    vocab, _ = pin(
         toks.select("tok").distinct().withColumn("h", _poly_hash(F.col("tok")))
     )
     hashed = toks.join(F.broadcast(vocab), "tok")
@@ -785,7 +744,7 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert HAMMING_THRESHOLD < SIMHASH_BANDS  # lossless only below band count
     band_bits = SIMHASH_BITS // SIMHASH_BANDS
     band_mask = (1 << band_bits) - 1
-    sh = _materialize(simhash_fingerprints(spark, sf_dir))
+    sh, _ = pin(simhash_fingerprints(spark, sf_dir))
 
     fps = sh.select("simhash").distinct()
     bands = fps.select(
@@ -889,19 +848,19 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     pairs = minhash_lsh_candidates(spark, sf_dir)
-    edges = _materialize(
+    edges, _ = pin(
         pairs.select(F.col("doc1").alias("a"), F.col("doc2").alias("b")).unionByName(
             pairs.select(F.col("doc2").alias("a"), F.col("doc1").alias("b"))
         )
     )
-    labels = _materialize(docs.select("doc_id", F.col("doc_id").alias("label")))
+    labels, _ = pin(docs.select("doc_id", F.col("doc_id").alias("label")))
     for _ in range(MAX_CC_ITERS):
         nbr_min = (
             edges.join(labels, edges.b == labels.doc_id)
             .groupBy(F.col("a").alias("doc_id"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = _materialize(
+        new_labels, _ = pin(
             labels.join(nbr_min, "doc_id", "left").select(
                 "doc_id",
                 F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
@@ -1044,7 +1003,7 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     # inner join keeps the hot-shingle-capped set (and attaches h)
-    wpost = _materialize(
+    wpost, _ = pin(
         s.join(occ, ["doc_id", "shingle"]).select("doc_id", "h", "cnt")
     )
     tot = wpost.groupBy("doc_id").agg(F.sum("cnt").alias("tot"))
@@ -1064,14 +1023,12 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashed_shingle_postings above): broadcast only when it provably
     # fits, else plain shuffle joins on the 8-byte doc keys (AQE may
     # still elect a runtime broadcast of the candidate-bound side).
-    # _persist_count so the gate count and BOTH t1/t2 joins share one
+    # pinned so the gate count and BOTH t1/t2 joins share one
     # computation of the totals aggregation.
-    from spec_search_spark.operators.rank_stats import _persist_count
-
-    tot, _n_docs = _persist_count(tot)
+    tot, n_docs = pin(tot)
     t1 = tot.select(F.col("doc_id").alias("doc1"), F.col("tot").alias("tot1"))
     t2 = tot.select(F.col("doc_id").alias("doc2"), F.col("tot").alias("tot2"))
-    if _n_docs <= BROADCAST_VOCAB_MAX:
+    if n_docs <= BROADCAST_VOCAB_MAX:
         t1, t2 = F.broadcast(t1), F.broadcast(t2)
     return (
         inter.join(t1, "doc1")

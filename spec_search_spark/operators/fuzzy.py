@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import session_memo, tune
+from spec_search_spark.session import pin, session_memo, tune
 
 EDIT_D = 2  # max edit distance
 QGRAM = 3
@@ -149,7 +149,6 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round changed-counts only.
 
     Output: (entity_id, name, members, cluster_size, is_canonical)."""
-    from spec_search_spark.operators.dedup import _materialize
     from pyspark.sql import Window
 
     tune(spark)
@@ -158,19 +157,19 @@ def entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("members")
     )
     pairs = fuzzy_name_pairs(spark, sf_dir).select("name1", "name2")
-    edges = _materialize(
+    edges, _ = pin(
         pairs.select(F.col("name1").alias("a"), F.col("name2").alias("b")).unionByName(
             pairs.select(F.col("name2").alias("a"), F.col("name1").alias("b"))
         )
     )
-    labels = _materialize(vocab.select("name", F.col("name").alias("label")))
+    labels, _ = pin(vocab.select("name", F.col("name").alias("label")))
     for _ in range(MAX_ER_ITERS):
         nbr_min = (
             edges.join(labels, edges.b == labels.name)
             .groupBy(F.col("a").alias("name"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = _materialize(
+        new_labels, _ = pin(
             labels.join(nbr_min, "name", "left").select(
                 "name",
                 F.least(

@@ -26,13 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spec_search_spark.operators.dedup import (
-    _materialize,
-    _minhash_lsh_sql,
-    minhash_lsh_candidates,
-)
+from spec_search_spark.operators.dedup import _minhash_lsh_sql, minhash_lsh_candidates
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import session_memo, tune
+from spec_search_spark.session import pin, session_memo, tune
 
 SCALE = 1_000_000_000_000  # bigint micro-units: 1.0 == 1e12
 DAMP_NUM = 85  # damping 0.85 as an integer percentage
@@ -67,7 +63,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         if i < PR_ITERS - 1:
             # break the growing lineage: each round reads the
             # materialized previous scores, not the whole replayed plan
-            pr = _materialize(pr)
+            pr, _ = pin(pr)
     return (
         deg.join(pr, "doc_id")
         .select("doc_id", "deg", F.col("pr").alias("pr_fixed"))
@@ -175,7 +171,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
     )
-    o = _materialize(oriented)
+    o, _ = pin(oriented)
 
     w1 = o.select(F.col("src"), F.col("dst").alias("v"))
     w2 = o.select(F.col("src"), F.col("dst").alias("w"))
@@ -483,7 +479,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges, deg = _edges_deg(spark, sf_dir)
     alive = deg.filter(F.col("deg") >= K_CORE).select("doc_id")
     for _ in range(KC_ITERS):
-        alive = _materialize(alive)
+        alive, _ = pin(alive)
         ealive = edges.join(
             alive.select(F.col("doc_id").alias("a")), "a", "semi"
         ).join(alive.select(F.col("doc_id").alias("b")), "b", "semi")
@@ -493,7 +489,7 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("d") >= K_CORE)
             .select("doc_id")
         )
-    alive = _materialize(alive)
+    alive, _ = pin(alive)
     efinal = edges.join(
         alive.select(F.col("doc_id").alias("a")), "a", "semi"
     ).join(alive.select(F.col("doc_id").alias("b")), "b", "semi")
@@ -573,7 +569,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edges = one distinct over the orders⋈lineitem join; each
     half-step is one keyed join + partial/final sum over the edge
     table (the distributed-HITS canonical shape); score tables are
-    node-sized; per-round `_materialize` cuts the growing lineage.
+    node-sized; a per-round `pin` cuts the growing lineage.
 
     Output: top 10 (p_partkey, auth_fixed) by authority."""
     tune(spark)
@@ -589,7 +585,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum(F.expr("cast(h as decimal(38,0))")).alias("ar"))
         )
         ta = ar.groupBy().agg(F.sum("ar").alias("ta"))
-        a = _materialize(
+        a, _ = pin(
             ar.crossJoin(F.broadcast(ta)).selectExpr(
                 "p", f"cast((ar * {SCALE}) div ta as bigint) AS a"
             )
@@ -601,7 +597,7 @@ def hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.sum(F.expr("cast(a as decimal(38,0))")).alias("hr"))
             )
             th = hr.groupBy().agg(F.sum("hr").alias("th"))
-            h = _materialize(
+            h, _ = pin(
                 hr.crossJoin(F.broadcast(th)).selectExpr(
                     "c", f"cast((hr * {SCALE}) div th as bigint) AS h"
                 )

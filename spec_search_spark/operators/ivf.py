@@ -42,7 +42,7 @@ from spec_search_spark.operators.similarity import (
     probes_of,
     topk_per_probe,
 )
-from spec_search_spark.session import local_df, session_memo, spread, tune
+from spec_search_spark.session import local_df, pin, session_memo, spread, tune
 
 K_CLUSTERS = 8
 N_ITER = 2
@@ -135,9 +135,8 @@ def trained_index(
 ) -> tuple[list[list[float]], DataFrame]:
     """Train-once accessor: (centroids, cached assigned-index DF)."""
     centroids = train_centroids(spark, sf_dir)
-    index = ivf_index(spark, sf_dir, centroids).cache()
-    index.count()  # materialize now: both probe-join sides reuse it
-    return centroids, index
+    # pinned now: both probe-join sides reuse it
+    return centroids, pin(ivf_index(spark, sf_dir, centroids))[0]
 
 
 @session_memo
@@ -228,13 +227,11 @@ def _exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(probe_id, rn, ex_d2): the exact rank-rn distance per probe over
     the full table — N_PROBES × TOP_K rows, cached (both check runs
     reuse it)."""
-    ex = (
-        exact_knn(load_table(spark, sf_dir, "embeddings"), TOP_K)
-        .select("probe_id", "rn", F.col("dist").alias("ex_d2"))
-        .cache()
-    )
-    ex.count()  # materialize now
-    return ex
+    return pin(
+        exact_knn(load_table(spark, sf_dir, "embeddings"), TOP_K).select(
+            "probe_id", "rn", F.col("dist").alias("ex_d2")
+        )
+    )[0]
 
 
 def ivf_ann_search_check(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import session_memo, spread
+from spec_search_spark.session import pin, session_memo, spread
 from spec_search_spark.functions.vector import (
     dot,
     dot_sql,
@@ -400,8 +400,6 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     or not propagation has converged. Border points take the MIN final
     label among their core neighbors; ties and ordering all break on
     vec_id. Output: (vec_id, role, label)."""
-    from spec_search_spark.operators.dedup import _materialize
-
     assigned = (
         _final_assignment(spark, sf_dir)
         .select("vec_id", F.col("cid").alias("cluster"), "e")
@@ -412,7 +410,7 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = assigned.alias("a")
     b = assigned.alias("b")
-    edges = _materialize(
+    edges, _ = pin(
         a.join(b, on="cluster")
         .filter(F.col("b.vec_id") != F.col("a.vec_id"))
         .filter(
@@ -425,10 +423,10 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = edges.groupBy(F.col("src").alias("vec_id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
-    core = _materialize(
+    core, _ = pin(
         deg.filter(F.col("deg") >= DBSCAN_MIN_PTS).select("vec_id")
     )
-    core_edges = _materialize(
+    core_edges, _ = pin(
         edges.join(core.select(F.col("vec_id").alias("src")), "src", "semi")
         .join(core.select(F.col("vec_id").alias("dst")), "dst", "semi")
     )

@@ -45,7 +45,7 @@ from spec_search_spark.functions.text import (
     tokens,
 )
 from spec_search_spark.operators.dedup import _POLY_SQL, _poly_hash
-from spec_search_spark.session import tune
+from spec_search_spark.session import pin, tune
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -252,14 +252,12 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate tokens (est over threshold) are carried to the exact
     verify, which at test scale doubles as the oracle's ground truth.
     """
-    from spec_search_spark.operators.dedup import _materialize
-
     base = _tok_arrays(_docs(spark, sf_dir), 1)
     # vocabulary-sized (distinct tokens), so materializing is bounded —
     # the corpus-sized token explosion underneath runs exactly once
     # instead of once per downstream branch (D projections + total +
     # verify join all read this)
-    exact = _materialize(
+    exact, _ = pin(
         base.select(F.explode("t").alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n_exact"))

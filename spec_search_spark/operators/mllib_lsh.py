@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
 from spec_search_spark.operators.similarity import N_PROBES, TOP_K, topk_per_probe
-from spec_search_spark.session import tune
+from spec_search_spark.session import pin, tune
 
 SEED_BRP = 42
 SEED_MINHASH = 7
@@ -100,10 +100,8 @@ def mllib_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune(spark)
     # toks feeds the CV fit, the transform, AND the self-check's two
-    # distance re-joins — pin it once (bounded-transient FIFO)
-    from spec_search_spark.operators.rank_stats import _persist_count
-
-    toks, _ = _persist_count(_shingle_sets(spark, sf_dir))
+    # distance re-joins — pin it once
+    toks, _ = pin(_shingle_sets(spark, sf_dir))
     # vocabSize must hold EVERY shingle: a truncated vocabulary makes
     # the vector Jaccard diverge from the token-set Jaccard the check
     # recomputes (CountVectorizer keeps top-by-df with arbitrary tie
@@ -142,9 +140,8 @@ def mllib_minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate distance stage), so an unpersisted vecs re-runs
     # the shingle build + CV apply repeatedly — measured 41.6s vs ~6s
     # at sf0.1. The vectorized index is exactly the artifact a
-    # production near-dup pipeline materializes (the V1-index shape);
-    # the bounded-transient policy is rank_stats' FIFO.
-    vecs, _n = _persist_count(
+    # production near-dup pipeline materializes (the V1-index shape).
+    vecs, _ = pin(
         model_cv.transform(toks).select("doc_id", "features")
     )
     mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=SEED_MINHASH)

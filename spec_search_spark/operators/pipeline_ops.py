@@ -40,12 +40,11 @@ from spec_search_spark.operators.dedup import (
     _POLY_SQL,
     _SHINGLES_SQL,
     _dedup_clusters_sql,
-    _materialize,
     _poly_hash,
     dedup_clusters,
     hashed_shingle_postings,
 )
-from spec_search_spark.session import spread, tune
+from spec_search_spark.session import pin, spread, tune
 
 # Whitespace token count, inlined for SQL mirrors (same fold as
 # functions.text.token_count / TOKEN_STATS_SQL).
@@ -490,7 +489,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id partitioning the tf histogram already has."""
     tune(spark)
     docs = load_table(spark, sf_dir, "documents")
-    tf = _materialize(
+    tf, _ = pin(
         _spread(docs, "doc_id")
         .select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
@@ -498,10 +497,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from spec_search_spark.operators.dedup import BROADCAST_VOCAB_MAX
 
-    dfreq = _materialize(tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
-    join_dfreq = (
-        F.broadcast(dfreq) if dfreq.count() <= BROADCAST_VOCAB_MAX else dfreq
-    )
+    dfreq, n_terms = pin(tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
+    join_dfreq = F.broadcast(dfreq) if n_terms <= BROADCAST_VOCAB_MAX else dfreq
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(join_dfreq, "term")

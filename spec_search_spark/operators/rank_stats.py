@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import tune
+from spec_search_spark.session import pin, tune
 
 MW_A, MW_B = "1-URGENT", "5-LOW"
 Z_CRIT = 1.959964  # two-sided alpha = 0.05
@@ -70,39 +70,6 @@ def _rank_small_max() -> int:
     return int(os.environ.get("SPARK_GRAFT_RANK_SMALL_MAX", str(RANK_SMALL_MAX)))
 
 
-#: Live transient persists, FIFO. The consumer plans returned by the
-#: rank walks reference the cached table lazily, so the function can't
-#: unpersist before its caller materializes — but over a long bench
-#: session unbounded MEMORY_ONLY caches accumulate (ADVICE r7; the
-#: exact failure mode dedup._materialize's docstring warns about).
-#: Bounding to the most recent few is always CORRECT (unpersist just
-#: means recompute-on-next-use) and safe for performance: a single
-#: query issues at most 2-3 transient persists, and each query is
-#: fully materialized before the next one runs.
-_TRANSIENT: list[DataFrame] = []
-_TRANSIENT_MAX = 8
-
-
-def _persist_count(df: DataFrame) -> tuple[DataFrame, int]:
-    """`dedup._materialize`'s transient contract (MEMORY_ONLY persist,
-    force NOW so the expensive upstream runs exactly once) but also
-    returning the row count, which here doubles as the plan-shape
-    signal — one job serves both. Evicts the oldest transient persists
-    beyond _TRANSIENT_MAX so session-lifetime cache pressure is
-    bounded."""
-    from pyspark.storagelevel import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_ONLY)
-    n = df.count()
-    _TRANSIENT.append(df)
-    while len(_TRANSIENT) > _TRANSIENT_MAX:
-        try:
-            _TRANSIENT.pop(0).unpersist()
-        except Exception:
-            pass  # session gone / already unpersisted — nothing to free
-    return df, n
-
-
 def _bucketed_cum(per_v: DataFrame, val: str, counts: list[str]) -> DataFrame:
     """Inclusive global cumulative sums of `counts` ordered by `val`,
     without a global single-task window: range-bucket the value domain
@@ -119,7 +86,7 @@ def _bucketed_cum(per_v: DataFrame, val: str, counts: list[str]) -> DataFrame:
     cached narrow table — identical results, none of the two-phase
     machinery. Above the threshold, the bucketed walk below.
     """
-    per_v, n = _persist_count(per_v)
+    per_v, n = pin(per_v)
     if n <= _rank_small_max():
         w_all = W.orderBy(val).rowsBetween(W.unboundedPreceding, 0)
         out = per_v
@@ -188,7 +155,7 @@ def _bucketed_cum_by(
     group is at most the small bound); above it, per-(group, bucket).
     """
     grps = [grp] if isinstance(grp, str) else list(grp)
-    per_v, n = _persist_count(per_v)
+    per_v, n = pin(per_v)
     if n <= _rank_small_max():
         w_grp = W.partitionBy(*grps).orderBy(val).rowsBetween(
             W.unboundedPreceding, 0

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import tune
+from spec_search_spark.session import pin, tune
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -867,7 +867,6 @@ def skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     All values integer cents/counts; no doubles anywhere."""
     from spec_search_spark.operators.rank_stats import (
         RANK_BUCKETS,
-        _persist_count,
         _rank_small_max,
     )
     from pyspark.sql.window import Window as W
@@ -886,9 +885,9 @@ def skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist pc, not just per_s: both the prefix-max table and the
     # final filter join read it — unpersisted, the corpus aggregation
     # would run twice per call
-    pc, _n_cust = _persist_count(pc)
+    pc, _ = pin(pc)
     per_s = pc.groupBy("spend_cents").agg(F.max("n_orders").alias("t"))
-    per_s, n_distinct = _persist_count(per_s)
+    per_s, n_distinct = pin(per_s)
     if n_distinct <= _rank_small_max():
         w = W.orderBy(F.desc("spend_cents")).rowsBetween(
             W.unboundedPreceding, -1

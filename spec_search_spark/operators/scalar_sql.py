@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table, register_views
-from spec_search_spark.session import session_memo, tune
+from spec_search_spark.session import pin, session_memo, tune
 
 
 def scalar_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,19 +110,16 @@ def _flag_cents_vc(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_extendedprice — the shared index-shaped intermediate behind
     `winsorized_stats`, `robust_outlier_report`, and (re-aggregated to
     the ungrouped view) `equi_depth_histogram`. Built once per
-    (session, corpus) and persisted DURABLY (MEMORY_AND_DISK — the
-    dedup-postings policy: an artifact many later queries re-read must
-    degrade to a disk read on eviction, never a recompute)."""
-    from spec_search_spark.operators.dedup import _materialize
-
+    (session, corpus) and pinned (MEMORY_AND_DISK, as every pin inside
+    a memo build: an artifact many later queries re-read must degrade
+    to a disk read on eviction, never a recompute)."""
     li = load_table(spark, sf_dir, "lineitem")
     cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
-    return _materialize(
+    return pin(
         li.select("l_returnflag", cents.alias("cents"))
         .groupBy("l_returnflag", "cents")
-        .agg(F.count(F.lit(1)).alias("_c")),
-        durable=True,
-    )
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )[0]
 
 
 def _percentiles_rank_walk(
@@ -644,8 +641,6 @@ def equi_depth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered twin `equi_depth_histogram_approx`
     (operators/sketches.py).
     """
-    from spec_search_spark.operators.dedup import _materialize
-
     tune(spark)
     cents = F.round(F.col("l_extendedprice") * 100, 0).cast("bigint")
     fracs = [i / N_HIST_BUCKETS for i in range(1, N_HIST_BUCKETS)]

@@ -60,7 +60,7 @@ from spec_search_spark.functions.vector import (
 from spec_search_spark.operators.text_analysis import CHUNK_OVERLAP, CHUNK_SIZE
 from spec_search_spark.functions.text import chunk_at, chunk_fixed_sql, chunk_indices
 from spec_search_spark.functions.sheets import composite_id
-from spec_search_spark.session import session_memo, spread, tune
+from spec_search_spark.session import pin, session_memo, spread, tune
 
 TOP_K = 10          # reference default n_results (app.py:50-52)
 N_PROBES = 5
@@ -1258,11 +1258,9 @@ def bitext_mining_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("bv"),
         norm(F.col("embedding")).alias("bn"),
     )
-    from spec_search_spark.operators.dedup import _materialize
-
-    # both argmax sides consume the same n×m score table — materialize
-    # it once or each groupBy re-evaluates every cosine fold
-    scored = _materialize(
+    # both argmax sides consume the same n×m score table — pin it once
+    # or each groupBy re-evaluates every cosine fold
+    scored, _ = pin(
         a.crossJoin(F.broadcast(b)).select(
             "a_id",
             "b_id",

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import spread, tune
+from spec_search_spark.session import pin, spread, tune
 
 HLL_RSD = 0.01        # relative standard deviation passed to HLL++
 HLL_TOL = 5 * HLL_RSD  # 5σ acceptance band — pass probability ~1-1e-6
@@ -595,11 +595,9 @@ def misra_gries_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    # persist + force NOW (the _materialize discipline): the candidate
-    # and total broadcasts both read summ — the corpus-sized sketch
-    # pass must run exactly once
-    summ = toks.mapInPandas(mg_summaries, "tok string, np bigint").persist()
-    summ.count()
+    # pinned: the candidate and total broadcasts both read summ — the
+    # corpus-sized sketch pass must run exactly once
+    summ, _ = pin(toks.mapInPandas(mg_summaries, "tok string, np bigint"))
     # pin the two TINY consumers (≤ k·n_partitions candidates, 1-row
     # total) so the corpus-sized summary cache can be released before
     # return — transient MEMORY_ONLY caches otherwise accumulate over a

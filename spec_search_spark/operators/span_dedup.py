@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
-from spec_search_spark.session import session_memo
+from spec_search_spark.session import pin, session_memo
 from spec_search_spark.functions.text import (
     FP_BASE,
     FP_MOD,
@@ -112,9 +112,7 @@ def _window_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ndocs") >= 2)
         .select("wh")
     )
-    from spec_search_spark.operators.dedup import _materialize
-
-    return _materialize(wins.join(dup, "wh").select("doc_id", "pos"), durable=True)
+    return pin(wins.join(dup, "wh").select("doc_id", "pos"))[0]
 
 
 def dup_spans_merged(spark: SparkSession, sf_dir: str) -> DataFrame:

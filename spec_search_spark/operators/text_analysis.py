@@ -35,7 +35,7 @@ from spec_search_spark.functions.text import (
     tokens,
 )
 from spec_search_spark.functions.text import STOPWORDS
-from spec_search_spark.session import local_df, session_memo, spread, tune
+from spec_search_spark.session import local_df, pin, session_memo, spread, tune
 
 CHUNK_SIZE = 120  # scaled-down from the reference's 1000 so the ~300-char
 CHUNK_OVERLAP = 30  # test docs actually produce multi-chunk output
@@ -266,16 +266,13 @@ def stratified_quality_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket machinery's extra stages were the VERDICT-r6 ×1.8 toy-scale
     constant on this slot.
     """
-    from spec_search_spark.operators.rank_stats import (
-        _persist_count,
-        _rank_small_max,
-    )
+    from spec_search_spark.operators.rank_stats import _rank_small_max
 
     docs = _docs(spark, sf_dir)
     scored = docs.select(
         "doc_id", "source", quality_score(F.col("text")).alias("quality")
     )
-    scored, n = _persist_count(scored)
+    scored, n = pin(scored)
     if n <= _rank_small_max():
         w_src = Window.partitionBy("source").orderBy(
             F.desc("quality"), F.asc("doc_id")

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from spec_search_spark.catalog import load_table
 from spec_search_spark.functions.text import RE_TOKEN_SPLIT
-from spec_search_spark.session import tune
+from spec_search_spark.session import pin, tune
 
 MAXP = 4  # max piece length (seed substrings)
 MAXW = 12  # max word length admitted to the DP
@@ -199,11 +199,9 @@ def unigram_lm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (piece, n_tokens, prob)."""
     tune(spark)
-    from spec_search_spark.operators.dedup import _materialize
-
     # pin the vocabulary-sized word table: the seed-vocab build and the
-    # Viterbi projection both read it (bounded-transient FIFO)
-    words = _materialize(_words(spark, sf_dir))
+    # Viterbi projection both read it
+    words, _ = pin(_words(spark, sf_dir))
     vocab = _score(_vocab0(words))
     finals = _viterbi(words, vocab)
     segs = finals.select(
@@ -243,19 +241,16 @@ def unigram_lm_em_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (iteration, vocab_pieces, n_tokens, ll_e6)."""
     tune(spark)
-    from spec_search_spark.operators.dedup import _materialize
-
     # words is the vocabulary-sized artifact EVERY later stage reads
     # (seed counts, both Viterbi chains); pin it so the corpus scan +
-    # tokenize runs once, not once per consumer (bounded-transient
-    # FIFO). finals1 likewise feeds both the M-step counts and the
-    # iteration-1 report row.
-    words = _materialize(_words(spark, sf_dir))
+    # tokenize runs once, not once per consumer. finals1 likewise feeds
+    # both the M-step counts and the iteration-1 report row.
+    words, _ = pin(_words(spark, sf_dir))
     # v0 is the vocabulary-sized seed artifact with FOUR lazy readers
     # (viterbi-1's score collect, the iteration-1 vocab count, the
     # required-char anti-join, and vocab2's score via keep_chars) —
     # pin it so the substring-explode aggregation over words runs once
-    v0 = _materialize(_vocab0(words))
+    v0, _ = pin(_vocab0(words))
 
     def em_row(it: int, vocab: DataFrame, finals: DataFrame) -> DataFrame:
         n_pieces = vocab.agg(F.count(F.lit(1)).alias("vocab_pieces"))
@@ -273,7 +268,7 @@ def unigram_lm_em_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     vocab1 = _score(v0)
-    finals1 = _materialize(_viterbi(words, vocab1))
+    finals1, _ = pin(_viterbi(words, vocab1))
     counts1 = (
         finals1.select("wcnt", F.explode(F.split("seg", "·")).alias("piece"))
         .groupBy("piece")
@@ -286,7 +281,7 @@ def unigram_lm_em_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vocab2 likewise feeds viterbi-2's collect AND the iteration-2
     # vocab count; pinning it stops the counts1 re-aggregation
-    vocab2 = _materialize(_score(counts1.unionByName(keep_chars)))
+    vocab2, _ = pin(_score(counts1.unionByName(keep_chars)))
     finals2 = _viterbi(words, vocab2)
     return (
         em_row(1, vocab1, finals1)

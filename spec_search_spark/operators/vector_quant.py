@@ -37,7 +37,7 @@ from spec_search_spark.operators.similarity import (
     probes_of,
     topk_per_probe,
 )
-from spec_search_spark.session import session_memo, spread, tune
+from spec_search_spark.session import pin, session_memo, spread, tune
 
 Q_MAX = 127  # int8 range
 CAND = 50  # approx-scored candidate pool per probe, re-ranked exactly
@@ -130,13 +130,11 @@ def _quantized_memo(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, corpus) and cache — the SQ8 code build is a pure map,
     but its HOF projections carry a large codegen cost that shouldn't
     be re-paid by every reader."""
-    q = (
-        _quantized(load_table(spark, sf_dir, "embeddings"))
-        .select("vec_id", "scale", "qv")  # narrow: never cache fp arrays
-        .cache()
-    )
-    q.count()
-    return q
+    return pin(
+        _quantized(load_table(spark, sf_dir, "embeddings")).select(
+            "vec_id", "scale", "qv"  # narrow: never cache fp arrays
+        )
+    )[0]
 
 
 def ann_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:

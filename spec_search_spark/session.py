@@ -28,8 +28,25 @@ and live in the single registry ``_MEMO``:
   localCheckpoint blocks are left to Spark's ContextCleaner, which
   drops them once the frame is unreachable.
 
-How an artifact is stored (localCheckpoint, cache, durable persist)
-stays the builder's choice.
+Pins. A frame that several branches of one plan read (a self-join, a
+count that sizes the plan plus the joins that follow), or that later
+queries re-read, is pinned with :func:`pin`: persisted and forced by
+one ``count()``, which is returned too, so its upstream runs once. The
+storage level follows the context, not the caller: inside a
+:func:`session_memo` build, nested ones included, it is
+MEMORY_AND_DISK, because the artifact outlives the call and an evicted
+block should cost a disk read, not a recompute; elsewhere it is
+MEMORY_ONLY, so dropping a dead transient costs nothing. Spark's
+CacheManager keeps one entry per distinct plan, so every call that pins
+the same plan shares one entry, and transients live for the session:
+unpersisting an entry for an old handle would make every newer call
+that shares it pay the forcing job and then recompute anyway. A frame
+whose plan nests every round of a loop cuts its lineage with
+``localCheckpoint(eager=True)`` instead; Spark's ContextCleaner drops
+those blocks once the frame is unreachable. ``catalog.load_table``
+calls :func:`refresh_if_rewritten`, which refreshes the cached plans
+over a file whose size or mtime changed since its last load in the
+session, so a rewritten input is never served from a stale pin.
 """
 
 from __future__ import annotations
@@ -39,6 +56,7 @@ import os
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 # Runtime-settable confs applied even to an externally provided session
 # (the correctness driver passes its own SparkSession to entry()).
@@ -205,6 +223,39 @@ def _fingerprint(sf_dir: str):
     return sorted((n, st.st_size, st.st_mtime_ns) for n, st in stats)
 
 
+_FILE_STATS: dict[tuple, tuple] = {}
+
+
+def refresh_if_rewritten(spark: SparkSession, path: str) -> None:
+    """Refresh the cached plans over ``path`` when its (size, mtime_ns)
+    differs from the last call's for it in this session."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return
+    app = spark.sparkContext.applicationId
+    key, stats = (app, path), (st.st_size, st.st_mtime_ns)
+    last = _FILE_STATS.get(key)
+    if last is None:
+        for k in [k for k in _FILE_STATS if k[0] != app]:
+            del _FILE_STATS[k]
+    elif last != stats:
+        spark.catalog.refreshByPath(path)
+    _FILE_STATS[key] = stats
+
+
+_BUILDING = 0  # session_memo builds on the stack
+
+
+def pin(df: DataFrame) -> tuple[DataFrame, int]:
+    """Persist ``df`` and force it with one count; returns the frame and
+    its row count (storage by context, see the module docstring)."""
+    df = df.persist(
+        StorageLevel.MEMORY_AND_DISK if _BUILDING else StorageLevel.MEMORY_ONLY
+    )
+    return df, df.count()
+
+
 def _release(value) -> None:
     """Unpersist the cached DataFrames of an evicted memo value."""
     for v in value if isinstance(value, tuple) else (value,):
@@ -231,7 +282,12 @@ def session_memo(build):
             return hit[1]
         if hit is not None:
             _release(_MEMO.pop(key)[1])
-        value = build(spark, sf_dir, *extra)
+        global _BUILDING
+        _BUILDING += 1
+        try:
+            value = build(spark, sf_dir, *extra)
+        finally:
+            _BUILDING -= 1
         for k in [k for k in _MEMO if k[0] != app]:
             del _MEMO[k]
         mine = [k for k in _MEMO if k[1] == name]

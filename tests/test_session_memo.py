@@ -1,6 +1,8 @@
 """The session memo (`session.session_memo`): one registry for every
 build-once artifact, keyed by session and corpus, rebuilt when the
-corpus files change, pruned of stopped sessions and capped per builder.
+corpus files change, pruned of stopped sessions and capped per builder;
+and `session.pin`, whose storage level follows the memo context and
+whose cached plans `load_table` refreshes when their input is rewritten.
 """
 
 from __future__ import annotations
@@ -12,6 +14,7 @@ import shutil
 import sys
 
 import pyarrow.parquet as pq
+import pytest
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PKG = ROOT / "spec_search_spark"
@@ -130,6 +133,88 @@ def test_evicted_entries_release_their_cache(spark, sf_dir, tmp_path):
             ix.unpersist()
 
 
+def test_rewritten_input_refreshes_cached_plans(spark, sf_dir, tmp_path):
+    """A frame pinned over a file that is then rewritten in place must
+    not answer for the new file: `load_table` refreshes the cached
+    plans over it. The reference answer reads the rewritten file under
+    a path no cached plan can match."""
+    from spec_search_spark.operators.pipeline_ops import tfidf_top_terms
+
+    d = _corpus(sf_dir, tmp_path, "documents")
+    tfidf_top_terms(spark, d).collect()
+    _keep_first_half(d, "documents")
+    got = sorted(tfidf_top_terms(spark, d).collect())
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    shutil.copyfile(os.path.join(d, "documents.parquet"), fresh / "documents.parquet")
+    assert got == sorted(tfidf_top_terms(spark, str(fresh)).collect())
+
+
+def test_pin_storage_follows_the_memo_context(spark, tmp_path):
+    from pyspark import StorageLevel
+
+    from spec_search_spark import session
+    from spec_search_spark.session import pin, session_memo
+
+    frames = []
+
+    def pinned(n: int) -> StorageLevel:
+        df, count = pin(spark.range(n))
+        frames.append(df)
+        assert count == n
+        return df.storageLevel
+
+    @session_memo
+    def inner(spark, sf_dir):
+        return pinned(1201)
+
+    @session_memo
+    def outer(spark, sf_dir):
+        return inner(spark, sf_dir), pinned(1202)
+
+    @session_memo
+    def broken(spark, sf_dir):
+        pinned(1203)
+        raise RuntimeError("build failed")
+
+    try:
+        assert outer(spark, str(tmp_path)) == (StorageLevel.MEMORY_AND_DISK,) * 2
+        assert pinned(1204) == StorageLevel.MEMORY_ONLY
+        with pytest.raises(RuntimeError):
+            broken(spark, str(tmp_path))
+        assert frames[-1].storageLevel == StorageLevel.MEMORY_AND_DISK
+        assert session._BUILDING == 0
+        assert pinned(1205) == StorageLevel.MEMORY_ONLY
+    finally:
+        for build in (inner, outer, broken):
+            build.cache_clear()
+        for df in frames:
+            df.unpersist()
+
+
+def test_repeated_calls_keep_their_pins_cached(spark, sf_dir, monkeypatch):
+    """Spark keeps one cache entry per distinct plan, so every call of a
+    query pins the same entries; none may be unpersisted while later
+    calls still read it."""
+    from pyspark import StorageLevel
+
+    from spec_search_spark.operators.relational import skyline_customers
+
+    cls = type(spark.range(1))
+    persist = cls.persist
+    pinned = []
+
+    def recording(self, *args, **kwargs):
+        pinned.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", recording)
+    for call in range(1, 7):
+        skyline_customers(spark, sf_dir)
+        dropped = [i for i, df in enumerate(pinned) if df.storageLevel == StorageLevel.NONE]
+        assert pinned and not dropped, f"call {call}: pins {dropped} were unpersisted"
+
+
 def test_clear_memos_forces_a_rebuild(spark, sf_dir, tmp_path):
     """perfbench prices index builds by clearing memos before each of
     its builds; a build after `workloads.clear_memos` must be a miss."""
@@ -148,18 +233,37 @@ def test_clear_memos_forces_a_rebuild(spark, sf_dir, tmp_path):
     assert len({id(b) for b in built}) == len(built)
 
 
+#: persist/cache calls allowed outside `session.pin`, each with its
+#: count. maintenance.py's `.cache()` is lazy: it marks the stored base
+#: table an incremental view reads and runs no forcing job, so it is
+#: not a pin.
+UNPINNED_CACHE_CALLS = {("operators/maintenance.py", "cache"): 1}
+
+
 def test_memos_live_only_in_the_session_registry():
     """A hand-rolled memo elsewhere in the package (a module-level dict
     that starts empty, or a key built from the applicationId) would
-    escape the registry's fingerprint, eviction and clearing."""
+    escape the registry's fingerprint, eviction and clearing; a
+    hand-rolled persist would pick its own storage level instead of
+    `session.pin`'s."""
     offenders = []
+    caches: dict[tuple, int] = {}
     for p in sorted(PKG.rglob("*.py")):
         if p.name == "session.py" and p.parent == PKG:
             continue
         src = p.read_text()
         if "applicationId" in src:
             offenders.append(f"{p}: mentions applicationId")
-        for node in ast.parse(src).body:
+        tree = ast.parse(src)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+            ):
+                site = (str(p.relative_to(PKG)), node.func.attr)
+                caches[site] = caches.get(site, 0) + 1
+        for node in tree.body:
             value = node.value if isinstance(node, (ast.Assign, ast.AnnAssign)) else None
             empty_dict = (isinstance(value, ast.Dict) and not value.keys) or (
                 isinstance(value, ast.Call)
@@ -170,4 +274,6 @@ def test_memos_live_only_in_the_session_registry():
             )
             if empty_dict:
                 offenders.append(f"{p}:{node.lineno}: module-level empty dict")
+    if caches != UNPINNED_CACHE_CALLS:
+        offenders.append(f"persist/cache calls outside session.pin: {caches}")
     assert not offenders, "\n".join(offenders)

@@ -4,8 +4,12 @@ sweep. Usage:
 
     python tools/slot_time.py [-n RUNS] [--sf DIR] [--explain OUTDIR] q1 q2 ...
 
-Prints one line per slot: min / median / max over N runs, plus the
-first-run (cold) time. With --explain, writes <slot>.txt containing
+Prints one line per slot: wall min / median / max over N runs, the
+first-run (cold) time, and the min / median process-tree CPU seconds
+(this process, the JVM and its Python workers; see
+``perfbench.spans.tree_cpu_s``) of the same runs. CPU time is the
+steadier figure on a shared host, where wall time also counts the
+cycles other tenants take. With --explain, writes <slot>.txt containing
 df.explain("formatted") for each slot (the plans/r11 evidence files).
 """
 
@@ -19,6 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.spans import tree_cpu_s  # noqa: E402
 from spec_search_spark.session import get_spark  # noqa: E402
 
 
@@ -59,22 +64,27 @@ def main() -> None:
             )
             with open(os.path.join(args.explain, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        samples = []
+        samples, cpu = [], []
         for _ in range(args.n):
+            c0 = tree_cpu_s()
             t0 = time.time()
             qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
             samples.append(time.time() - t0)
-        s = sorted(samples)
+            cpu.append(tree_cpu_s() - c0)
+        s, c = sorted(samples), sorted(cpu)
         results[name] = {
             "min": round(s[0], 3),
             "med": round(s[len(s) // 2], 3),
             "max": round(s[-1], 3),
             "cold": round(samples[0], 3),
+            "cpu_min": round(c[0], 3),
+            "cpu_med": round(c[len(c) // 2], 3),
             "n": args.n,
         }
         print(
             f"{name:40s} min={s[0]:7.3f} med={s[len(s)//2]:7.3f} "
-            f"max={s[-1]:7.3f} cold={samples[0]:7.3f}"
+            f"max={s[-1]:7.3f} cold={samples[0]:7.3f} "
+            f"cpu_min={c[0]:7.3f} cpu_med={c[len(c)//2]:7.3f}"
         )
         spark.sparkContext.setJobDescription(None)
     if args.json:
