@@ -33,10 +33,13 @@ count that sizes the plan plus the joins that follow), or that later
 queries re-read, is pinned with :func:`pin`: persisted and forced by
 one ``count()``, which is returned too, so its upstream runs once. The
 storage level follows the context, not the caller: inside a
-:func:`session_memo` build, nested ones included, it is
-MEMORY_AND_DISK, because the artifact outlives the call and an evicted
-block should cost a disk read, not a recompute; elsewhere it is
-MEMORY_ONLY, so dropping a dead transient costs nothing. Spark's
+:func:`session_memo` build, nested ones included, it is Spark's
+MEMORY_AND_DISK (deserialized, as ``Dataset.cache``; PySpark calls it
+MEMORY_AND_DISK_DESER), because the artifact outlives the call, an
+evicted block should cost a disk read, not a recompute, and every
+later read of a serialized block would pay to deserialize it;
+elsewhere it is MEMORY_ONLY, so dropping a dead transient costs
+nothing. Spark's
 CacheManager keeps one entry per distinct plan, so every call that pins
 the same plan shares one entry, and transients live for the session:
 unpersisting an entry for an old handle would make every newer call
@@ -251,7 +254,7 @@ def pin(df: DataFrame) -> tuple[DataFrame, int]:
     """Persist ``df`` and force it with one count; returns the frame and
     its row count (storage by context, see the module docstring)."""
     df = df.persist(
-        StorageLevel.MEMORY_AND_DISK if _BUILDING else StorageLevel.MEMORY_ONLY
+        StorageLevel.MEMORY_AND_DISK_DESER if _BUILDING else StorageLevel.MEMORY_ONLY
     )
     return df, df.count()
 

@@ -178,11 +178,13 @@ def test_pin_storage_follows_the_memo_context(spark, tmp_path):
         raise RuntimeError("build failed")
 
     try:
-        assert outer(spark, str(tmp_path)) == (StorageLevel.MEMORY_AND_DISK,) * 2
+        # Spark's MEMORY_AND_DISK is deserialized; PySpark names it _DESER
+        in_build = StorageLevel.MEMORY_AND_DISK_DESER
+        assert outer(spark, str(tmp_path)) == (in_build,) * 2
         assert pinned(1204) == StorageLevel.MEMORY_ONLY
         with pytest.raises(RuntimeError):
             broken(spark, str(tmp_path))
-        assert frames[-1].storageLevel == StorageLevel.MEMORY_AND_DISK
+        assert frames[-1].storageLevel == in_build
         assert session._BUILDING == 0
         assert pinned(1205) == StorageLevel.MEMORY_ONLY
     finally:
