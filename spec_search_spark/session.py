@@ -39,11 +39,11 @@ MEMORY_AND_DISK_DESER), because the artifact outlives the call, an
 evicted block should cost a disk read, not a recompute, and every
 later read of a serialized block would pay to deserialize it;
 elsewhere it is MEMORY_ONLY, so dropping a dead transient costs
-nothing. Spark's
-CacheManager keeps one entry per distinct plan, so every call that pins
-the same plan shares one entry, and transients live for the session:
-unpersisting an entry for an old handle would make every newer call
-that shares it pay the forcing job and then recompute anyway. A frame
+nothing. Spark's CacheManager keeps one entry per distinct plan, so
+every call that pins the same plan shares one entry, and transients
+live for the session: unpersisting an entry for an old handle would
+make every newer call that shares it pay the forcing job and then
+recompute anyway. A frame
 whose plan nests every round of a loop cuts its lineage with
 ``localCheckpoint(eager=True)`` instead; Spark's ContextCleaner drops
 those blocks once the frame is unreachable. ``catalog.load_table``
