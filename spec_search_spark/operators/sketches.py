@@ -598,10 +598,9 @@ def misra_gries_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the candidate and total broadcasts both read summ — the
     # corpus-sized sketch pass must run exactly once
     summ, _ = pin(toks.mapInPandas(mg_summaries, "tok string, np bigint"))
-    # pin the two TINY consumers (≤ k·n_partitions candidates, 1-row
-    # total) so the corpus-sized summary cache can be released before
-    # return — transient MEMORY_ONLY caches otherwise accumulate over a
-    # long bench session (ADVICE r7)
+    # summ is read only inside this call: checkpoint its two TINY
+    # consumers (≤ k·n_partitions candidates, 1-row total), then release
+    # the corpus-sized summary before return
     cand = (
         summ.filter(F.col("tok").isNotNull())
         .select("tok")

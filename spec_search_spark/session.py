@@ -31,20 +31,21 @@ and live in the single registry ``_MEMO``:
 Pins. A frame that several branches of one plan read (a self-join, a
 count that sizes the plan plus the joins that follow), or that later
 queries re-read, is pinned with :func:`pin`: persisted and forced by
-one ``count()``, which is returned too, so its upstream runs once. The
-storage level follows the context, not the caller: inside a
-:func:`session_memo` build, nested ones included, it is Spark's
-MEMORY_AND_DISK (deserialized, as ``Dataset.cache``; PySpark calls it
-MEMORY_AND_DISK_DESER), because the artifact outlives the call, an
-evicted block should cost a disk read, not a recompute, and every
-later read of a serialized block would pay to deserialize it;
-elsewhere it is MEMORY_ONLY, so dropping a dead transient costs
-nothing. Spark's CacheManager keeps one entry per distinct plan, so
-every call that pins the same plan shares one entry, and transients
-live for the session: unpersisting an entry for an old handle would
-make every newer call that shares it pay the forcing job and then
-recompute anyway. A frame
-whose plan nests every round of a loop cuts its lineage with
+one ``count()``, which is returned too, so its upstream runs once.
+Every pin is stored deserialized, so no read pays to deserialize it.
+Inside a :func:`session_memo` build, nested ones included, the level is
+MEMORY_AND_DISK (``Dataset.cache``'s): the artifact outlives the call,
+so an evicted block should cost a disk read, not a recompute.
+Elsewhere it is MEMORY_ONLY, so evicting a dead transient costs no disk
+write. Spark's CacheManager keeps one entry per distinct plan, and the
+first call to pin a plan sets its level: a memo build that pins a plan
+a transient pinned first keeps it MEMORY_ONLY. Every call that pins the
+same plan shares that entry, so transients live for the session:
+unpersisting an entry for an old handle would make every newer call
+that shares it pay the forcing job and then recompute anyway. A caller
+may still unpersist a pin once it has checkpointed every reader of it
+(``sketches.misra_gries_heavy_hitters``); a later call pins it anew. A
+frame whose plan nests every round of a loop cuts its lineage with
 ``localCheckpoint(eager=True)`` instead; Spark's ContextCleaner drops
 those blocks once the frame is unreachable. ``catalog.load_table``
 calls :func:`refresh_if_rewritten`, which refreshes the cached plans
@@ -248,13 +249,14 @@ def refresh_if_rewritten(spark: SparkSession, path: str) -> None:
 
 
 _BUILDING = 0  # session_memo builds on the stack
+_MEMORY_ONLY_DESER = StorageLevel(False, True, False, True)
 
 
 def pin(df: DataFrame) -> tuple[DataFrame, int]:
     """Persist ``df`` and force it with one count; returns the frame and
     its row count (storage by context, see the module docstring)."""
     df = df.persist(
-        StorageLevel.MEMORY_AND_DISK_DESER if _BUILDING else StorageLevel.MEMORY_ONLY
+        StorageLevel.MEMORY_AND_DISK_DESER if _BUILDING else _MEMORY_ONLY_DESER
     )
     return df, df.count()
 

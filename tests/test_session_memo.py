@@ -151,11 +151,16 @@ def test_rewritten_input_refreshes_cached_plans(spark, sf_dir, tmp_path):
 
 
 def test_pin_storage_follows_the_memo_context(spark, tmp_path):
+    """Pins are deserialized: MEMORY_AND_DISK inside a memo build, nested
+    ones included (Spark's level; PySpark names it _DESER), MEMORY_ONLY
+    outside one. The first pin of a plan sets its level."""
     from pyspark import StorageLevel
 
     from spec_search_spark import session
     from spec_search_spark.session import pin, session_memo
 
+    in_build = StorageLevel.MEMORY_AND_DISK_DESER
+    outside = StorageLevel(False, True, False, True)
     frames = []
 
     def pinned(n: int) -> StorageLevel:
@@ -177,18 +182,21 @@ def test_pin_storage_follows_the_memo_context(spark, tmp_path):
         pinned(1203)
         raise RuntimeError("build failed")
 
+    @session_memo
+    def shared(spark, sf_dir):
+        return pinned(1204)
+
     try:
-        # Spark's MEMORY_AND_DISK is deserialized; PySpark names it _DESER
-        in_build = StorageLevel.MEMORY_AND_DISK_DESER
         assert outer(spark, str(tmp_path)) == (in_build,) * 2
-        assert pinned(1204) == StorageLevel.MEMORY_ONLY
+        assert pinned(1204) == outside
+        assert shared(spark, str(tmp_path)) == outside
         with pytest.raises(RuntimeError):
             broken(spark, str(tmp_path))
         assert frames[-1].storageLevel == in_build
         assert session._BUILDING == 0
-        assert pinned(1205) == StorageLevel.MEMORY_ONLY
+        assert pinned(1205) == outside
     finally:
-        for build in (inner, outer, broken):
+        for build in (inner, outer, broken, shared):
             build.cache_clear()
         for df in frames:
             df.unpersist()
@@ -211,10 +219,16 @@ def test_repeated_calls_keep_their_pins_cached(spark, sf_dir, monkeypatch):
         return persist(self, *args, **kwargs)
 
     monkeypatch.setattr(cls, "persist", recording)
-    for call in range(1, 7):
-        skyline_customers(spark, sf_dir)
-        dropped = [i for i, df in enumerate(pinned) if df.storageLevel == StorageLevel.NONE]
-        assert pinned and not dropped, f"call {call}: pins {dropped} were unpersisted"
+    try:
+        for call in range(1, 7):
+            skyline_customers(spark, sf_dir)
+            dropped = [
+                i for i, df in enumerate(pinned) if df.storageLevel == StorageLevel.NONE
+            ]
+            assert pinned and not dropped, f"call {call}: pins {dropped} were unpersisted"
+    finally:
+        for df in pinned:
+            df.unpersist()
 
 
 def test_clear_memos_forces_a_rebuild(spark, sf_dir, tmp_path):
