@@ -4,8 +4,15 @@ ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is forced end-to-end with a noop write (full plan executes,
-nothing collected to the driver). A warmup query amortizes JVM/codegen
-startup so the numbers reflect steady-state throughput.
+nothing collected to the driver; `_time_slot`). A warmup (`_warm_up`)
+amortizes JVM/codegen startup so the numbers reflect steady-state
+throughput. bench_stream.py and tools/ time slots through the same two
+functions.
+
+`_ledger` is the one place the ratio and verdict maths live: deltas,
+raw and calibration-adjusted ratios, the regression lists and the
+normalized verdict. The FULL record and the min-merged EXCL record
+(`_min_merge`) each get every ledger field from one call to it.
 """
 
 from __future__ import annotations
@@ -248,7 +255,6 @@ HEADLINE = [
 ]
 
 
-
 def _calib_mean(v):
     """Mean of a calibration record: r9+ records store a [start, end]
     probe pair (machine drift within a run is visible); r8 and earlier
@@ -283,6 +289,114 @@ def _norm_verdict(cur: float, prev: float, ratio: float, slots: dict) -> str:
     )
 
 
+def _ledger(rec: dict, calib: float, prev_name, prev) -> dict:
+    """Every ledger field of bench record `rec` (its `queries`, `value`,
+    `sf` and optional `sweep_queries`), given the divisor `calib` (the
+    run's mean calibration-probe seconds) and the previous round's
+    record `prev`, named `prev_name`. Pure: the caller merges the result
+    into `rec`. FULL passes its 3-dp calibration mean, the min-merged
+    EXCL record the unrounded mean of its merged pair.
+
+    Calibration-NORMALIZED series (VERDICT r10 task 2): per-slot time ÷
+    the calibration-probe time is dimensionless across machines, so the
+    normalized total is the machine-independent headline, and a slot
+    whose normalized ratio vs the previous round exceeds 1.15 must get
+    a named cause in the ledger notes."""
+    queries = rec["queries"]
+    out = {
+        "queries_normalized": {n: round(t / calib, 2) for n, t in queries.items()},
+        "value_normalized_probes": round(rec["value"] / calib, 1),
+    }
+    if prev is None or prev.get("sf") != rec["sf"]:
+        return out
+    prev_q = prev.get("queries", {})
+    out["prev"] = prev_name
+    out["prev_value"] = prev.get("value")
+    out["deltas"] = {
+        n: round(t - prev_q[n], 3) for n, t in queries.items() if n in prev_q
+    }
+    prev_calib = prev.get("calibration_shuffle_agg_1m_sec")
+    if not prev_calib:
+        return out
+    # Divide the raw cross-round ratio by the machine-speed ratio on the
+    # fixed microbench, so host-VM drift cancels (VERDICT r3 #6). The
+    # microbench itself jitters across rounds (r3 0.432s vs r4 0.238s on
+    # flat raw timings), so a FLAG requires BOTH the raw and the
+    # adjusted ratio above threshold — either alone is machine noise in
+    # one direction or the other; the record keeps both series.
+    machine = calib / _calib_mean(prev_calib)
+    out["calibration_prev_sec"] = prev_calib
+    out["machine_ratio"] = round(machine, 3)
+    raw = {
+        n: round(t / prev_q[n], 3)
+        for n, t in queries.items()
+        if n in prev_q and prev_q[n] > 0
+    }
+    # the adjusted ratio IS the normalized per-slot ratio:
+    # (t/calib) / (t_prev/calib_prev) = raw / machine_ratio
+    adj = {n: round(r / machine, 3) for n, r in raw.items()}
+    by_adj = sorted(adj.items(), key=lambda kv: -kv[1])
+    out["deltas_raw_ratio"] = raw
+    out["deltas_adjusted_ratio"] = adj
+    out["regressions_raw_and_adjusted_gt_1_3"] = {
+        n: max(raw[n], a) for n, a in by_adj if a > 1.3 and raw[n] > 1.3
+    }
+    out["normalized_regressions_gt_1_15"] = {n: a for n, a in by_adj if a > 1.15}
+    prev_norm = round(prev.get("value", 0) / _calib_mean(prev_calib), 1)
+    norm = out["value_normalized_probes"]
+    norm_ratio = round(norm / prev_norm, 3)
+    out["normalized_vs_prev"] = {
+        "prev": prev_name,
+        "prev_value_normalized_probes": prev_norm,
+        "value_normalized_probes": norm,
+        "ratio": norm_ratio,
+        "verdict": _norm_verdict(
+            norm, prev_norm, norm_ratio, out["normalized_regressions_gt_1_15"]
+        ),
+    }
+    # sweep slots diff against the previous sweep record (first round
+    # with a sweep has no baseline; min-of-2 noise means the same
+    # both-axes gate applies)
+    prev_sweep = prev.get("sweep_queries", {})
+    if rec.get("sweep_queries") and prev_sweep:
+        sraw = {
+            n: round(t / prev_sweep[n], 3)
+            for n, t in rec["sweep_queries"].items()
+            if n in prev_sweep and prev_sweep[n] > 0
+        }
+        out["sweep_regressions_raw_and_adjusted_gt_1_3"] = {
+            n: round(r / machine, 3)
+            for n, r in sorted(sraw.items(), key=lambda kv: -kv[1])
+            if r > 1.3 and r / machine > 1.3
+        }
+    return out
+
+
+def _min_merge(cur_t, cur_s, old_t, old_s):
+    """Per-slot minimum of two runs' timings `cur_t` and `old_t`, each
+    kept with its own spread. The union of slots carries through (ADVICE
+    r7: a slot present only in the old record — e.g. the current run
+    skipped it — must not silently drop); a tie keeps the old minimum."""
+    merged, mspread = {}, {}
+    for n in set(old_t) | set(cur_t):
+        if n not in cur_t or (n in old_t and old_t[n] <= cur_t[n]):
+            merged[n] = old_t[n]
+            mspread[n] = old_s.get(n, cur_s.get(n, 0.0))
+        else:
+            merged[n] = cur_t[n]
+            mspread[n] = cur_s[n]
+    return merged, mspread
+
+
+def _sf_value(sf_dir: str):
+    """Scale factor named by a testdata dir (`.../sf0.1` → 0.1)."""
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    try:
+        return float(sf)
+    except ValueError:
+        return sf
+
+
 def _silence_bounded_window_warnings(spark) -> None:
     """Mute the per-execution `WindowExec: No Partition Defined`
     warning in bench logs (r9 verdict task 4): every such site in the
@@ -298,6 +412,27 @@ def _silence_bounded_window_warnings(spark) -> None:
     )
 
 
+def _noop_write(df) -> None:
+    """Force the full plan end to end; nothing is collected."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _warm_up(qs, spark, sf_dir) -> None:
+    """Exercise each engine path once (parquet scan + shuffle agg;
+    python-worker pool + Arrow; vector-distance expression family) so
+    timings measure steady-state throughput, not one-time
+    JVM/codegen/worker-pool initialization."""
+    for name in ("q1_pricing_summary", "knn_exact", "token_stats"):
+        _noop_write(qs[name](spark, sf_dir))
+
+
+def _time_slot(qs, spark, sf_dir, name, force=_noop_write) -> float:
+    """Wall seconds to build registry slot `name` and `force` it."""
+    t0 = time.time()
+    force(qs[name](spark, sf_dir))
+    return time.time() - t0
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from spec_search_spark.operators import all_queries
@@ -305,14 +440,7 @@ def main() -> None:
     qs, _ = all_queries()
     spark = get_spark("bench")
     _silence_bounded_window_warnings(spark)
-
-    # warmup: exercise each engine path once (parquet scan + shuffle
-    # agg; python-worker pool + Arrow; vector-distance expression
-    # family) so timings measure steady-state throughput, not one-time
-    # JVM/codegen/worker-pool initialization.
-    qs["q1_pricing_summary"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    qs["knn_exact"](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    qs["token_stats"](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    _warm_up(qs, spark, sf_dir)
 
     # Machine calibration: a fixed shuffle-agg microbench (1M rows,
     # groupBy 1000 keys) so per-round numbers can be normalized across
@@ -323,16 +451,11 @@ def main() -> None:
     def _calib() -> float:
         df = spark.range(1_000_000).selectExpr("id % 1000 as k", "id")
         t0 = time.time()
-        df.groupBy("k").count().write.format("noop").mode("overwrite").save()
+        _noop_write(df.groupBy("k").count())
         return time.time() - t0
 
     _calib()  # warm
     calib_start = round(min(_calib() for _ in range(3)), 3)
-
-    def run(name: str) -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
 
     # min of N runs (VERDICT r4 #7: n >= 5, spread recorded): the VM
     # shows ~3x wall-clock jitter between identical executions; the
@@ -362,7 +485,7 @@ def main() -> None:
             }
 
     for name in HEADLINE:
-        samples = [run(name) for _ in range(n_runs)]
+        samples = [_time_slot(qs, spark, sf_dir, name) for _ in range(n_runs)]
         timings[name] = round(min(samples), 3)
         spreads[name] = round(max(samples) - min(samples), 3)
         _note_cold(name, samples)
@@ -388,7 +511,7 @@ def main() -> None:
     sweep_spreads: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_SWEEP", "1") != "0":
         for name in sweep_names:
-            samples = [run(name) for _ in range(sweep_runs)]
+            samples = [_time_slot(qs, spark, sf_dir, name) for _ in range(sweep_runs)]
             sweep_timings[name] = round(min(samples), 3)
             sweep_spreads[name] = round(max(samples) - min(samples), 3)
             _note_cold(name, samples)
@@ -398,11 +521,7 @@ def main() -> None:
     calib_pair = [calib_start, calib_end]
     calib = round((calib_start + calib_end) / 2, 3)
 
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val = float(sf)
-    except ValueError:
-        sf_val = sf
+    sf_val = _sf_value(sf_dir)
     full = {
         "metric": "headline_suite_total_steady_state",
         "value": round(sum(timings.values()), 3),
@@ -413,19 +532,10 @@ def main() -> None:
         "calibration_mean_sec": calib,
         "run_policy": f"min_of_{n_runs}_exclusive_machine",
         "spread_max_minus_min": spreads,
+        # filled by _ledger below; listed here to keep their place
+        "queries_normalized": None,
+        "value_normalized_probes": None,
     }
-    # Calibration-NORMALIZED series (VERDICT r10 task 2): per-slot
-    # time ÷ the run's mean calibration-probe time (unit: "calibration
-    # probes", dimensionless across machines). The r10 driver headline
-    # rose +29% on a probe that was itself 1.8× slower — two rounds of
-    # narrating "it was the machine" becomes mechanical here: the
-    # normalized total is the machine-independent headline, and a slot
-    # whose NORMALIZED ratio vs the previous round exceeds 1.15 must
-    # get a named cause in the ledger notes.
-    full["queries_normalized"] = {
-        n: round(t / calib, 2) for n, t in timings.items()
-    }
-    full["value_normalized_probes"] = round(full["value"] / calib, 1)
     if sweep_timings:
         full["sweep_queries"] = sweep_timings
         full["sweep_value"] = round(sum(sweep_timings.values()), 3)
@@ -438,81 +548,7 @@ def main() -> None:
         # engine-path initialization, priced in BOTH regimes
         full["cold_vs_warm_outliers"] = cold_warm
     prev_name, prev, this_round = _previous_round()
-    regressions: dict[str, float] = {}
-    if prev is not None and prev.get("sf") == sf_val:
-        prev_q = prev.get("queries", {})
-        full["prev"] = prev_name
-        full["prev_value"] = prev.get("value")
-        full["deltas"] = {
-            name: round(t - prev_q[name], 3)
-            for name, t in timings.items()
-            if name in prev_q
-        }
-        # Calibration-normalized regression ratios: divide the raw
-        # cross-round ratio by the machine-speed ratio measured on the
-        # fixed microbench, so host-VM drift cancels (VERDICT r3 #6).
-        # The microbench itself jitters across rounds (r3 0.432s vs r4
-        # 0.238s on flat raw timings), so a FLAG requires BOTH the raw
-        # and the adjusted ratio above threshold — either alone is
-        # machine noise in one direction or the other; the full ledger
-        # keeps both series for inspection.
-        prev_calib = prev.get("calibration_shuffle_agg_1m_sec")
-        if prev_calib:
-            machine = calib / _calib_mean(prev_calib)
-            full["calibration_prev_sec"] = prev_calib
-            full["machine_ratio"] = round(machine, 3)
-            raw = {
-                name: round(t / prev_q[name], 3)
-                for name, t in timings.items()
-                if name in prev_q and prev_q[name] > 0
-            }
-            adj = {n: round(r / machine, 3) for n, r in raw.items()}
-            full["deltas_raw_ratio"] = raw
-            full["deltas_adjusted_ratio"] = adj
-            regressions = {
-                n: max(raw[n], a)
-                for n, a in sorted(adj.items(), key=lambda kv: -kv[1])
-                if a > 1.3 and raw[n] > 1.3
-            }
-            full["regressions_raw_and_adjusted_gt_1_3"] = regressions
-            # normalized-vs-previous one-line verdict + the >15%
-            # normalized-slot list (VERDICT r10 task 2). The adjusted
-            # ratio IS the normalized per-slot ratio:
-            # (t/calib) / (t_prev/calib_prev) = raw / machine_ratio.
-            prev_norm = round(prev.get("value", 0) / _calib_mean(prev_calib), 1)
-            norm_ratio = round(full["value_normalized_probes"] / prev_norm, 3)
-            full["normalized_regressions_gt_1_15"] = {
-                n: a
-                for n, a in sorted(adj.items(), key=lambda kv: -kv[1])
-                if a > 1.15
-            }
-            full["normalized_vs_prev"] = {
-                "prev": prev_name,
-                "prev_value_normalized_probes": prev_norm,
-                "value_normalized_probes": full["value_normalized_probes"],
-                "ratio": norm_ratio,
-                "verdict": _norm_verdict(
-                    full["value_normalized_probes"],
-                    prev_norm,
-                    norm_ratio,
-                    full["normalized_regressions_gt_1_15"],
-                ),
-            }
-            # sweep slots diff against the previous sweep record (first
-            # round with a sweep has no baseline; min-of-2 noise means
-            # the same both-axes gate applies)
-            prev_sweep = prev.get("sweep_queries", {})
-            if sweep_timings and prev_sweep:
-                sraw = {
-                    n: round(t / prev_sweep[n], 3)
-                    for n, t in sweep_timings.items()
-                    if n in prev_sweep and prev_sweep[n] > 0
-                }
-                full["sweep_regressions_raw_and_adjusted_gt_1_3"] = {
-                    n: round(r / machine, 3)
-                    for n, r in sorted(sraw.items(), key=lambda kv: -kv[1])
-                    if r > 1.3 and r / machine > 1.3
-                }
+    full.update(_ledger(full, calib, prev_name, prev))
 
     # Full record to a file (the driver's stdout capture keeps only the
     # last 2000 chars — r3's line overflowed it); stdout stays compact.
@@ -547,23 +583,8 @@ def main() -> None:
         except (OSError, json.JSONDecodeError):
             old = None
         if old and old.get("queries"):
-            # union of old and current slots (ADVICE r7: a slot present
-            # only in the old exclusive record — e.g. the current run
-            # skipped it — must carry through, not silently drop)
-            def _min_merge(cur_t, cur_s, old_t, old_s):
-                merged, mspread = {}, {}
-                for n in set(old_t) | set(cur_t):
-                    if n not in cur_t or (n in old_t and old_t[n] <= cur_t[n]):
-                        merged[n] = old_t[n]
-                        mspread[n] = old_s.get(n, cur_s.get(n, 0.0))
-                    else:
-                        merged[n] = cur_t[n]
-                        mspread[n] = cur_s[n]
-                return merged, mspread
-
-            old_q = old["queries"]
             merged, mspread = _min_merge(
-                timings, spreads, old_q, old.get("spread_max_minus_min", {})
+                timings, spreads, old["queries"], old.get("spread_max_minus_min", {})
             )
             excl["queries"] = merged
             excl["spread_max_minus_min"] = mspread
@@ -595,89 +616,12 @@ def main() -> None:
             ] + [calib_pair]
             if "notes" in old:
                 excl["notes"] = old["notes"]
-            # recompute the ledger ratios AND absolute deltas from the
-            # merged minima so the committed record is internally
-            # consistent (ADVICE r7: the copied current-run 'deltas'
-            # disagreed with the merged minima)
-            if prev is not None and prev.get("sf") == sf_val:
-                prev_q = prev.get("queries", {})
-                excl["deltas"] = {
-                    n: round(t - prev_q[n], 3)
-                    for n, t in merged.items()
-                    if n in prev_q
-                }
-                prev_calib = prev.get("calibration_shuffle_agg_1m_sec")
-                if prev_calib:
-                    machine = (
-                        _calib_mean(excl["calibration_shuffle_agg_1m_sec"])
-                        / _calib_mean(prev_calib)
-                    )
-                    excl["machine_ratio"] = round(machine, 3)
-                    raw = {
-                        n: round(t / prev_q[n], 3)
-                        for n, t in merged.items()
-                        if n in prev_q and prev_q[n] > 0
-                    }
-                    adj = {
-                        n: round(r / machine, 3) for n, r in raw.items()
-                    }
-                    excl["deltas_raw_ratio"] = raw
-                    excl["deltas_adjusted_ratio"] = adj
-                    excl_calib = _calib_mean(
-                        excl["calibration_shuffle_agg_1m_sec"]
-                    )
-                    excl["queries_normalized"] = {
-                        n: round(t / excl_calib, 2) for n, t in merged.items()
-                    }
-                    excl["value_normalized_probes"] = round(
-                        excl["value"] / excl_calib, 1
-                    )
-                    prev_norm = round(
-                        prev.get("value", 0) / _calib_mean(prev_calib), 1
-                    )
-                    norm_ratio = round(
-                        excl["value_normalized_probes"] / prev_norm, 3
-                    )
-                    excl["normalized_regressions_gt_1_15"] = {
-                        n: a
-                        for n, a in sorted(adj.items(), key=lambda kv: -kv[1])
-                        if a > 1.15
-                    }
-                    excl["normalized_vs_prev"] = {
-                        "prev": prev_name,
-                        "prev_value_normalized_probes": prev_norm,
-                        "value_normalized_probes": excl[
-                            "value_normalized_probes"
-                        ],
-                        "ratio": norm_ratio,
-                        "verdict": _norm_verdict(
-                            excl["value_normalized_probes"],
-                            prev_norm,
-                            norm_ratio,
-                            excl["normalized_regressions_gt_1_15"],
-                        ),
-                    }
-                    excl["regressions_raw_and_adjusted_gt_1_3"] = {
-                        n: max(raw[n], a)
-                        for n, a in sorted(
-                            adj.items(), key=lambda kv: -kv[1]
-                        )
-                        if a > 1.3 and raw[n] > 1.3
-                    }
-                    prev_sweep = prev.get("sweep_queries", {})
-                    if excl.get("sweep_queries") and prev_sweep:
-                        sraw = {
-                            n: round(t / prev_sweep[n], 3)
-                            for n, t in excl["sweep_queries"].items()
-                            if n in prev_sweep and prev_sweep[n] > 0
-                        }
-                        excl["sweep_regressions_raw_and_adjusted_gt_1_3"] = {
-                            n: round(r / machine, 3)
-                            for n, r in sorted(
-                                sraw.items(), key=lambda kv: -kv[1]
-                            )
-                            if r > 1.3 and r / machine > 1.3
-                        }
+            # every ledger field from the merged minima, so the
+            # committed record is internally consistent (ADVICE r7: the
+            # copied current-run 'deltas' disagreed with the merged minima)
+            excl.update(_ledger(
+                excl, _calib_mean(excl["calibration_shuffle_agg_1m_sec"]), prev_name, prev
+            ))
         with open(excl_path, "w") as fh:
             json.dump(excl, fh, indent=1)
 
@@ -697,6 +641,7 @@ def main() -> None:
     if sweep_timings:
         out["sweep_value"] = full["sweep_value"]
         out["sweep_n"] = len(sweep_timings)
+    regressions = full.get("regressions_raw_and_adjusted_gt_1_3")
     if regressions:
         out["regressions_raw_and_adjusted_gt_1_3"] = dict(list(regressions.items())[:5])
     line = json.dumps(out, separators=(",", ":"))
@@ -743,16 +688,25 @@ def _previous_round():
     if not rounds:
         return None, None, 1
     last = max(rounds)
-    for name in (f"BENCH_EXCL_r{last:02d}.json", f"BENCH_r{last:02d}.json",
-                 f"BENCH_FULL_r{last:02d}.json"):
+
+    def _load(name):
         try:
             with open(os.path.join(here, name)) as fh:
                 data = json.load(fh)
         except (OSError, json.JSONDecodeError):
-            continue
+            return None
         # the driver records {"parsed": <our line>, ...wrapper fields}
-        rec = data.get("parsed", data)
-        if rec is not None and rec.get("queries"):
+        return data.get("parsed", data)
+
+    for name in (f"BENCH_EXCL_r{last:02d}.json", f"BENCH_r{last:02d}.json",
+                 f"BENCH_FULL_r{last:02d}.json"):
+        rec = _load(name)
+        if rec and rec.get("queries_truncated_to_top10_slowest"):
+            # the driver keeps our stdout line, cut to its 10 slowest
+            # slots: diff against the full record that line names
+            name = rec["full_record"]
+            rec = _load(name)
+        if rec and rec.get("queries"):
             return name, rec, last + 1
     return None, None, last + 1
 

@@ -30,10 +30,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import (  # noqa: E402
+    _min_merge,
+    _noop_write,
+    _previous_round,
+    _sf_value,
+    _silence_bounded_window_warnings,
+    _time_slot,
+)
 from spec_search_spark.session import get_spark  # noqa: E402
 
 
@@ -44,37 +51,27 @@ def main() -> None:
     qs, _ = all_queries()
     stream_names = sorted(n for n in qs if n.startswith("stream_"))
     spark = get_spark("bench_stream")
-    from bench import _silence_bounded_window_warnings
-
     _silence_bounded_window_warnings(spark)
 
     # warmup: one batch scan (parquet/codegen init) + one full drain
     # (streaming engine + checkpoint + memory-sink init).
-    qs["hourly_event_rollup"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    _noop_write(qs["hourly_event_rollup"](spark, sf_dir))
     qs["stream_hourly_counts"](spark, sf_dir).count()
-
-    def run(name: str) -> float:
-        t0 = time.time()
-        qs[name](spark, sf_dir).count()
-        return time.time() - t0
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     all_samples: dict[str, list[float]] = {}
     for name in stream_names:
-        samples = [round(run(name), 3) for _ in range(n_runs)]
+        samples = [
+            round(_time_slot(qs, spark, sf_dir, name, force=lambda df: df.count()), 3)
+            for _ in range(n_runs)
+        ]
         all_samples[name] = samples
         timings[name] = min(samples)
         spreads[name] = round(max(samples) - min(samples), 3)
 
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    try:
-        sf_val: float | str = float(sf)
-    except ValueError:
-        sf_val = sf
+    sf_val = _sf_value(sf_dir)
     record = {
         "metric": "streaming_drain_total",
         "value": round(sum(timings.values()), 3),
@@ -91,8 +88,6 @@ def main() -> None:
     }
     # file-backed beside BENCH_FULL (same round inference as bench.py):
     # the ledger the next round diffs for twin state-size regressions
-    from bench import _previous_round
-
     _, _, this_round = _previous_round()
     here = os.path.dirname(os.path.abspath(__file__))
     if sf_val == 0.1:
@@ -111,17 +106,12 @@ def main() -> None:
     except (OSError, json.JSONDecodeError):
         old = None
     if old and old.get("queries"):
-        old_q, old_s = old["queries"], old.get("spread_max_minus_min", {})
+        merged, mspread = _min_merge(
+            timings, spreads, old["queries"], old.get("spread_max_minus_min", {})
+        )
+        # the sample series CONCATENATES across runs (full history)
         old_samples = old.get("samples", {})
-        merged, mspread = {}, {}
-        for n in set(old_q) | set(timings):
-            if n not in timings or (n in old_q and old_q[n] <= timings[n]):
-                merged[n] = old_q[n]
-                mspread[n] = old_s.get(n, spreads.get(n, 0.0))
-            else:
-                merged[n] = timings[n]
-                mspread[n] = spreads[n]
-            # the sample series CONCATENATES across runs (full history)
+        for n in merged:
             record["samples"][n] = old_samples.get(n, []) + all_samples.get(n, [])
         record["queries"] = merged
         record["spread_max_minus_min"] = mspread

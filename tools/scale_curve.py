@@ -21,7 +21,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -63,6 +62,7 @@ SFS = [
 
 
 def main() -> int:
+    from bench import _time_slot, _warm_up
     from spec_search_spark.operators import all_queries
     from spec_search_spark.session import get_spark
 
@@ -80,9 +80,7 @@ def main() -> int:
 
     qs, _ = all_queries()
     spark = get_spark("scale_curve")
-    # engine-path warmup (the bench.py trio)
-    for w in ("q1_pricing_summary", "knn_exact", "token_stats"):
-        qs[w](spark, SFS[0][1]).write.format("noop").mode("overwrite").save()
+    _warm_up(qs, spark, SFS[0][1])
 
     results: dict[str, dict] = {}
     for name in queries:
@@ -91,14 +89,8 @@ def main() -> int:
         failed = False
         for sf, sf_dir in SFS:
             try:
-                t0 = time.time()
-                qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                cold[str(sf)] = round(time.time() - t0, 3)
-                warm = []
-                for _ in range(2):
-                    t0 = time.time()
-                    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-                    warm.append(time.time() - t0)
+                cold[str(sf)] = round(_time_slot(qs, spark, sf_dir, name), 3)
+                warm = [_time_slot(qs, spark, sf_dir, name) for _ in range(2)]
                 per_sf[str(sf)] = round(min(warm), 3)
             except Exception as exc:  # noqa: BLE001 — record, keep probing
                 # a single (query, sf) failure (e.g. driver-heap OOM at

@@ -11,6 +11,12 @@ first-run (cold) time, and the min / median process-tree CPU seconds
 steadier figure on a shared host, where wall time also counts the
 cycles other tenants take. With --explain, writes <slot>.txt containing
 df.explain("formatted") for each slot (the plans/r11 evidence files).
+
+Slots run in the order given, in one process, and a slot's CPU depends
+on its position: the JIT is still warming through the first slots of a
+list, which read high. Compare a slot across checkouts only at the same
+position of the same slot list. An unknown slot name would shift every
+later slot, so any unknown name exits with code 2 before Spark starts.
 """
 
 from __future__ import annotations
@@ -19,15 +25,15 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _silence_bounded_window_warnings, _time_slot, _warm_up  # noqa: E402
 from perfbench.spans import tree_cpu_s  # noqa: E402
 from spec_search_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
+def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("slots", nargs="+")
     ap.add_argument("-n", type=int, default=5)
@@ -40,21 +46,17 @@ def main() -> None:
     from spec_search_spark.operators import all_queries
 
     qs, _ = all_queries()
+    unknown = [n for n in args.slots if n not in qs]
+    if unknown:
+        print(f"unknown slot: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark("slot_time")
-    jvm = spark._jvm
-    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-        "org.apache.spark.sql.execution.window.WindowExec",
-        jvm.org.apache.logging.log4j.Level.ERROR,
-    )
+    _silence_bounded_window_warnings(spark)
     if not args.no_warmup:
-        for w in ("q1_pricing_summary", "knn_exact", "token_stats"):
-            qs[w](spark, args.sf).write.format("noop").mode("overwrite").save()
+        _warm_up(qs, spark, args.sf)
 
     results = {}
     for name in args.slots:
-        if name not in qs:
-            print(f"!! unknown slot: {name}")
-            continue
         spark.sparkContext.setJobDescription(f"slot:{name}")
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
@@ -67,9 +69,7 @@ def main() -> None:
         samples, cpu = [], []
         for _ in range(args.n):
             c0 = tree_cpu_s()
-            t0 = time.time()
-            qs[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
+            samples.append(_time_slot(qs, spark, args.sf, name))
             cpu.append(tree_cpu_s() - c0)
         s, c = sorted(samples), sorted(cpu)
         results[name] = {
@@ -90,7 +90,8 @@ def main() -> None:
     if args.json:
         with open(args.json, "w") as fh:
             json.dump(results, fh, indent=1)
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

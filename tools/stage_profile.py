@@ -16,7 +16,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -37,11 +36,13 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from bench import _time_slot, _warm_up
     from spec_search_spark.session import tune
 
     spark = (
         SparkSession.builder.appName("stage_profile")
-        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        # get_spark's parallelism, so the stages are the ones bench runs
+        .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
@@ -57,14 +58,11 @@ def main() -> None:
 
     qs, _ = all_queries()
     if not args.no_warmup:
-        for w in ("q1_pricing_summary", "knn_exact", "token_stats"):
-            qs[w](spark, args.sf).write.format("noop").mode("overwrite").save()
+        _warm_up(qs, spark, args.sf)
 
     for i in range(args.runs):
         spark.sparkContext.setJobDescription(f"RUN{i}:{args.slot}")
-        t0 = time.time()
-        qs[args.slot](spark, args.sf).write.format("noop").mode("overwrite").save()
-        print(f"run {i}: {time.time() - t0:.2f}s")
+        print(f"run {i}: {_time_slot(qs, spark, args.sf, args.slot):.2f}s")
     spark.sparkContext.setJobDescription(None)
     spark.stop()
 
